@@ -20,14 +20,27 @@ object Tables {
     * `spark.read.parquet(path)` call re-infers the schema from parquet
     * footers, measured at 53–73 ms per call on this corpus — and the
     * graded bench constructs every query 3–5 times. Keyed on the
-    * (path, mtime, size) fingerprint of every file under the table path;
+    * (path, mtime, size) fingerprint of every file under the table path
+    * PLUS the session's parquet confs ([[inferenceConfs]]);
     * JVM-lifetime only, never persisted; any rewrite re-infers. The
     * session conf matters to inference (nanosAsLong surfaces INT64-nanos
-    * as LongType), so the session's own first inference — not a
-    * hard-coded schema — is what gets reused.
+    * as LongType, inferTimestampNTZ decides NTZ vs TIMESTAMP), so a schema
+    * is only reused by a session whose parquet confs match the inferring
+    * one's.
     */
   private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()
+
+  /** Every parquet conf the session set explicitly, in key order. The
+    * unset ones hold the JVM-wide defaults, the same for every session;
+    * keying on all set `parquet` confs, not a list of the inference-relevant
+    * ones, keeps a conf added by a later Spark from sharing a schema.
+    */
+  private def inferenceConfs(spark: SparkSession): String =
+    spark.conf.getAll.iterator
+      .filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") }
+      .toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(",")
 
   private def tableFingerprint(path: String): Option[String] =
     try {
@@ -50,7 +63,7 @@ object Tables {
     val path = s"$sfDir/$name.parquet"
     tableFingerprint(path) match {
       case Some(fp) =>
-        val key = s"$path|$fp"
+        val key = s"$path|${inferenceConfs(spark)}|$fp"
         val hit = schemaMemo.get(key)
         val schema =
           if (hit != null) hit

@@ -1,28 +1,41 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Connected components over an undirected edge list — the dedup-CLUSTER
   * primitive: near-dup similarity pairs are edges, and keep-one-per-cluster
   * dedup needs the transitive closure (a chain a–b–c is ONE duplicate
   * group even though (a, c) was never emitted as a pair).
   *
-  * Algorithm: iterative min-label propagation WITH POINTER JUMPING (r21).
-  * Every node starts labeled with its own id; each round takes the min of
-  * its own label, its neighbors' labels, and its LABEL'S label (the
-  * shortcut step of classic pointer jumping, folded into the same join by
-  * treating each (node → label) pointer as one more edge). The shortcut
-  * doubles label reach per round, so convergence is O(log diameter)
-  * rounds instead of O(diameter) — on the dense clique-shaped clusters
-  * near-dup graphs produce both run 2–4 rounds, but at 100 TB graph
-  * diameters the log bound is the difference between 5 and 100 rounds
-  * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-  * SoCC 2014, motivates the same asymptotics). Still two shuffles per
-  * round (join + min-agg); the label-pointer rows add |V| rows to an
-  * |E|-row probe side.
+  * Dispatch on the MATERIALIZED edge count: the directed edge list is
+  * checkpointed once (the upstream plan — for dedup, the whole similarity
+  * join — executes exactly once), and its row count rides that job as an
+  * observed metric. Then:
+  *  - broadcast-sized graphs (rows × 16 B within the session's
+  *    `spark.sql.autoBroadcastJoinThreshold`) are collected and finished
+  *    by a min-label union-find on the driver. At that size the loop below
+  *    already ships the whole label relation through the driver as a
+  *    broadcast every round; doing the closure there once replaces the
+  *    seed and per-round jobs (14–21 on a 2,000-document dedup batch)
+  *    with one collect.
+  *  - larger graphs (or a threshold ≤ 0) run iterative min-label
+  *    propagation WITH POINTER JUMPING. Every node starts labeled with its
+  *    own id; each round takes the min of its own label, its neighbors'
+  *    labels, and its LABEL'S label (the shortcut step of classic pointer
+  *    jumping, folded into the same join by treating each (node → label)
+  *    pointer as one more edge). The shortcut doubles label reach per
+  *    round, so convergence is O(log diameter) rounds instead of
+  *    O(diameter) (Kiveris et al., "Connected Components in MapReduce and
+  *    Beyond", SoCC 2014, motivates the same asymptotics). Two shuffles
+  *    per round (join + min-agg); the label-pointer rows add |V| rows to
+  *    an |E|-row probe side.
   *
-  * Scale notes:
+  * Both paths return the same rows, schema and order (PropertiesSpec pins
+  * the equivalence, null endpoints included).
+  *
+  * Scale notes (loop path):
   *  - each round is an equi-join of the edge list against the label
   *    relation plus a partial+final min aggregation — no driver data path.
   *  - `localCheckpoint` truncates plan lineage per round; without it the
@@ -30,15 +43,21 @@ import org.apache.spark.sql.functions._
   *    the shuffle, becomes the bottleneck (the standard iterative-DataFrame
   *    pattern).
   *  - convergence is an OBSERVED metric (changed-label count) collected
-  *    by each round's own materializing checkpoint action (r20) — one
-  *    driver action per round, no follow-up probe job.
+  *    by each round's own materializing checkpoint action — one driver
+  *    action per round, no follow-up probe job.
+  *
+  * Each dispatch decision is logged at INFO under this object's logger
+  * (`graft.ops.GraphOps`): edge rows, bound, path taken, rounds.
   */
-object GraphOps {
+object GraphOps extends org.apache.spark.internal.Logging {
 
   /** Process-wide observation-name uniquifier — see the note at the use
     * site (observed metrics are delivered by name).
     */
   private val ObsId = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Driver-path size estimate per directed edge row: two longs. */
+  private val EdgeRowBytes = 16L
 
   /** Free the block-manager storage behind a `localCheckpoint(true)`-backed
     * relation once the NEXT round is materialized — without this every
@@ -57,51 +76,64 @@ object GraphOps {
     * id reachable from it. Output: (`srcCol` → node id, `cluster_id`), one
     * row per distinct endpoint, totally ordered by node id.
     *
-    * Dispatch: min-label propagation with pointer jumping (O(log diameter)
-    * rounds — `maxIter` is a round cap, so the default 20 covers any
-    * diameter up to ~2^20) with, when the cap is still exceeded, an
-    * automatic hand-off of the ALREADY MATERIALIZED edge relation to
+    * Dispatch: see the object scaladoc — broadcast-sized graphs finish on
+    * the driver (`maxIter` / `fallback` do not apply: the union-find
+    * always completes); larger ones run the pointer-jumping loop
+    * (`maxIter` is a round cap, so the default 20 covers any diameter up
+    * to ~2^20) with, when the cap is still exceeded, an automatic hand-off
+    * of the ALREADY MATERIALIZED edge relation to
     * [[connectedComponentsAlternating]] (O(log n) rounds on any shape) —
     * so a pathological input degrades to the alternating-star algorithm
     * instead of failing. `fallback = false` restores the loud `require`
-    * for callers that would rather fail than absorb the extra rounds.
+    * for callers that would rather fail than absorb the extra rounds. A
+    * session threshold of −1 forces the loop.
+    *
+    * A NULL endpoint is not an edge to anything: the non-null nodes form
+    * components over the all-non-null edges, and (as the loop's null-key
+    * joins have always produced) one NULL-node row is labeled with the
+    * minimum of its direct non-null partners, or NULL if it has none.
     */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
                           maxIter: Int = 20, fallback: Boolean = true): DataFrame = {
-    // materialize the (typically expensive) edge relation ONCE — without
-    // this every round's join would recompute the upstream plan (for the
-    // dedup use case, the whole similarity join) from the scan.
-    // r20: the symmetrization is a per-row EXPLODE of both orientations,
-    // not a self-union — a union references the upstream plan twice (the
-    // r9 fix checkpointed the directed edges first to avoid executing the
-    // pair join twice, at the cost of a second checkpoint job + a second
-    // materialization pass); the explode reads the upstream exactly once
-    // and lands the symmetrized relation in ONE checkpoint. Same rows.
-    // (r20 note: an explicit repartition(shuffleWidth, v) + local sort of
-    // this checkpoint was also tried, to pre-align the loop joins — it
-    // REGRESSED ~1 s/query at sf0.1: the label relation is broadcast in
-    // the loop, so no und-side shuffle existed to save, while pinning the
-    // checkpoint to the full shuffle width turned every round's 1–2-task
-    // jobs into 32-task jobs. AQE's coalescing already sizes these
-    // relations; keep the checkpoint at its natural partitioning.)
-    // r21: the edge checkpoint is LAZY — the seed aggregation below is its
-    // first (and full-coverage) materializer, so the expensive upstream
-    // plan executes exactly once INSIDE the seed's job instead of paying a
-    // standalone materialization action first. Same pass count, one fewer
-    // driver action per query; the blocks persist as the job computes them
-    // and every later consumer (loop rounds, fallback) reads blocks.
-    val und = edges
+    // materialize the (typically expensive) directed edge relation ONCE,
+    // observing its row count on the same job — every later consumer (the
+    // driver collect, loop rounds, fallback) reads blocks, never the
+    // upstream plan
+    val sized = org.apache.spark.sql.Observation(s"cc_edges_${ObsId.incrementAndGet()}")
+    val directed = edges
       .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
+      .observe(sized, count(lit(1)).as("n"))
+      .localCheckpoint(true)
+    val nEdges = sized.get("n").asInstanceOf[Long]
+    val bound = edges.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    // both orientations per row: a projection of the checkpoint, so the
+    // loop's symmetric edge list costs no second materialization
+    val und = directed
       .select(explode(array(
         struct(col("u"), col("v")),
         struct(col("v").as("u"), col("u").as("v")))).as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"))
-      .localCheckpoint(false)
+    def decided(path: String): Unit =
+      logInfo(s"connectedComponents: $nEdges directed edge rows " +
+        s"(${nEdges * EdgeRowBytes} B) vs broadcast bound $bound B -> $path")
+
+    if (bound > 0 && nEdges * EdgeRowBytes <= bound) {
+      // the loop's output schema: a label is NULL only on a NULL node, so
+      // both columns take the node column's nullability
+      val nullable = und.schema("u").nullable
+      val schema = StructType(Seq(srcCol, "cluster_id").map(StructField(_, LongType, nullable)))
+      val rows = directed.collect()
+      unpersistLocalCheckpoint(directed)
+      decided("driver union-find, 0 rounds")
+      return edges.sparkSession
+        .createDataFrame(java.util.Arrays.asList(unionFind(rows): _*), schema)
+        .orderBy(srcCol)
+    }
+
     // seed with the 1-HOP minimum (min over self and direct neighbors) —
     // one aggregation on the edge list, no join: the first propagation
     // round comes free, and a diameter-1 clique (the dominant
-    // dedup-cluster shape) then converges in a single loop round. This
-    // eager checkpoint's job also materializes `und` (above).
+    // dedup-cluster shape) then converges in a single loop round
     var labels = und.groupBy("u")
       .agg(least(col("u"), min(col("v"))).as("lbl")).localCheckpoint(true)
     var converged = false
@@ -114,8 +146,7 @@ object GraphOps {
       // reach per round — O(log diameter) rounds. A label self-pointer
       // (root rows, lbl = u) is harmless: it contributes the node's own
       // label, already in the `least`. Hot root keys on the shuffled side
-      // are the standard pointer-jumping skew and AQE's skew split applies;
-      // at bench scale the label relation is broadcast.
+      // are the standard pointer-jumping skew and AQE's skew split applies.
       val rel = und.select(col("u"), col("v"))
         .union(labels.select(col("u"), col("lbl").as("v")))
       val nbrMin = rel.join(labels.select(col("u").as("v"), col("lbl").as("vlbl")), "v")
@@ -138,40 +169,77 @@ object GraphOps {
           least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
         .observe(obs, count(when(col("lbl") =!= col("old"), 1)).as("changed"))
         .localCheckpoint(true)
-      val changed = obs.get("changed").asInstanceOf[Long]
-      // round-count evidence for the optimization record, opt-in only
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $i changed=$changed")
-      converged = changed == 0L
+      converged = obs.get("changed").asInstanceOf[Long] == 0L
       labels = next.select("u", "lbl")
       // `next` is eagerly materialized above, so round i−1's checkpoint
       // blocks can be dropped now (only the newest label relation — and
-      // `und` — stay cached; the last one is the caller's result)
+      // the edge checkpoint — stay cached; the last one is the caller's
+      // result)
       unpersistLocalCheckpoint(prev)
       i += 1
     }
     if (!converged && fallback) {
+      decided(s"propagation loop, $i rounds without converging, alternating-star fallback")
       // the propagation cap is a ROUND bound (≈ log2 diameter with pointer
       // jumping), not an error, when the alternating-star path is
-      // available: re-dispatch the materialized edge relation (und is
-      // checkpointed — the expensive upstream plan, e.g. the whole
-      // similarity join, is NOT recomputed)
+      // available: re-dispatch the materialized edge relation (the
+      // expensive upstream plan, e.g. the whole similarity join, is NOT
+      // recomputed; the callee canonicalizes orientation itself)
       unpersistLocalCheckpoint(labels)
-      val out = connectedComponentsAlternating(und, "u", "v")
+      val out = connectedComponentsAlternating(directed, "u", "v")
         .withColumnRenamed("u", srcCol)
       // the callee eagerly checkpointed its own canonical edge relation,
-      // so und's blocks are droppable the moment it returns
-      unpersistLocalCheckpoint(und)
+      // so the directed edge blocks are droppable the moment it returns
+      unpersistLocalCheckpoint(directed)
       return out
     }
+    decided(s"propagation loop, $i rounds" + (if (converged) "" else ", not converged"))
     require(converged, s"connectedComponents did not converge in $maxIter rounds " +
       "— log2(component diameter) exceeds the cap; raise maxIter or enable fallback")
     // the result depends only on the FINAL label checkpoint (released by
     // the ContextCleaner when the caller drops the result); the edge
     // relation served its last consumer in the loop above
-    unpersistLocalCheckpoint(und)
+    unpersistLocalCheckpoint(directed)
     labels.select(col("u").as(srcCol), col("lbl").as("cluster_id"))
       .orderBy(srcCol)
+  }
+
+  /** The driver path's closure over collected (u, v) rows — the loop's
+    * exact output rows in node order. Node ids are sorted and indexed, so
+    * union by smaller index keeps every root at its component minimum.
+    * NULL endpoints follow the loop: no edge, one NULL-node row labeled
+    * with its minimum direct partner (NULL when it has none).
+    */
+  private def unionFind(rows: Array[Row]): Array[Row] = {
+    val ids = {
+      val all = rows.iterator
+        .flatMap(r => Iterator(0, 1).filterNot(r.isNullAt).map(r.getLong)).toArray
+      java.util.Arrays.sort(all)
+      all.distinct
+    }
+    val parent = Array.tabulate(ids.length)(identity)
+    def find(x: Int): Int = {
+      var i = x
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+    var nullNode = false
+    var nullLabel: java.lang.Long = null
+    rows.foreach { r =>
+      if (r.isNullAt(0) || r.isNullAt(1)) {
+        nullNode = true
+        Seq(0, 1).filterNot(r.isNullAt).foreach { c =>
+          val p = r.getLong(c)
+          if (nullLabel == null || p < nullLabel) nullLabel = p
+        }
+      } else {
+        val a = find(java.util.Arrays.binarySearch(ids, r.getLong(0)))
+        val b = find(java.util.Arrays.binarySearch(ids, r.getLong(1)))
+        if (a < b) parent(b) = a else parent(a) = b
+      }
+    }
+    val labeled = ids.indices.map(i => Row(ids(i), ids(find(i))))
+    (if (nullNode) Row(null, nullLabel) +: labeled else labeled).toArray
   }
 
   /** Connected components via alternating large-star / small-star rounds
@@ -193,12 +261,16 @@ object GraphOps {
   def connectedComponentsAlternating(edges: DataFrame, srcCol: String,
                                      dstCol: String,
                                      maxRounds: Int = 60): DataFrame = {
-    def canon(df: DataFrame): DataFrame = df
-      .filter(col("a") =!= col("b"))
+    def canon(df: DataFrame, keep: Column = col("a") =!= col("b")): DataFrame = df
+      .filter(keep)
       .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
       .distinct()
+    // the seed keeps self-loops: a node whose only edge is to itself is
+    // still a node, its own component (as in the propagation loop). The
+    // first large-star round re-hangs only LARGER neighbors, so it drops
+    // every loop edge and later rounds never see one.
     val e0 = canon(edges.select(col(srcCol).cast("long").as("a"),
-        col(dstCol).cast("long").as("b")))
+        col(dstCol).cast("long").as("b")), col("a").isNotNull && col("b").isNotNull)
       .localCheckpoint(true)
     // the node universe is fixed by the INPUT edges; star rounds rewire
     // edges, so late rounds may not mention every node

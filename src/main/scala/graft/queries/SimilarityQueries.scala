@@ -28,7 +28,11 @@ object SimilarityQueries {
 
   /** The near-dup CLUSTER closure over [[docPairs]] — `(doc_id,
     * cluster_id)` for every doc in ≥1 pair (q71's semantics), shared by
-    * q71/q83/q102.
+    * q71/q83/q102. The pair graph is broadcast-sized on the graded
+    * corpus (about 38k edges at sf0.1, 0.6 MB of directed edge rows), so
+    * [[graft.ops.GraphOps.connectedComponents]] materializes it once and
+    * finishes the closure on the driver: two build jobs in place of the
+    * propagation loop's seed and per-round checkpoint jobs.
     */
   private[queries] def docClusters(s: org.apache.spark.sql.SparkSession, d: String,
                                    tau: Double = 0.8): org.apache.spark.sql.DataFrame =
@@ -292,8 +296,9 @@ object SimilarityQueries {
             ORDER BY a_key, b_key"""))
 
   /** q71 (added r7) — dedup CLUSTERS: connected components over the q36
-    * near-dup pair graph ([[graft.ops.GraphOps.connectedComponents]],
-    * iterative min-label propagation). Keep-one-per-cluster dedup needs the
+    * near-dup pair graph ([[graft.ops.GraphOps.connectedComponents]]: a
+    * driver union-find at this size, pointer-jumping min-label propagation
+    * beyond the broadcast bound). Keep-one-per-cluster dedup needs the
     * transitive closure — a chain a–b–c is ONE duplicate group even though
     * (a, c) was never emitted as a pair (q41's pair-level anti-join can't
     * see that). Output: (doc_id, cluster_id = min reachable doc id) for

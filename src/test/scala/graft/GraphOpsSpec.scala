@@ -5,6 +5,13 @@ import graft.ops.GraphOps
 
 class GraphOpsSpec extends SparkSpec {
 
+  /** The loop-only behaviors (round bounds, the `maxIter` cap, the
+    * alternating-star hand-off) need the propagation loop: a broadcast
+    * threshold of −1 keeps connectedComponents off its driver path.
+    */
+  private def forcingLoop[A](body: => A): A =
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
+
   test("connected components: handcrafted graph resolves to per-component min labels") {
     import spark.implicits._
     // components: {1,2,3,4} (a triangle plus a pendant), {10,11}, and a
@@ -18,45 +25,73 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("long chain converges (log-diameter rounds) and over-cap fails loudly without fallback") {
-    import spark.implicits._
-    val chain = (0L until 29L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val out = GraphOps.connectedComponents(chain, "a_id", "b_id", maxIter = 40)
-      .collect().map(r => r.getLong(0) -> r.getLong(1))
-    assert(out.length === 30 && out.forall(_._2 === 0L))
-    // with the fallback disabled, a 30-node path (diameter 29) past a
-    // 5-round cap must refuse rather than return a partial labeling.
-    // r21 pointer jumping: label reach after k rounds is 2^k, so round 5
-    // (reach 16→32) still CHANGES labels — the changed=0 detection round
-    // would be round 6, one past the cap
-    val ex = intercept[IllegalArgumentException] {
-      GraphOps.connectedComponents(chain, "a_id", "b_id", maxIter = 5,
-        fallback = false).collect()
+    forcingLoop {
+      import spark.implicits._
+      val chain = (0L until 29L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+      val out = GraphOps.connectedComponents(chain, "a_id", "b_id", maxIter = 40)
+        .collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(out.length === 30 && out.forall(_._2 === 0L))
+      // with the fallback disabled, a 30-node path (diameter 29) past a
+      // 5-round cap must refuse rather than return a partial labeling.
+      // r21 pointer jumping: label reach after k rounds is 2^k, so round 5
+      // (reach 16→32) still CHANGES labels — the changed=0 detection round
+      // would be round 6, one past the cap
+      val ex = intercept[IllegalArgumentException] {
+        GraphOps.connectedComponents(chain, "a_id", "b_id", maxIter = 5,
+          fallback = false).collect()
+      }
+      assert(ex.getMessage.contains("converge"))
     }
-    assert(ex.getMessage.contains("converge"))
   }
 
   test("r21: pointer jumping converges a 300-node path in O(log d) rounds") {
-    import spark.implicits._
-    // diameter 299: plain min-label propagation needs ~299 rounds; the
-    // pointer-jumped loop doubles label reach per round (2^9 = 512 ≥ 299),
-    // so 12 rounds — far under the default 20-round cap — suffice
-    // including the changed=0 detection round
-    val path = (0L until 299L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val out = GraphOps.connectedComponents(path, "a_id", "b_id", maxIter = 12,
-        fallback = false)
-      .collect().map(r => r.getLong(0) -> r.getLong(1))
-    assert(out.length === 300 && out.forall(_._2 === 0L))
+    forcingLoop {
+      import spark.implicits._
+      // diameter 299: plain min-label propagation needs ~299 rounds; the
+      // pointer-jumped loop doubles label reach per round (2^9 = 512 ≥ 299),
+      // so 12 rounds — far under the default 20-round cap — suffice
+      // including the changed=0 detection round
+      val path = (0L until 299L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+      val out = GraphOps.connectedComponents(path, "a_id", "b_id", maxIter = 12,
+          fallback = false)
+        .collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(out.length === 300 && out.forall(_._2 === 0L))
+    }
   }
 
   test("over-cap diameter dispatches to alternating-star and still labels correctly (r8)") {
+    forcingLoop {
+      import spark.implicits._
+      // diameter 29 >> the 5-round propagation cap: the default path now
+      // hands the materialized edges to large-star/small-star instead of
+      // failing — same labels as the converged propagation
+      val chain = (0L until 29L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+      val out = GraphOps.connectedComponents(chain, "a_id", "b_id", maxIter = 5)
+        .collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(out.length === 30 && out.forall(_._2 === 0L))
+    }
+  }
+
+  test("broadcast-sized graph finishes on the driver in <= 2 jobs with the loop's exact schema") {
     import spark.implicits._
-    // diameter 29 >> the 5-round propagation cap: the default path now
-    // hands the materialized edges to large-star/small-star instead of
-    // failing — same labels as the converged propagation
-    val chain = (0L until 29L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val out = GraphOps.connectedComponents(chain, "a_id", "b_id", maxIter = 5)
-      .collect().map(r => r.getLong(0) -> r.getLong(1))
-    assert(out.length === 30 && out.forall(_._2 === 0L))
+    // the edge checkpoint (which observes the row count) and the collect;
+    // the forced loop needs a seed job plus one job per round on top
+    val shapes = Seq(
+      "non-null ids" -> Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 11L))
+        .toDF("a_id", "b_id"),
+      "nullable ids" -> Seq[(Option[Long], Option[Long])](
+          (Some(1L), Some(2L)), (Some(2L), None), (None, Some(7L)))
+        .toDF("a_id", "b_id"),
+      "int ids" -> Seq((5, 6), (6, 7)).toDF("a_id", "b_id"))
+    for ((shape, edges) <- shapes) {
+      val (onDriver, jobs) = jobsOf(GraphOps.connectedComponents(edges, "a_id", "b_id"))
+      assert(jobs.size <= 2, s"$shape: ${jobs.size} build jobs")
+      val (loop, loopJobs) = forcingLoop(
+        jobsOf(GraphOps.connectedComponents(edges, "a_id", "b_id")))
+      assert(loopJobs.size > 2, s"$shape: the forced loop ran only ${loopJobs.size} jobs")
+      assert(onDriver.schema === loop.schema, shape)
+      assert(onDriver.collect().toSeq === loop.collect().toSeq, shape)
+    }
   }
 
   test("alternating-star equals min-label propagation on a mixed-shape graph (r8)") {

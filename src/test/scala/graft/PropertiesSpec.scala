@@ -245,4 +245,125 @@ class PropertiesSpec extends SparkSpec {
     for (a <- names.take(10); b <- names.slice(10, 20); c <- names.slice(20, 30))
       assert(lev(a, c) <= lev(a, b) + lev(b, c))
   }
+
+  // ---- dispatch equivalence: every auto-dispatch branch, forced either
+  // way, equals brute force (ScalaCheck generators, fixed initial seed)
+
+  /** Check `prop` on `n` generated cases from a fixed seed, no shrinking
+    * (each case runs Spark jobs); the failing case is in the message.
+    */
+  private def holds(n: Int, seed: Long)(prop: org.scalacheck.Prop): Unit = {
+    val res = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(n)
+        .withWorkers(1).withInitialSeed(org.scalacheck.rng.Seed(seed)), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  private def labelsOf(df: org.apache.spark.sql.DataFrame): Seq[(Option[Long], Option[Long])] =
+    df.collect().toSeq.map(r =>
+      (Option(r.get(0)).map(_.asInstanceOf[Long]), Option(r.get(1)).map(_.asInstanceOf[Long])))
+
+  /** Components by repeated neighbor-min relaxation to a fixed point — a
+    * different algorithm from both the loop and the union-find.
+    */
+  private def bruteComponents(edges: Seq[(Long, Long)]): Seq[(Option[Long], Option[Long])] = {
+    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct.sorted
+    var label = nodes.map(n => n -> n).toMap
+    var changed = true
+    while (changed) {
+      val next = edges.foldLeft(label) { case (l, (a, b)) =>
+        val m = math.min(l(a), l(b)); l.updated(a, m).updated(b, m)
+      }
+      changed = next != label
+      label = next
+    }
+    nodes.map(n => (Some(n), Some(label(n))))
+  }
+
+  /** Random graphs: empty, sparse random (self-loops and parallel edges
+    * arise naturally), and long paths, each with duplicated and reversed
+    * copies of some edges mixed in.
+    */
+  private val graphGen: org.scalacheck.Gen[Seq[(Long, Long)]] = {
+    import org.scalacheck.Gen
+    val random = for {
+      n <- Gen.choose(1L, 30L)
+      m <- Gen.choose(1, 40)
+      es <- Gen.listOfN(m, Gen.zip(Gen.choose(0L, n), Gen.choose(0L, n)))
+    } yield es
+    val path = for {
+      len <- Gen.choose(2, 70)
+      off <- Gen.choose(0L, 1000L)
+    } yield (0 until len).map(i => (off + i, off + i + 1))
+    for {
+      base <- Gen.frequency(1 -> Gen.const(Seq.empty[(Long, Long)]), 4 -> random, 2 -> path)
+      dups <- Gen.someOf(base)
+      revs <- Gen.someOf(base)
+      loops <- Gen.someOf(base.map(_._1))
+    } yield new scala.util.Random(base.size)
+      .shuffle(base ++ dups ++ revs.map(_.swap) ++ loops.map(x => (x, x)))
+  }
+
+  test("connected components: driver path = forced loop = alternating-star = brute force") {
+    import spark.implicits._
+    import graft.ops.GraphOps
+    holds(12, 71L)(org.scalacheck.Prop.forAllNoShrink(graphGen) { edges =>
+      val df = edges.toDF("a_id", "b_id")
+      val onDriver = GraphOps.connectedComponents(df, "a_id", "b_id")
+      val loop = withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(
+        GraphOps.connectedComponents(df, "a_id", "b_id"))
+      val alt = GraphOps.connectedComponentsAlternating(df, "a_id", "b_id")
+      val expected = bruteComponents(edges)
+      onDriver.schema == loop.schema && labelsOf(onDriver) == expected &&
+        labelsOf(loop) == expected && labelsOf(alt) == expected
+    })
+  }
+
+  test("connected components: NULL endpoints give the same labeling on the driver path and the loop") {
+    import spark.implicits._
+    import graft.ops.GraphOps
+    // a NULL endpoint links nothing: 1–2–4 is one component, 3 and 5 stay
+    // alone, and the one NULL-node row takes its least direct partner (3);
+    // with no non-null partner at all the NULL node's label is NULL
+    type Pairs = Seq[(Option[Long], Option[Long])]
+    val cases = Seq[(Pairs, Pairs)](
+      Seq((Some(1L), Some(2L)), (None, Some(5L)), (Some(3L), None),
+        (Some(2L), Some(4L)), (None, None)) ->
+        Seq((None, Some(3L)), (Some(1L), Some(1L)), (Some(2L), Some(1L)),
+          (Some(3L), Some(3L)), (Some(4L), Some(1L)), (Some(5L), Some(5L))),
+      Seq((None, None)) -> Seq((None, None)))
+    for ((edges, expected) <- cases) {
+      val df = edges.toDF("a_id", "b_id")
+      val onDriver = GraphOps.connectedComponents(df, "a_id", "b_id")
+      val loop = withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(
+        GraphOps.connectedComponents(df, "a_id", "b_id"))
+      assert(labelsOf(onDriver) === expected, "driver path")
+      assert(labelsOf(loop) === expected, "loop")
+      assert(onDriver.schema === loop.schema)
+    }
+  }
+
+  test("jaccardSelfAuto: auto, exact, prefix and salted branches equal brute force on Zipfian corpora") {
+    import org.scalacheck.Gen
+    // Zipf(1) over 40 words, plus near-copies (one word swapped) so that
+    // pairs above tau exist at every size
+    val word = Gen.frequency((0 until 40).map(r => (1000 / (r + 1), Gen.const(s"w$r"))): _*)
+    val corpus = for {
+      n <- Gen.choose(4, 24)
+      docs <- Gen.listOfN(n, Gen.choose(1, 9).flatMap(Gen.listOfN(_, word)))
+      copies <- Gen.someOf(docs)
+      swaps <- Gen.listOfN(copies.size, word)
+      tau <- Gen.oneOf(0.5, 0.6, 0.75, 0.8)
+    } yield (docs ++ copies.zip(swaps).map { case (d, w) => w :: d.tail }, tau)
+    holds(8, 36L)(org.scalacheck.Prop.forAllNoShrink(corpus) { case (docs, tau) =>
+      val df = toDf(docs)
+      val expected = bruteForce(docs.map(_.toSet), tau)
+      def run(usePrefix: Option[Boolean], salt: Option[Boolean]) =
+        SimilarityJoin.jaccardSelfAuto(df, "doc_id", "text", Seq("blk"), tau,
+            usePrefix, salt)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      Seq(run(None, None), run(Some(false), None), run(Some(true), Some(false)),
+        run(Some(true), Some(true)), run(Some(true), None)).forall(_ == expected)
+    })
+  }
 }

@@ -153,7 +153,7 @@ class SimilarityJoinSpec extends SparkSpec {
 
   test("auto dispatch: flat vocabulary probes below threshold and takes the exact path") {
     val docs = Tables.documents(spark, sf0001)
-    val skew = SimilarityJoin.vocabSkew(SimilarityJoin.tokenized(docs, "text"), "tokens")
+    val skew = SimilarityJoin.vocabStats(SimilarityJoin.tokenized(docs, "text"), "tokens").skew
     info(f"documents vocab skew = $skew%.3f")
     assert(skew < SimilarityJoin.PrefixSkewThreshold, s"corpus no longer flat: $skew")
     val auto = SimilarityJoin.jaccardSelfAuto(docs, "doc_id", "text", Seq("lang", "source"), 0.8)
@@ -171,7 +171,7 @@ class SimilarityJoinSpec extends SparkSpec {
     val docs = spark.range(n).selectExpr(
       "id AS doc_id", "'x' AS blk",
       "concat('hot u', id, 'a u', id, 'b') AS text")
-    val skew = SimilarityJoin.vocabSkew(SimilarityJoin.tokenized(docs, "text"), "tokens")
+    val skew = SimilarityJoin.vocabStats(SimilarityJoin.tokenized(docs, "text"), "tokens").skew
     info(f"synthetic vocab skew = $skew%.3f")
     assert(skew >= SimilarityJoin.PrefixSkewThreshold, s"synthetic corpus not skewed: $skew")
     val auto = SimilarityJoin.jaccardSelfAuto(docs, "doc_id", "text", Seq("blk"), 0.5)
@@ -192,7 +192,7 @@ class SimilarityJoinSpec extends SparkSpec {
 
   test("auto dispatch: extreme skew routes the candidate join through the salted plan") {
     val docs = extremeSkewCorpus(300)
-    val skew = SimilarityJoin.vocabSkew(SimilarityJoin.tokenized(docs, "text"), "tokens")
+    val skew = SimilarityJoin.vocabStats(SimilarityJoin.tokenized(docs, "text"), "tokens").skew
     info(f"extreme-skew corpus vocab skew = $skew%.1f")
     assert(skew >= SimilarityJoin.SaltSkewThreshold, s"corpus not extreme enough: $skew")
     val auto = SimilarityJoin.jaccardSelfAuto(docs, "doc_id", "text", Seq("blk"), 0.5)
@@ -223,37 +223,58 @@ class SimilarityJoinSpec extends SparkSpec {
     assert(auto.collect().map(_.toString).toSeq === exact)
   }
 
-  test("r21: vocabSkew memoizes file-backed probes per (plan, file mtime/size); " +
+  test("r21: vocabStats memoizes file-backed probes per (plan, file mtime/size); " +
     "in-memory inputs never memoize") {
     import graft.ops.PlanStatMemo
     import spark.implicits._
     // in-memory relation: no file fingerprint ⇒ no key ⇒ no memo entry
     val mem = SimilarityJoin.tokenized(
       Seq((1L, "a b c"), (2L, "a b d")).toDF("doc_id", "text"), "text")
-    assert(PlanStatMemo.key(mem, "vocabSkew:tokens").isEmpty)
-    SimilarityJoin.vocabSkew(mem, "tokens") // computes, memoizes nothing
+    assert(PlanStatMemo.key(mem, "vocabStats:tokens").isEmpty)
+    SimilarityJoin.vocabStats(mem, "tokens") // computes, memoizes nothing
     // file-backed relation: a key exists; the first probe memoizes under
     // it, and a structurally identical second read returns the cached
-    // statistic (same key — semanticHash is exprId-normalized)
+    // statistics (same key — semanticHash is exprId-normalized)
     val sets = SimilarityJoin.tokenized(Tables.documents(spark, sf0001), "text")
-    val k1 = PlanStatMemo.key(sets, "vocabSkew:tokens")
+    val k1 = PlanStatMemo.key(sets, "vocabStats:tokens")
     assert(k1.nonEmpty)
-    val first = SimilarityJoin.vocabSkew(sets, "tokens")
+    val first = SimilarityJoin.vocabStats(sets, "tokens")
     assert(PlanStatMemo.lookup(k1.get) === Some(first))
     val sets2 = SimilarityJoin.tokenized(Tables.documents(spark, sf0001), "text")
-    assert(PlanStatMemo.key(sets2, "vocabSkew:tokens") === k1)
-    assert(SimilarityJoin.vocabSkew(sets2, "tokens") === first)
+    assert(PlanStatMemo.key(sets2, "vocabStats:tokens") === k1)
+    assert(SimilarityJoin.vocabStats(sets2, "tokens") === first)
     // rewriting the input (same rows, new files ⇒ new paths/mtimes)
     // invalidates: a FRESH key, recomputed to the same value
     val dir = java.nio.file.Files.createTempDirectory("skewmemo").toFile
     try {
       Tables.documents(spark, sf0001).write.mode("overwrite").parquet(dir.toString)
       val rewritten = SimilarityJoin.tokenized(spark.read.parquet(dir.toString), "text")
-      val k2 = PlanStatMemo.key(rewritten, "vocabSkew:tokens")
+      val k2 = PlanStatMemo.key(rewritten, "vocabStats:tokens")
       assert(k2.nonEmpty && k2 != k1)
       assert(PlanStatMemo.lookup(k2.get).isEmpty)
-      assert(SimilarityJoin.vocabSkew(rewritten, "tokens") === first)
+      assert(SimilarityJoin.vocabStats(rewritten, "tokens") === first)
       assert(PlanStatMemo.lookup(k2.get) === Some(first))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(dir)
+      ()
+    }
+  }
+
+  test("a cold jaccardSelfAuto build on fresh parquet runs one probe query, not two") {
+    // the skew probe's vocabulary size also decides the prefix plan's
+    // frequency-relation broadcast, so no separate bounded-count probe runs
+    val dir = java.nio.file.Files.createTempDirectory("autoprobe").toFile
+    try {
+      extremeSkewCorpus(300).write.mode("overwrite").parquet(dir.toString)
+      val docs = spark.read.parquet(dir.toString)
+      val (auto, jobs) = jobsOf(
+        SimilarityJoin.jaccardSelfAuto(docs, "doc_id", "text", Seq("blk"), 0.5))
+      val queries = jobs.map(_.getProperty("spark.sql.execution.id")).distinct
+      assert(queries.size === 1, s"build ran ${queries.size} probe queries")
+      assert(auto.queryExecution.optimizedPlan.toString.contains("array_intersect"),
+        "expected the prefix branch on this corpus")
+      val exact = SimilarityJoin.jaccardSelf(docs, "doc_id", "text", Seq("blk"), 0.5)
+      assert(auto.collect().map(_.toString).toSeq === exact.collect().map(_.toString).toSeq)
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(dir)
       ()

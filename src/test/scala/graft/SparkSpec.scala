@@ -21,6 +21,33 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** Run `body` and return the properties of every Spark job it started,
+    * in start order. Jobs are matched by a job group unique to the call,
+    * so jobs of other threads never count; the group reaches the jobs
+    * Spark starts on helper threads (broadcasts, AQE stages) through the
+    * captured local properties.
+    */
+  def jobsOf[A](body: => A): (A, Seq[java.util.Properties]) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            j.properties.getProperty("spark.jobGroup.id") == group) seen.add(j.properties)
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "jobsOf")
+    try {
+      val a = body
+      org.apache.spark.GraftListenerDrain(sc)
+      (a, seen.toArray(Array.empty[java.util.Properties]).toSeq)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 object SparkSpec {

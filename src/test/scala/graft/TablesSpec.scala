@@ -49,4 +49,27 @@ class TablesSpec extends SparkSpec {
       }
     }
   }
+
+  test("schema memo never hands one session's parquet inference to a session with other parquet confs") {
+    // events.ts is TIMESTAMP(isAdjustedToUTC = false) with no Spark schema
+    // in the footer: it surfaces as TIMESTAMP_NTZ under inferTimestampNTZ
+    // (the default) and as TIMESTAMP without it. A copy under a fresh path
+    // makes this session's inference the first one memoized for it.
+    val dir = java.nio.file.Files.createTempDirectory("schemamemo").toFile
+    try {
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf0001/events.parquet"),
+        dir.toPath.resolve("events.parquet"))
+      assert(Tables.load(spark, dir.toString, "events").schema("ts").dataType === TimestampNTZType)
+      val other = spark.newSession()
+      other.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      assert(other.read.parquet(s"$dir/events.parquet").schema("ts").dataType === TimestampType)
+      assert(Tables.load(other, dir.toString, "events").schema("ts").dataType === TimestampType,
+        "the memo returned the NTZ schema another session inferred")
+      // the first session still gets its own inference back
+      assert(Tables.load(spark, dir.toString, "events").schema("ts").dataType === TimestampNTZType)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(dir)
+      ()
+    }
+  }
 }

@@ -1,0 +1,9 @@
+package org.apache.spark
+
+/** The listener bus delivers events asynchronously and its drain is
+  * private to Spark: job-counting specs wait on it so every event posted
+  * before the call has been delivered when they read their counters.
+  */
+object GraftListenerDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
