@@ -51,26 +51,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   */
 object GraphOps extends org.apache.spark.internal.Logging {
 
-  /** Process-wide observation-name uniquifier — see the note at the use
-    * site (observed metrics are delivered by name).
-    */
-  private val ObsId = new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** Driver-path size estimate per directed edge row: two longs. */
   private val EdgeRowBytes = 16L
-
-  /** Free the block-manager storage behind a `localCheckpoint(true)`-backed
-    * relation once the NEXT round is materialized — without this every
-    * round's label relation stays cached and storage grows linearly with
-    * rounds (up to maxIter copies). Safe only because nothing references
-    * the previous round after its successor is eagerly checkpointed (a
-    * local checkpoint is unrecomputable once unpersisted).
-    */
-  private def unpersistLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(false)
-      case _ => ()
-    }
 
   /** Label each node of the undirected graph `edges` with the MINIMUM node
     * id reachable from it. Output: (`srcCol` → node id, `cluster_id`), one
@@ -99,12 +81,10 @@ object GraphOps extends org.apache.spark.internal.Logging {
     // observing its row count on the same job — every later consumer (the
     // driver collect, loop rounds, fallback) reads blocks, never the
     // upstream plan
-    val sized = org.apache.spark.sql.Observation(s"cc_edges_${ObsId.incrementAndGet()}")
-    val directed = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
-      .observe(sized, count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    val nEdges = sized.get("n").asInstanceOf[Long]
+    val (directed, sized) = Materialized.observed(
+      edges.select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v")),
+      "cc_edges", Seq(count(lit(1)).as("n")))
+    val nEdges = sized("n").asInstanceOf[Long]
     val bound = edges.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     // both orientations per row: a projection of the checkpoint, so the
     // loop's symmetric edge list costs no second materialization
@@ -123,7 +103,7 @@ object GraphOps extends org.apache.spark.internal.Logging {
       val nullable = und.schema("u").nullable
       val schema = StructType(Seq(srcCol, "cluster_id").map(StructField(_, LongType, nullable)))
       val rows = directed.collect()
-      unpersistLocalCheckpoint(directed)
+      Materialized.release(directed)
       decided("driver union-find, 0 rounds")
       return edges.sparkSession
         .createDataFrame(java.util.Arrays.asList(unionFind(rows): _*), schema)
@@ -158,24 +138,18 @@ object GraphOps extends org.apache.spark.internal.Logging {
       // per round instead of two; the metric is exact (count over every
       // row the checkpoint writes), not a sample.
       val prev = labels
-      // a fresh name per observation, process-wide: Spark delivers observed
-      // metrics to listeners BY NAME, so two concurrent connectedComponents
-      // calls in one session (e.g. parallel test suites) sharing a
-      // "cc_round_0" name could read each other's changed-count
-      val obs = org.apache.spark.sql.Observation(
-        s"cc_round_${i}_${ObsId.incrementAndGet()}")
-      val next = labels.join(nbrMin, Seq("u"), "left")
-        .select(col("u"), col("lbl").as("old"),
-          least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
-        .observe(obs, count(when(col("lbl") =!= col("old"), 1)).as("changed"))
-        .localCheckpoint(true)
-      converged = obs.get("changed").asInstanceOf[Long] == 0L
+      val (next, obs) = Materialized.observed(
+        labels.join(nbrMin, Seq("u"), "left")
+          .select(col("u"), col("lbl").as("old"),
+            least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl")),
+        s"cc_round_$i", Seq(count(when(col("lbl") =!= col("old"), 1)).as("changed")))
+      converged = obs("changed").asInstanceOf[Long] == 0L
       labels = next.select("u", "lbl")
       // `next` is eagerly materialized above, so round i−1's checkpoint
-      // blocks can be dropped now (only the newest label relation — and
-      // the edge checkpoint — stay cached; the last one is the caller's
-      // result)
-      unpersistLocalCheckpoint(prev)
+      // blocks can be dropped now; without this, storage grows linearly
+      // with rounds (only the newest label relation — and the edge
+      // checkpoint — stay cached; the last one is the caller's result)
+      Materialized.release(prev)
       i += 1
     }
     if (!converged && fallback) {
@@ -185,12 +159,12 @@ object GraphOps extends org.apache.spark.internal.Logging {
       // available: re-dispatch the materialized edge relation (the
       // expensive upstream plan, e.g. the whole similarity join, is NOT
       // recomputed; the callee canonicalizes orientation itself)
-      unpersistLocalCheckpoint(labels)
+      Materialized.release(labels)
       val out = connectedComponentsAlternating(directed, "u", "v")
         .withColumnRenamed("u", srcCol)
       // the callee eagerly checkpointed its own canonical edge relation,
       // so the directed edge blocks are droppable the moment it returns
-      unpersistLocalCheckpoint(directed)
+      Materialized.release(directed)
       return out
     }
     decided(s"propagation loop, $i rounds" + (if (converged) "" else ", not converged"))
@@ -199,7 +173,7 @@ object GraphOps extends org.apache.spark.internal.Logging {
     // the result depends only on the FINAL label checkpoint (released by
     // the ContextCleaner when the caller drops the result); the edge
     // relation served its last consumer in the loop above
-    unpersistLocalCheckpoint(directed)
+    Materialized.release(directed)
     labels.select(col("u").as(srcCol), col("lbl").as("cluster_id"))
       .orderBy(srcCol)
   }
@@ -302,29 +276,27 @@ object GraphOps extends org.apache.spark.internal.Logging {
       // against the (already checkpointed) previous edge set, replacing
       // the per-round count() + except().isEmpty follow-up jobs. One
       // driver action per round instead of three.
-      val obs = org.apache.spark.sql.Observation(
-        s"ccalt_round_${i}_${ObsId.incrementAndGet()}")
-      val next = canon(
-          smaller.join(m2, "u").select(col("v").as("a"), col("m").as("b"))
-            .union(m2.select(col("u").as("a"), col("m").as("b"))))
-        .join(prev.select(col("u"), col("v"), lit(1).as("in_prev")),
-          Seq("u", "v"), "left")
-        .observe(obs, count(lit(1)).as("n"),
-          count(when(col("in_prev").isNull, lit(1))).as("novel"))
-        .select("u", "v")
-        .localCheckpoint(true)
-      val nNext = obs.get("n").asInstanceOf[Long]
-      converged = obs.get("novel").asInstanceOf[Long] == 0L && nNext == prevCount
+      val (next, obs) = Materialized.observed(
+        canon(
+            smaller.join(m2, "u").select(col("v").as("a"), col("m").as("b"))
+              .union(m2.select(col("u").as("a"), col("m").as("b"))))
+          .join(prev.select(col("u"), col("v"), lit(1).as("in_prev")),
+            Seq("u", "v"), "left"),
+        s"ccalt_round_$i", Seq(count(lit(1)).as("n"),
+          count(when(col("in_prev").isNull, lit(1))).as("novel")),
+        _.select("u", "v"))
+      val nNext = obs("n").asInstanceOf[Long]
+      converged = obs("novel").asInstanceOf[Long] == 0L && nNext == prevCount
       prevCount = nNext
       e = next
-      if (prev ne e0) unpersistLocalCheckpoint(prev)
+      if (prev ne e0) Materialized.release(prev)
       i += 1
     }
     require(converged, s"alternating-star did not converge in $maxRounds rounds")
     // the result depends on `nodes` and the FINAL `e` (ContextCleaner-
     // released with the result); the seed edge checkpoint is dead unless
     // the loop never replaced it
-    if (e ne e0) unpersistLocalCheckpoint(e0)
+    if (e ne e0) Materialized.release(e0)
     // stars: every edge is (root, child); roots label themselves, and any
     // node the final edge set no longer mentions is its own root
     val labels = e.select(col("v").as("node"), col("u").as("cluster_id"))
@@ -469,16 +441,16 @@ object GraphOps extends org.apache.spark.internal.Logging {
         .localCheckpoint(true)
       // the first iteration's eager job materialized symDeg, whose inputs
       // (sym's blocks) have no later consumer — drop them now
-      if (!symUnpersisted) { unpersistLocalCheckpoint(sym); symUnpersisted = true }
-      if (ranksCheckpointed) unpersistLocalCheckpoint(ranks)
+      if (!symUnpersisted) { Materialized.release(sym); symUnpersisted = true }
+      if (ranksCheckpointed) Materialized.release(ranks)
       ranks = next
       ranksCheckpointed = true
     }
     // every iteration's plan materialized eagerly above, so the degree
     // relations have no remaining consumer; the returned `ranks`
     // checkpoint is ContextCleaner-released when the caller drops it
-    unpersistLocalCheckpoint(deg)
-    unpersistLocalCheckpoint(symDeg)
+    Materialized.release(deg)
+    Materialized.release(symDeg)
     ranks
   }
 }

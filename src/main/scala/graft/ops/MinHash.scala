@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.Det
 
 /** MinHash + LSH approximate set-similarity (Broder 1997; banding analysis
@@ -22,7 +21,7 @@ import graft.Det
   * No SQL oracle (engine hash functions differ); verified by property
   * tests against the exact join's ground truth (fixed seeds ⇒ stable).
   */
-object MinHash {
+object MinHash extends org.apache.spark.internal.Logging {
   val P: Long = 2147483647L // 2^31 − 1, prime; keeps a·x within a Long
 
   /** Fixed-seed splitmix64 stream → (a, b) hash parameters, a ∈ [1,p), b ∈ [0,p). */
@@ -128,23 +127,23 @@ object MinHash {
     *
     * Output (a_id, b_id, est_sim ROUND 6) for candidate pairs (≥1 equal
     * band, equal block keys, a < b) with est_sim ≥ tauEst, totally ordered.
+    *
+    * Plan shape: the signatures and their band hashes are checkpointed
+    * ONCE ([[signedBands]]), and both sides of the banded candidate join
+    * read that checkpoint, so tokenization and the sketch kernel run once.
+    * The row count observed on the checkpoint job, times the exploded
+    * band row's width, decides the join: within
+    * `spark.sql.autoBroadcastJoinThreshold` (> 0) one side is broadcast,
+    * otherwise both sides shuffle on (band, hash, blocks). The decision is
+    * logged at INFO under this object's logger (`graft.ops.MinHash`).
     */
   def lshPairs(docs: DataFrame, idCol: String, textCol: String,
                blockCols: Seq[String], tauEst: Double,
                nHashes: Int = 32, nBands: Int = 8): DataFrame = {
-    require(nHashes % nBands == 0)
-    val rows = nHashes / nBands
-    val n = docs.sparkSession.sessionState.conf.numShufflePartitions
-    // explicit repartition = a ReuseExchange point: both join sides below
-    // read ONE materialization of the signatures instead of each recomputing
-    // tokenize+sketch from the scan (the aggregation shuffle used to provide
-    // this for free; the per-row signature expression removed it)
-    val signed = signatures(docs, idCol, textCol, nHashes, keep = blockCols)
-      .repartition(n, col("id"))
-      .withColumn("bands", array((0 until nBands).map(bi =>
-        hash(slice(col("sig"), bi * rows + 1, rows))): _*))
+    val signed = signedBands(docs, idCol, textCol, blockCols, nHashes, nBands)
+    logInfo(signed.decision("lshPairs", if (signed.broadcastable) "broadcast" else "shuffle"))
 
-    def side(p: String) = signed.select(
+    def side(p: String) = signed.df.select(
       col("id").as(s"${p}_id") +: col("sig").as(s"${p}_sig") +:
         blockCols.map(c => col(c).as(s"${p}_$c")) :+
         posexplode(col("bands")).as(Seq(s"${p}_band", s"${p}_bh")): _*)
@@ -159,11 +158,30 @@ object MinHash {
       (m: Column) => m))
     // estimate computed BEFORE the pair dedup so the dedup shuffle carries
     // (a_id, b_id, est) instead of two nHashes-long signatures per row
-    a.join(b, cond)
+    a.join(if (signed.broadcastable) broadcast(b) else b, cond)
       .withColumn("est_sim", nMatch.cast("double") / lit(nHashes.toDouble))
       .groupBy("a_id", "b_id").agg(max(col("est_sim")).as("est_sim"))
       .filter(col("est_sim") >= tauEst)
       .select(col("a_id"), col("b_id"), Det.round6(col("est_sim")).as("est_sim"))
       .orderBy("a_id", "b_id")
+  }
+
+  /** [[lshPairs]]' index: (id, blocks…, sig, bands) checkpointed once,
+    * `bands` holding the nBands band hashes. `bytes` estimates the
+    * exploded band relation: nBands rows (id, sig, blocks…, band, hash)
+    * per document.
+    */
+  private[graft] def signedBands(docs: DataFrame, idCol: String, textCol: String,
+                                 blockCols: Seq[String], nHashes: Int,
+                                 nBands: Int): Materialized = {
+    require(nHashes % nBands == 0)
+    val rows = nHashes / nBands
+    val signed = signatures(docs, idCol, textCol, nHashes, keep = blockCols)
+      .withColumn("bands", array((0 until nBands).map(bi =>
+        hash(slice(col("sig"), bi * rows + 1, rows))): _*))
+    // the sig array: a length word, a null-bit word, one word per hash
+    val bandRow = Materialized.rowBytes(4 + blockCols.size,
+      lit(16L + 8L * nHashes) + Materialized.blockBytes(blockCols))
+    Materialized(signed, "minhash_bands", bandRow * nBands)
   }
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Session-scoped memo for PLANNING STATISTICS derived from file-backed
   * relations (r21; the r20 verdict ruled the pattern legitimate): the
@@ -17,6 +18,10 @@ import org.apache.spark.sql.DataFrame
   *    (path, mtime, size) fingerprint of every file the plan's scan
   *    leaves read (`DataFrame.inputFiles`) plus a caller tag — rewriting
   *    any input invalidates the entry;
+  *  - a hit counts only when the stored plan `sameResult`s the probed
+  *    one: `semanticHash` is a 32-bit `Int`, so two different plans over
+  *    the same files can share a key. A colliding probe recomputes and
+  *    takes the entry over;
   *  - JVM-lifetime only, NEVER persisted — a fresh run always recomputes
   *    from the parquet inputs;
   *  - non-file-backed inputs (in-memory test relations) never memoize,
@@ -24,9 +29,10 @@ import org.apache.spark.sql.DataFrame
   */
 object PlanStatMemo {
 
-  private val memo = new java.util.concurrent.ConcurrentHashMap[String, Any]()
+  /** key → (the analyzed plan the statistic was computed on, statistic) */
+  private val memo = new java.util.concurrent.ConcurrentHashMap[String, (LogicalPlan, Any)]()
 
-  private[graft] def lookup(k: String): Option[Any] = Option(memo.get(k))
+  private[graft] def lookup(k: String): Option[Any] = Option(memo.get(k)).map(_._2)
   private[graft] def clear(): Unit = memo.clear()
 
   /** The memo key, or None when the input is not entirely file-backed or
@@ -54,9 +60,10 @@ object PlanStatMemo {
   def cached[T](df: DataFrame, tag: String)(compute: => T): T =
     key(df, tag) match {
       case Some(k) =>
+        val plan = df.queryExecution.analyzed
         val hit = memo.get(k)
-        if (hit != null) hit.asInstanceOf[T]
-        else { val v = compute; memo.put(k, v.asInstanceOf[Any]); v }
+        if (hit != null && hit._1.sameResult(plan)) hit._2.asInstanceOf[T]
+        else { val v = compute; memo.put(k, (plan, v)); v }
       case None => compute
     }
 

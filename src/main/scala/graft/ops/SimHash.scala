@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * trade off via more/narrower bands). Exact Hamming verification uses
   * bit_count(a XOR b).
   */
-object SimHash {
+object SimHash extends org.apache.spark.internal.Logging {
 
   /** Adds a `sig` BIGINT column: 64-bit simhash over distinct tokens.
     *
@@ -60,22 +60,21 @@ object SimHash {
     * candidates go quadratic, so wide radii are approximate BY DESIGN
     * (Manku et al. run r = 3 with 4 bands for exactly this reason — and so
     * does q48). Measured radius-16 recall is pinned in PipelineSpec.
+    *
+    * Plan shape: as in [[MinHash.lshPairs]], the signatures and band
+    * values are checkpointed ONCE ([[signedBands]]) and both join sides
+    * read the checkpoint; the observed row count times the band row's
+    * width picks a broadcast or a shuffle candidate join against
+    * `spark.sql.autoBroadcastJoinThreshold`, logged at INFO under
+    * `graft.ops.SimHash`.
     */
   def hammingPairs(docs: DataFrame, idCol: String, textCol: String,
                    blockCols: Seq[String], maxHamming: Int,
                    nBands: Int = 4): DataFrame = {
-    require(nBands >= 1 && 64 % nBands == 0,
-      s"nBands must divide 64, got $nBands")
-    val w = 64 / nBands
-    val mask = if (w == 64) -1L else (1L << w) - 1
-    // NOTE: no reuse-repartition here, unlike MinHash.lshPairs — the 1-pass
-    // simhash recompute on the second join side measures cheaper than an
-    // extra exchange (1.28 s vs 1.45 s on the q48 bench shape)
-    val signed = signatures(docs, idCol, textCol, keep = blockCols)
-      .withColumn("bands", array((0 until nBands).map(b =>
-        shiftright(col("sig"), b * w).bitwiseAND(lit(mask))): _*))
+    val signed = signedBands(docs, idCol, textCol, blockCols, nBands)
+    logInfo(signed.decision("hammingPairs", if (signed.broadcastable) "broadcast" else "shuffle"))
 
-    def side(p: String) = signed.select(
+    def side(p: String) = signed.df.select(
       col("id").as(s"${p}_id") +: col("sig").as(s"${p}_sig") +:
         blockCols.map(c => col(c).as(s"${p}_$c")) :+
         posexplode(col("bands")).as(Seq(s"${p}_band", s"${p}_bv")): _*)
@@ -86,11 +85,29 @@ object SimHash {
     val cond = (Seq(col("a_band") === col("b_band"), col("a_bv") === col("b_bv"),
       col("a_id") < col("b_id")) ++ blockEq).reduce(_ && _)
 
-    a.join(b, cond)
+    a.join(if (signed.broadcastable) broadcast(b) else b, cond)
       .withColumn("hamming", bit_count(col("a_sig").bitwiseXOR(col("b_sig"))))
       .groupBy("a_id", "b_id").agg(max(col("hamming")).as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .select(col("a_id"), col("b_id"), col("hamming"))
       .orderBy("a_id", "b_id")
+  }
+
+  /** [[hammingPairs]]' index: (id, blocks…, sig, bands) checkpointed once,
+    * `bands` holding the nBands (64/nBands)-bit band values. `bytes`
+    * estimates the exploded band relation: nBands rows
+    * (id, sig, blocks…, band, value) per document.
+    */
+  private[graft] def signedBands(docs: DataFrame, idCol: String, textCol: String,
+                                 blockCols: Seq[String], nBands: Int): Materialized = {
+    require(nBands >= 1 && 64 % nBands == 0,
+      s"nBands must divide 64, got $nBands")
+    val w = 64 / nBands
+    val mask = if (w == 64) -1L else (1L << w) - 1
+    val signed = signatures(docs, idCol, textCol, keep = blockCols)
+      .withColumn("bands", array((0 until nBands).map(b =>
+        shiftright(col("sig"), b * w).bitwiseAND(lit(mask))): _*))
+    val bandRow = Materialized.rowBytes(4 + blockCols.size, Materialized.blockBytes(blockCols))
+    Materialized(signed, "simhash_bands", bandRow * nBands)
   }
 }

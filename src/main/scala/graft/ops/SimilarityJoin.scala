@@ -36,9 +36,11 @@ import graft.Det
   *
   * The auto-dispatched joins ([[jaccardSelfAuto]], [[jaccardRSAuto]]) take
   * every planning decision — prefix or exact, salted or not, vocabulary
-  * broadcast or shuffle — from ONE [[vocabStats]] probe, and log the
-  * decision at INFO under this object's logger
-  * (`graft.ops.SimilarityJoin`).
+  * broadcast or shuffle — from ONE [[vocabStats]] probe. The prefix
+  * self-join then materializes its ranked relation once, and that job's
+  * observed size decides whether the candidate join broadcasts (see
+  * [[jaccardSelfPrefixOnSets]]). Every decision is logged at INFO under
+  * this object's logger (`graft.ops.SimilarityJoin`).
   */
 object SimilarityJoin extends org.apache.spark.internal.Logging {
 
@@ -130,18 +132,41 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
     * corpus in 7 queries × 3 runs). In-memory inputs (every dispatch spec)
     * never memoize.
     */
-  def vocabStats(sets: DataFrame, setCol: String): VocabStats = {
-    def compute(): VocabStats = {
-      val r = sets.select(explode(col(setCol)).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("df"))
-        .agg(max(col("df")).cast("double").as("mx"), avg(col("df")).as("av"),
-          count(lit(1)).as("n"))
+  def vocabStats(sets: DataFrame, setCol: String): VocabStats =
+    PlanStatMemo.cached(sets, s"vocabStats:$setCol") {
+      val r = frequencies(sets, setCol).agg(vocabMetrics.head, vocabMetrics.tail: _*)
         .collect()(0)
-      VocabStats(
-        if (r.isNullAt(0) || r.getDouble(1) == 0.0) 1.0 else r.getDouble(0) / r.getDouble(1),
-        r.getLong(2))
+      statsOf(r.get(0), r.get(1), r.getLong(2))
     }
-    PlanStatMemo.cached(sets, s"vocabStats:$setCol")(compute())
+
+  /** [[vocabStats]] for a build that joins the frequencies next: on a memo
+    * miss the element-frequency relation is checkpointed, and the
+    * statistics are observed on that same job, so the prefix plan reads
+    * the checkpoint instead of aggregating the input again. A memo hit
+    * runs no job and returns no relation.
+    */
+  private def vocabulary(sets: DataFrame, setCol: String): (VocabStats, Option[DataFrame]) = {
+    var freq: Option[DataFrame] = None
+    val stats = PlanStatMemo.cached(sets, s"vocabStats:$setCol") {
+      val (cp, m) = Materialized.observed(frequencies(sets, setCol), "vocab", vocabMetrics)
+      freq = Some(cp)
+      statsOf(m("mx"), m("av"), m("n").asInstanceOf[Long])
+    }
+    (stats, freq)
+  }
+
+  /** The element-frequency relation (token, df) of a set column. */
+  private def frequencies(sets: DataFrame, setCol: String): DataFrame =
+    sets.select(explode(col(setCol)).as("token"))
+      .groupBy("token").agg(count(lit(1)).as("df"))
+
+  /** [[VocabStats]]' aggregates over a frequency relation. */
+  private def vocabMetrics: Seq[Column] = Seq(max(col("df")).cast("double").as("mx"),
+    avg(col("df")).as("av"), count(lit(1)).as("n"))
+
+  private def statsOf(mx: Any, av: Any, n: Long): VocabStats = (mx, av) match {
+    case (m: Double, a: Double) if a != 0.0 => VocabStats(m / a, n)
+    case _ => VocabStats(1.0, n)
   }
 
   /** Decide the auto dispatch: (prefix, salted, vocabulary broadcast).
@@ -199,9 +224,16 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
     * (flat vocabulary) or [[jaccardSelfPrefix]] (Zipfian), both exact and
     * property-tested equivalent, so the choice affects only the plan; at
     * extreme skew (≥ [[SaltSkewThreshold]]) the prefix plan's candidate
-    * join is additionally salted ([[Salting.saltedEquiJoin]]). The same
-    * probe's vocabulary size decides the prefix plan's frequency-relation
-    * broadcast, so a cold build runs ONE probe query.
+    * join is additionally salted ([[Salting.saltedEquiJoin]]) unless its
+    * index fits the broadcast threshold. The same probe's vocabulary size
+    * decides the prefix plan's frequency-relation broadcast.
+    *
+    * A cold build (memo miss) runs two materializations and no other job:
+    * the probe checkpoints the element-frequency relation with its
+    * statistics observed on that job, and the prefix plan joins that
+    * checkpoint into its ranked relation, itself checkpointed once (see
+    * [[jaccardSelfPrefixOnSets]]). The exact branch releases the
+    * frequency checkpoint unused.
     * `usePrefix` / `saltCandidates`: `Some(b)` skips the probe (callers at
     * scale know their vocabulary shape — pass BOTH to skip it entirely).
     */
@@ -211,11 +243,20 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
                       saltCandidates: Option[Boolean] = None,
                       sorted: Boolean = true): DataFrame = {
     val sets = tokenized(docs, textCol)
+    lazy val vocab = vocabulary(sets, "tokens")
     val (prefix, salted, vocabBroadcast) = autoPlan("jaccardSelfAuto",
-      vocabStats(sets, "tokens"), usePrefix, saltCandidates)
-    if (prefix) jaccardSelfPrefixOnSets(sets, idCol, "tokens", blockCols, tau,
-      vocabBroadcast, nSalts = if (salted) CandidateSalts else 1, sorted = sorted)
-    else jaccardSelfOnSets(sets, idCol, "tokens", blockCols, tau, sorted = sorted)
+      vocab._1, usePrefix, saltCandidates)
+    // vocabBroadcast is defined exactly when the probe ran
+    val freq = vocabBroadcast.flatMap(_ => vocab._2)
+    val out =
+      if (prefix) prefixSelfJoin(sets, idCol, "tokens", blockCols, tau,
+        freq.getOrElse(frequencies(sets, "tokens")), vocabBroadcast,
+        nSalts = if (salted) CandidateSalts else 1, sorted = sorted)
+      else jaccardSelfOnSets(sets, idCol, "tokens", blockCols, tau, sorted = sorted)
+    // the prefix plan's ranked checkpoint is already materialized, so
+    // nothing reads the frequency checkpoint any more
+    freq.foreach(Materialized.release)
+    out
   }
 
   /** Exact set-Jaccard self-join over an arbitrary precomputed array column
@@ -625,39 +666,35 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
     * precomputed set column — the generic core behind [[jaccardSelfPrefix]]
     * (word tokens) and the prefix-pruned n-gram join. The element-frequency
     * relation is computed from the sets themselves.
+    *
+    * Plan shape: the ranked relation (id, sz, blocks, sorted_tokens,
+    * prefix) is checkpointed ONCE, and both sides of the candidate join
+    * explode its prefixes, so the input plan, the frequency join and the
+    * per-record ranking run once. The same job observes the row count and
+    * an estimated byte size of the exploded prefix index. An index within
+    * `spark.sql.autoBroadcastJoinThreshold` (> 0) is broadcast to the
+    * candidate join, unsalted: a broadcast join has no hot reducer. A
+    * larger one (or a threshold ≤ 0) takes the shuffle join, salted when
+    * `nSalts` > 1. The decision is logged at INFO.
     */
   def jaccardSelfPrefixOnSets(sets: DataFrame, idCol: String, setCol: String,
                               blockCols: Seq[String], tau: Double,
                               vocabBroadcast: Option[Boolean] = None,
                               nSalts: Int = 1,
-                              sorted: Boolean = true): DataFrame = {
-    val withSz = sets.withColumn("_sz", size(col(setCol)))
-    val toks = withSz
-      .select(col(idCol).as("id") +: col("_sz").as("sz") +:
-        col(setCol).as("tokens") +: blockCols.map(col): _*)
+                              sorted: Boolean = true): DataFrame =
+    prefixSelfJoin(sets, idCol, setCol, blockCols, tau, frequencies(sets, setCol),
+      vocabBroadcast, nSalts, sorted)
 
-    val freq = sets
-      .select(explode(col(setCol)).as("token"))
-      .groupBy("token")
-      .agg(count(lit(1)).as("df"))
+  /** [[jaccardSelfPrefixOnSets]] over a given (token, df) relation. */
+  private def prefixSelfJoin(sets: DataFrame, idCol: String, setCol: String,
+                             blockCols: Seq[String], tau: Double, freq: DataFrame,
+                             vocabBroadcast: Option[Boolean], nSalts: Int,
+                             sorted: Boolean): DataFrame = {
+    val idx = rankedPrefixes(sets, idCol, setCol, blockCols, tau, freq, vocabBroadcast)
+    val ranked = idx.df
+    val broadcastIndex = idx.broadcastable
 
-    // order each record's tokens rarest-first by (df, token); the frequency
-    // relation broadcasts only while the vocabulary is provably bounded —
-    // open-vocabulary corpora take the shuffle equi-join (see [[freqJoined]])
-    val ranked = freqJoined(
-      toks.select(col("id") +: col("sz") +: blockCols.map(col) :+
-        explode(col("tokens")).as("token"): _*),
-      freq, "token", vocabBroadcast)
-      .groupBy(col("id") +: col("sz") +: blockCols.map(col): _*)
-      .agg(sort_array(collect_list(struct(col("df"), col("token")))).as("rt"))
-      .withColumn("sorted_tokens", col("rt.token"))
-      // FP-robust ⌈sz·τ⌉: epsilon-down so an integral sz·τ never rounds up,
-      // which would shorten the prefix and silently drop true pairs.
-      .withColumn("prefix", slice(col("sorted_tokens"), lit(1),
-        (col("sz") - ceil(col("sz") * lit(tau) - lit(1e-9)) + lit(1)).cast("int")))
-      .drop("rt")
-
-    val candidates = if (nSalts <= 1) {
+    val candidates = if (broadcastIndex || nSalts <= 1) {
       val a = ranked.select(col("id").as("a_id") +: col("sz").as("a_sz") +:
         col("sorted_tokens").as("a_toks") +: explode(col("prefix")).as("tok") +:
         blockCols.map(c => col(c).as(s"a_$c")): _*)
@@ -668,7 +705,7 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
       val cond = ((col("tok") === col("b_tok")) +: blockEq).reduce(_ && _) &&
         col("a_id") < col("b_id") &&
         lenOk(col("a_sz"), col("b_sz"), tau)
-      a.join(b, cond)
+      a.join(if (broadcastIndex) broadcast(b) else b, cond)
         .select("a_id", "b_id", "a_sz", "b_sz", "a_toks", "b_toks")
     } else {
       // extreme-skew path (see [[SaltSkewThreshold]]): shared key names make
@@ -687,6 +724,8 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
         .filter(col("a_id") < col("b_id") && lenOk(col("a_sz"), col("b_sz"), tau))
         .select("a_id", "b_id", "a_sz", "b_sz", "a_toks", "b_toks")
     }
+    logInfo(idx.decision("jaccardSelfPrefix",
+      if (broadcastIndex) "broadcast" else if (nSalts > 1) s"salted shuffle x$nSalts" else "shuffle"))
 
     candidates
       .dropDuplicates("a_id", "b_id")
@@ -696,5 +735,39 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
       .filter(col("sim") >= tau)
       .select(col("a_id"), col("b_id"), Det.round6(col("sim")).as("sim"))
       .maybeOrdered(sorted, "a_id", "b_id")
+  }
+
+  /** The prefix join's ranked relation (id, sz, blocks…, sorted_tokens,
+    * prefix), checkpointed once. Each record's tokens are ordered
+    * rarest-first by (df, token); the frequency relation broadcasts only
+    * while the vocabulary is provably bounded — open-vocabulary corpora
+    * take the shuffle equi-join (see [[freqJoined]]). `bytes` estimates
+    * the exploded prefix index: one row (id, sz, sorted_tokens, token,
+    * blocks…) per prefix token.
+    */
+  private[graft] def rankedPrefixes(sets: DataFrame, idCol: String, setCol: String,
+                                    blockCols: Seq[String], tau: Double, freq: DataFrame,
+                                    vocabBroadcast: Option[Boolean]): Materialized = {
+    val toks = sets
+      .select(col(idCol).as("id") +: size(col(setCol)).as("sz") +:
+        col(setCol).as("tokens") +: blockCols.map(col): _*)
+    val ranked = freqJoined(
+      toks.select(col("id") +: col("sz") +: blockCols.map(col) :+
+        explode(col("tokens")).as("token"): _*),
+      freq, "token", vocabBroadcast)
+      .groupBy(col("id") +: col("sz") +: blockCols.map(col): _*)
+      .agg(sort_array(collect_list(struct(col("df"), col("token")))).as("rt"),
+        sum(octet_length(col("token"))).as("tok_bytes"))
+      .withColumn("sorted_tokens", col("rt.token"))
+      // FP-robust ⌈sz·τ⌉: epsilon-down so an integral sz·τ never rounds up,
+      // which would shorten the prefix and silently drop true pairs.
+      .withColumn("prefix", slice(col("sorted_tokens"), lit(1),
+        (col("sz") - ceil(col("sz") * lit(tau) - lit(1e-9)) + lit(1)).cast("int")))
+      .drop("rt")
+    // the sorted_tokens array: a length word, a null-bit word, one
+    // offset-and-length word per token, then the token bytes
+    val indexRow = Materialized.rowBytes(4 + blockCols.size,
+      lit(16) + col("sz") * 8 + col("tok_bytes") + Materialized.blockBytes(blockCols))
+    Materialized(ranked, "ranked", size(col("prefix")) * indexRow, _.drop("tok_bytes"))
   }
 }

@@ -609,14 +609,19 @@ class ExplainSpec extends SparkSpec {
     assert("HashAggregate".r.findAllIn(p150).size >= 2, p150.take(2000))
   }
 
-  test("q43 pair join reads ONE materialization of the signatures (reused exchange)") {
-    // both sides of the banded candidate join must hang off the same
-    // signature repartition — losing the reuse point silently doubles the
+  test("q43 pair join reads ONE materialization of the signatures (one checkpoint)") {
+    // both sides of the banded candidate join must scan the same signature
+    // checkpoint — losing the shared materialization silently doubles the
     // sketch computation (measured 1.7s -> 3.1s on the q43 bench shape)
     val df = SparkEntry.queries("q43_minhash_lsh")(spark, sf0001)
-    df.collect() // AQE finalizes reuse decisions when THIS plan executes
+    val rdds = df.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }
+    assert(rdds.size === 2 && rdds.distinct.size === 1, df.queryExecution.analyzed.toString)
+    // the action reads only that checkpoint: no parquet rescan, no second
+    // run of the sketch kernel
+    df.collect()
     val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("ReusedExchange") || p.contains("TableCacheQueryStage"),
-      p.take(2000))
+    assert(!p.contains("FileScan") && !p.contains("graft_minhash_sig"), p.take(2000))
   }
 }

@@ -1,0 +1,54 @@
+package graft
+
+import org.apache.spark.sql.catalyst.expressions.{EqualTo, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.Filter
+import org.apache.spark.sql.functions._
+import graft.ops.PlanStatMemo
+
+/** The planning memo's key carries a 32-bit `semanticHash`; a hit must
+  * still belong to the probed plan.
+  */
+class PlanStatMemoSpec extends SparkSpec {
+
+  test("a semanticHash collision does not hand one plan's statistic to another") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("memocollide").toFile
+    try {
+      Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(dir.toString)
+      val base = spark.read.parquet(dir.toString)
+      // birthday search for two strings s whose `text = s` filters share a
+      // semanticHash: ~82k plans expected, each a cheap tree hash over the
+      // cached canonical scan. (Varying a long literal cannot collide: the
+      // plan hash is then a bijection of the literal's own 32-bit hash.)
+      val scan = base.queryExecution.analyzed
+      val text = scan.output.find(_.name == "text").get
+      val seen = scala.collection.mutable.HashMap[Int, String]()
+      var pair: Option[(String, String)] = None
+      var k = 0
+      while (pair.isEmpty && k < 2000000) {
+        val s = s"t$k"
+        pair = seen.put(Filter(EqualTo(text, Literal(s)), scan).semanticHash(), s).map((_, s))
+        k += 1
+      }
+      assert(pair.nonEmpty, "no semanticHash collision found")
+      val (ka, kb) = pair.get
+      val a = base.filter(col("text") === lit(ka))
+      val b = base.filter(col("text") === lit(kb))
+      // a true collision: one memo key, two plans with different results
+      assert(a.queryExecution.analyzed.semanticHash() === b.queryExecution.analyzed.semanticHash())
+      assert(!a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed))
+      val tag = "collision"
+      assert(PlanStatMemo.key(a, tag).nonEmpty)
+      assert(PlanStatMemo.key(a, tag) === PlanStatMemo.key(b, tag))
+      assert(PlanStatMemo.cached(a, tag)(s"stat of $ka") === s"stat of $ka")
+      assert(PlanStatMemo.cached(b, tag)(s"stat of $kb") === s"stat of $kb")
+      // the same plan read again still hits
+      assert(PlanStatMemo.cached(base.filter(col("text") === lit(kb)), tag)("recomputed") ===
+        s"stat of $kb")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(dir)
+      ()
+    }
+  }
+}

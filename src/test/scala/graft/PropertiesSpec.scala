@@ -366,4 +366,154 @@ class PropertiesSpec extends SparkSpec {
         run(Some(true), Some(true)), run(Some(true), None)).forall(_ == expected)
     })
   }
+
+  // ---- size dispatch of the dedup self-joins: each materializes its
+  // per-document relation once and broadcasts the candidate join while the
+  // observed index fits spark.sql.autoBroadcastJoinThreshold; -1 forces
+  // the shuffle join, which must give the same rows
+
+  /** Zipfian documents with near-copies, plus the edge shapes: no
+    * documents, one document, all-identical documents, and documents with
+    * no words (empty text).
+    */
+  private val dispatchCorpus: org.scalacheck.Gen[List[List[String]]] = {
+    import org.scalacheck.Gen
+    val word = Gen.frequency((0 until 40).map(r => (1000 / (r + 1), Gen.const(s"w$r"))): _*)
+    val doc = Gen.choose(1, 9).flatMap(Gen.listOfN(_, word))
+    val zipf = for {
+      n <- Gen.choose(4, 24)
+      docs <- Gen.listOfN(n, doc)
+      copies <- Gen.someOf(docs)
+      swaps <- Gen.listOfN(copies.size, word)
+    } yield docs ++ copies.zip(swaps).map { case (d, w) => w :: d.tail }
+    Gen.frequency(
+      4 -> zipf,
+      1 -> Gen.const(Nil),
+      1 -> doc.map(List(_)),
+      1 -> Gen.zip(doc, Gen.choose(2, 6)).map { case (d, n) => List.fill(n)(d) },
+      1 -> Gen.zip(zipf, Gen.choose(1, 3)).map { case (ds, k) => ds ++ List.fill(k)(Nil) })
+  }
+
+  /** The operators' tokenization: `split(text, " +")`, distinct — an
+    * empty text is the one-element set {""}.
+    */
+  private def tokensOf(doc: List[String]): Set[String] = doc.mkString(" ").split(" +", -1).toSet
+
+  private def shuffleForced[A](body: => A): A =
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
+
+  private def hasBroadcastHint(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed.exists {
+      case _: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => true
+      case _ => false
+    }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
+    df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.get(2).toString.toDouble))
+
+  test("jaccard prefix join: broadcast = forced shuffle (salted or not) = brute force on edge corpora") {
+    holds(10, 91L)(org.scalacheck.Prop.forAllNoShrink(dispatchCorpus,
+        org.scalacheck.Gen.oneOf(0.5, 0.6, 0.75, 0.8)) { (docs, tau) =>
+      val df = toDf(docs)
+      val expected = bruteForce(docs.map(tokensOf), tau)
+      def run(salt: Boolean) = rowsOf(SimilarityJoin.jaccardSelfAuto(df, "doc_id", "text",
+        Seq("blk"), tau, usePrefix = Some(true), saltCandidates = Some(salt))).toSet
+      val broadcast = Seq(run(false), run(true))
+      val shuffled = shuffleForced(Seq(run(false), run(true)))
+      (broadcast ++ shuffled).forall(_ == expected)
+    })
+  }
+
+  /** Brute force over the signatures of `df`: every pair a < b, compared
+    * whole, no banded join.
+    */
+  private def sigPairs[S](df: org.apache.spark.sql.DataFrame, sig: Row => S)(
+      keep: (S, S) => Option[Double]): Set[(Long, Long, Double)] = {
+    val sigs = df.collect().map(r => (r.getLong(0), sig(r)))
+    (for {
+      (a, sa) <- sigs.toSeq; (b, sb) <- sigs.toSeq if a < b
+      v <- keep(sa, sb)
+    } yield (a, b, v)).toSet
+  }
+
+  test("lshPairs: broadcast = forced shuffle (identical pairs) = brute force on edge corpora") {
+    import graft.ops.MinHash
+    holds(10, 43L)(org.scalacheck.Prop.forAllNoShrink(dispatchCorpus) { docs =>
+      val df = toDf(docs)
+      def run() = rowsOf(MinHash.lshPairs(df, "doc_id", "text", Seq("blk"), 0.5))
+      val broadcast = run()
+      val shuffled = shuffleForced(run())
+      // a candidate shares one whole 4-hash band; its estimate is the
+      // matching share of all 32 hashes
+      val expected = sigPairs(MinHash.signatures(df, "doc_id", "text", 32),
+          _.getSeq[Long](1).toVector) { (sa, sb) =>
+        val est = sa.zip(sb).count { case (x, y) => x == y } / 32.0
+        val banded = sa.grouped(4).zip(sb.grouped(4)).exists { case (x, y) => x == y }
+        if (banded && est >= 0.5) Some(math.rint(est * 1e6) / 1e6) else None
+      }
+      broadcast == shuffled && broadcast.toSet == expected
+    })
+  }
+
+  test("hammingPairs: broadcast = forced shuffle (identical pairs) = brute force on edge corpora") {
+    import graft.ops.SimHash
+    holds(10, 48L)(org.scalacheck.Prop.forAllNoShrink(dispatchCorpus) { docs =>
+      val df = toDf(docs)
+      def run() = rowsOf(SimHash.hammingPairs(df, "doc_id", "text", Seq("blk"), 3))
+      val broadcast = run()
+      val shuffled = shuffleForced(run())
+      // radius 3 < 4 bands: pigeonhole makes every such pair a candidate
+      val expected = sigPairs(SimHash.signatures(df, "doc_id", "text"), _.getLong(1)) { (sa, sb) =>
+        val d = java.lang.Long.bitCount(sa ^ sb)
+        if (d <= 3) Some(d.toDouble) else None
+      }
+      broadcast == shuffled && broadcast.toSet == expected
+    })
+  }
+
+  /** Pin the size dispatch at `bytes`: a threshold of exactly `bytes`
+    * broadcasts, one byte less shuffles, with the same rows.
+    */
+  private def pinsThreshold(bytes: Long)(build: => org.apache.spark.sql.DataFrame): Unit = {
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    assert(bytes > 0)
+    val (atBound, rowsAt) = withSQLConf(threshold -> bytes.toString) {
+      val df = build; (hasBroadcastHint(df), rowsOf(df))
+    }
+    val (below, rowsBelow) = withSQLConf(threshold -> (bytes - 1).toString) {
+      val df = build; (hasBroadcastHint(df), rowsOf(df))
+    }
+    assert(atBound, s"no broadcast at a threshold of $bytes B")
+    assert(!below, s"broadcast at a threshold of ${bytes - 1} B")
+    assert(rowsAt.nonEmpty && rowsAt === rowsBelow)
+  }
+
+  private val nearCopies = List(
+    List("w1", "w2", "w3", "w4", "w5"), List("w1", "w2", "w3", "w4", "w6"),
+    List("w7", "w8", "w9"), List("w7", "w8", "w9"), List("w10", "w11"))
+
+  test("jaccard prefix join broadcasts exactly while its observed prefix index fits the threshold") {
+    import org.apache.spark.sql.functions._
+    val df = toDf(nearCopies)
+    val sets = SimilarityJoin.tokenized(df, "text")
+    val freq = sets.select(explode(col("tokens")).as("token")).groupBy("token")
+      .agg(count(lit(1)).as("df"))
+    val bytes = SimilarityJoin.rankedPrefixes(sets, "doc_id", "tokens", Seq("blk"), 0.6,
+      freq, Some(true)).bytes
+    pinsThreshold(bytes)(SimilarityJoin.jaccardSelfPrefix(df, "doc_id", "text", Seq("blk"), 0.6))
+  }
+
+  test("lshPairs broadcasts exactly while its observed band index fits the threshold") {
+    import graft.ops.MinHash
+    val df = toDf(nearCopies)
+    val bytes = MinHash.signedBands(df, "doc_id", "text", Seq("blk"), 32, 8).bytes
+    pinsThreshold(bytes)(MinHash.lshPairs(df, "doc_id", "text", Seq("blk"), 0.5))
+  }
+
+  test("hammingPairs broadcasts exactly while its observed band index fits the threshold") {
+    import graft.ops.SimHash
+    val df = toDf(nearCopies)
+    val bytes = SimHash.signedBands(df, "doc_id", "text", Seq("blk"), 4).bytes
+    pinsThreshold(bytes)(SimHash.hammingPairs(df, "doc_id", "text", Seq("blk"), 3))
+  }
 }

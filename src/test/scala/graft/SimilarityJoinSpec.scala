@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LogicalPlan}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import graft.ops.SimilarityJoin
 
@@ -195,7 +197,10 @@ class SimilarityJoinSpec extends SparkSpec {
     val skew = SimilarityJoin.vocabStats(SimilarityJoin.tokenized(docs, "text"), "tokens").skew
     info(f"extreme-skew corpus vocab skew = $skew%.1f")
     assert(skew >= SimilarityJoin.SaltSkewThreshold, s"corpus not extreme enough: $skew")
-    val auto = SimilarityJoin.jaccardSelfAuto(docs, "doc_id", "text", Seq("blk"), 0.5)
+    // a broadcast-sized prefix index is broadcast unsalted; threshold -1
+    // forces the shuffle join, which the skew salts
+    val auto = withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(
+      SimilarityJoin.jaccardSelfAuto(docs, "doc_id", "text", Seq("blk"), 0.5))
     // the salted join is the only source of a _salt attribute in the plan
     assert(auto.queryExecution.optimizedPlan.toString.contains("_salt"),
       "expected the salted candidate join at extreme skew")
@@ -204,8 +209,9 @@ class SimilarityJoinSpec extends SparkSpec {
     assert(exact.length === 150, "expected exactly the 150 twin pairs")
     assert(auto.collect().map(_.toString).toSeq === exact)
     // moderate skew (forced off) still takes the unsalted prefix plan
-    val unsalted = SimilarityJoin.jaccardSelfAuto(docs, "doc_id", "text", Seq("blk"), 0.5,
-      usePrefix = Some(true), saltCandidates = Some(false))
+    val unsalted = withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(
+      SimilarityJoin.jaccardSelfAuto(docs, "doc_id", "text", Seq("blk"), 0.5,
+        usePrefix = Some(true), saltCandidates = Some(false)))
     assert(!unsalted.queryExecution.optimizedPlan.toString.contains("_salt"))
     assert(unsalted.collect().map(_.toString).toSeq === exact)
   }
@@ -260,22 +266,38 @@ class SimilarityJoinSpec extends SparkSpec {
     }
   }
 
-  test("a cold jaccardSelfAuto build on fresh parquet runs one probe query, not two") {
-    // the skew probe's vocabulary size also decides the prefix plan's
-    // frequency-relation broadcast, so no separate bounded-count probe runs
+  test("cold jaccardSelfAuto build: only the frequency and ranked checkpoints run") {
+    // the skew probe IS the frequency checkpoint (its statistics ride that
+    // job), the prefix plan joins it into the ranked checkpoint, and no
+    // separate bounded-count broadcast probe runs
     val dir = java.nio.file.Files.createTempDirectory("autoprobe").toFile
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[(String, LogicalPlan)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = actions.add((f, qe.analyzed))
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = actions.add((f, qe.analyzed))
+    }
     try {
       extremeSkewCorpus(300).write.mode("overwrite").parquet(dir.toString)
       val docs = spark.read.parquet(dir.toString)
+      spark.listenerManager.register(listener)
       val (auto, jobs) = jobsOf(
         SimilarityJoin.jaccardSelfAuto(docs, "doc_id", "text", Seq("blk"), 0.5))
+      spark.listenerManager.unregister(listener)
       val queries = jobs.map(_.getProperty("spark.sql.execution.id")).distinct
-      assert(queries.size === 1, s"build ran ${queries.size} probe queries")
+      assert(queries.size === 2, s"build ran ${queries.size} queries")
+      val seen = actions.toArray(Array.empty[(String, LogicalPlan)]).toSeq
+      assert(seen.map(_._1) === Seq("localCheckpoint", "localCheckpoint"))
+      assert(seen(0)._2.output.map(_.name) === Seq("token", "df"), "the frequency relation")
+      assert(Seq("sorted_tokens", "prefix").forall(seen(1)._2.output.map(_.name).contains),
+        "the ranked relation")
+      assert(!seen.exists(_._2.exists(_.isInstanceOf[GlobalLimit])),
+        "a limit(max+1) count probe ran")
       assert(auto.queryExecution.optimizedPlan.toString.contains("array_intersect"),
         "expected the prefix branch on this corpus")
       val exact = SimilarityJoin.jaccardSelf(docs, "doc_id", "text", Seq("blk"), 0.5)
       assert(auto.collect().map(_.toString).toSeq === exact.collect().map(_.toString).toSeq)
     } finally {
+      spark.listenerManager.unregister(listener)
       org.apache.commons.io.FileUtils.deleteQuietly(dir)
       ()
     }
