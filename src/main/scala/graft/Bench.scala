@@ -46,16 +46,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val load1Start = load1()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.builder(cpus).getOrCreate()
     // Warm the JVM, codegen pipeline, and parquet reader once so the first
     // measured query reflects query cost, not session startup. Graded
     // queries are NOT pre-run.

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc BPE training-scale probe: `runMain graft.BpeBench <nMerges> <batchSize>`
   * under SPARK_GRAFT_SF_DIR/SPARK_GRAFT_CPUS — measures [[ops.Bpe.learnMerges]]
   * at production-ish merge counts (the r8 verdict's 50k-vocab question).
@@ -12,15 +10,7 @@ object BpeBench {
     val nMerges = args.headOption.map(_.toInt).getOrElse(1000)
     val batch = args.lift(1).map(_.toInt).getOrElse(64)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder().getOrCreate()
     spark.range(1000000).selectExpr("sum(id)").collect()
     // "stress": the sf0.1 documents vocabulary exhausts after ~90 merges
     // (every word fully fused), which cannot exercise production merge

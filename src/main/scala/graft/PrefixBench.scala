@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Micro-benchmark: exact inverted-index Jaccard join vs the PPJoin
@@ -12,12 +11,7 @@ import org.apache.spark.sql.functions._
 object PrefixBench {
   def main(args: Array[String]): Unit = {
     val mult = if (args.nonEmpty) args(0).toInt else 1
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.builder().getOrCreate()
     val base = Tables.documents(spark, "/root/testdata/sf0.1")
     val docs = (0 until mult).map { i =>
       base.withColumn("doc_id", col("doc_id") + lit(i * 10000000L))

@@ -1,19 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Mirrors the driver's t1 smoke: run SparkEntry.entry, assert rows > 0. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder().getOrCreate()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

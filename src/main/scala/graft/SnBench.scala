@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for [[graft.ops.SortedNeighborhood]] (BASELINE.md records
@@ -15,14 +14,7 @@ import org.apache.spark.sql.functions._
 object SnBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder().getOrCreate()
     spark.range(1000000).selectExpr("sum(id)").collect() // JVM warm-up
     val df = spark.range(n)
       .select(col("id").as("key"), md5(col("id").cast("string")).as("name"))

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.{AtomicCommit, DataSkipping}
@@ -42,16 +41,7 @@ object TableBench {
     }
     val n = args.headOption.map(_.toLong).getOrElse(4000000L)
     val p = args.drop(1).headOption.map(_.toInt).getOrElse(200)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the runtime-filter probe below needs the injected AQE rule
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder().getOrCreate()
     spark.range(1000000).selectExpr("sum(id)").collect() // JVM warm-up
 
     def timed[A](label: String)(body: => A): A = {
@@ -980,15 +970,7 @@ object TableBench {
     * Usage: runMain graft.TableBench skew [N] [P]
     */
   private def skewProbe(n: Long, p: Int): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder().getOrCreate()
     spark.range(1000000).selectExpr("sum(id)").collect()
     def timed[A](label: String)(body: => A): A = {
       val t0 = System.nanoTime(); val a = body
@@ -1066,15 +1048,7 @@ object TableBench {
     * (BASELINE.md records the curve at P = 200 / 5,000 / 50,000.)
     */
   private def metaProbe(n: Long, p: Int): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder().getOrCreate()
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     def timedMs[A](label: String)(body: => A): A = {

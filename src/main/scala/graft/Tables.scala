@@ -26,10 +26,13 @@ object Tables {
     * session conf matters to inference (nanosAsLong surfaces INT64-nanos
     * as LongType, inferTimestampNTZ decides NTZ vs TIMESTAMP), so a schema
     * is only reused by a session whose parquet confs match the inferring
-    * one's.
+    * one's. Past [[SchemaMemoBound]] entries it starts over: every fresh
+    * table path adds a key that may never be read again.
     */
   private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()
+  private[graft] val SchemaMemoBound = 64
+  private[graft] def schemaMemoSize: Int = schemaMemo.size
 
   /** Every parquet conf the session set explicitly, in key order. The
     * unset ones hold the JVM-wide defaults, the same for every session;
@@ -69,6 +72,7 @@ object Tables {
           if (hit != null) hit
           else {
             val s = spark.read.parquet(path).schema
+            if (schemaMemo.size >= SchemaMemoBound) schemaMemo.clear()
             schemaMemo.put(key, s); s
           }
         spark.read.schema(schema).parquet(path)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,16 +10,7 @@ object Verify {
     // .json is still written in full so parity.py finds every oracle.
     val only: Option[Seq[String]] =
       if (args.length > 2) Some(args(2).split(',').toSeq) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder().getOrCreate()
     new java.io.File(outDir).mkdirs()
     // stale-dump guard (dev-loop): a filtered dump must not leave OTHER
     // queries' previous parquet results in outDir, where parity.py would

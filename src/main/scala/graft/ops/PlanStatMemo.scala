@@ -23,7 +23,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *    the same files can share a key. A colliding probe recomputes and
   *    takes the entry over;
   *  - JVM-lifetime only, NEVER persisted — a fresh run always recomputes
-  *    from the parquet inputs;
+  *    from the parquet inputs; past [[Bound]] entries (each holds an
+  *    analyzed plan) the memo starts over;
   *  - non-file-backed inputs (in-memory test relations) never memoize,
   *    so every dispatch spec still executes its probe for real.
   */
@@ -32,6 +33,8 @@ object PlanStatMemo {
   /** key → (the analyzed plan the statistic was computed on, statistic) */
   private val memo = new java.util.concurrent.ConcurrentHashMap[String, (LogicalPlan, Any)]()
 
+  private[graft] val Bound = 64
+  private[graft] def size: Int = memo.size
   private[graft] def lookup(k: String): Option[Any] = Option(memo.get(k)).map(_._2)
   private[graft] def clear(): Unit = memo.clear()
 
@@ -63,7 +66,11 @@ object PlanStatMemo {
         val plan = df.queryExecution.analyzed
         val hit = memo.get(k)
         if (hit != null && hit._1.sameResult(plan)) hit._2.asInstanceOf[T]
-        else { val v = compute; memo.put(k, (plan, v)); v }
+        else {
+          val v = compute
+          if (memo.size >= Bound) memo.clear()
+          memo.put(k, (plan, v)); v
+        }
       case None => compute
     }
 

@@ -51,4 +51,20 @@ class PlanStatMemoSpec extends SparkSpec {
       ()
     }
   }
+
+  test("past Bound entries the memo starts over, and the newest entry still hits") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("memobound").toFile
+    try {
+      Seq((1L, "a")).toDF("doc_id", "text").write.mode("overwrite").parquet(dir.toString)
+      val df = spark.read.parquet(dir.toString)
+      val last = PlanStatMemo.Bound
+      (0 to last).foreach(i => assert(PlanStatMemo.cached(df, s"bound:$i")(i) === i))
+      assert(PlanStatMemo.size <= PlanStatMemo.Bound)
+      assert(PlanStatMemo.cached(df, s"bound:$last")(-1) === last)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(dir)
+      ()
+    }
+  }
 }

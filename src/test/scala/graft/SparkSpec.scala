@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared session fixture mirroring the driver harness config
-  * (Verify.scala: local[4], shuffle=4, UTC, UI off).
+/** Shared session fixture: the graded config ([[GraftSession]]) at four
+  * cores, plus a temporary warehouse dir.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -51,15 +51,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  /** Four cores whatever SPARK_GRAFT_CPUS says, so spec plans do not
+    * depend on the host.
+    */
+  lazy val session: SparkSession = GraftSession.builder(cpus = 4)
     .appName("graft-test")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
     .getOrCreate()
 }

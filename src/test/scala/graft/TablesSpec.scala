@@ -72,4 +72,57 @@ class TablesSpec extends SparkSpec {
       ()
     }
   }
+
+  test("graft-table schema memos give a session with other parquet confs what it would infer itself") {
+    // GraftFileIndex and AtomicCommit memoize a graft table's schema per
+    // (root, generation / manifest), without the session's parquet confs.
+    // That is sound because graft writes every file through Spark, which
+    // records the schema in the footer, and a footer schema overrides
+    // inference confs: TIMESTAMP_NTZ stays NTZ under inferTimestampNTZ=false.
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_ntz").toString
+    try {
+      graft.sources.AtomicCommit.commitReplacePartitions(spark, root,
+        Seq((1L, "a"), (2L, "b")).toDF("k", "p")
+          .selectExpr("k", "p", "timestamp_ntz'2024-01-01 00:00:00' AS ts"), "p")
+      def viaGraft(s: org.apache.spark.sql.SparkSession) =
+        s.read.format("graft").option("path", root).load().schema("ts").dataType
+      def viaCommit(s: org.apache.spark.sql.SparkSession) =
+        graft.sources.AtomicCommit.read(s, root).schema("ts").dataType
+      assert(viaGraft(spark) === TimestampNTZType)
+      assert(viaCommit(spark) === TimestampNTZType)
+      val other = spark.newSession()
+      other.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      val file = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+        .filter(_.toString.endsWith(".parquet")).findFirst().get
+      val inferred = other.read.parquet(file.toString).schema("ts").dataType
+      assert(viaGraft(other) === inferred)
+      assert(viaCommit(other) === inferred)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+      ()
+    }
+  }
+
+  test("the schema memo starts over past SchemaMemoBound entries") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("schemabound")
+    try {
+      Seq(1L).toDF("k").coalesce(1).write.parquet(dir.resolve("src").toString)
+      val part = java.nio.file.Files.list(dir.resolve("src"))
+        .filter(_.toString.endsWith(".parquet")).findFirst().get
+      // one fresh table path per key, as every dedup batch directory is
+      val n = Tables.SchemaMemoBound + 1
+      (0 until n).foreach { i =>
+        val t = java.nio.file.Files.createDirectories(dir.resolve(s"sf$i/t.parquet"))
+        java.nio.file.Files.copy(part, t.resolve(part.getFileName))
+        assert(Tables.load(spark, s"$dir/sf$i", "t").columns.toSeq === Seq("k"))
+      }
+      assert(Tables.schemaMemoSize <= Tables.SchemaMemoBound)
+      assert(Tables.schemaMemoSize > 0)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+      ()
+    }
+  }
 }
