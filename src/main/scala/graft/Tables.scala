@@ -20,8 +20,8 @@ object Tables {
     * `spark.read.parquet(path)` call re-infers the schema from parquet
     * footers, measured at 53–73 ms per call on this corpus — and the
     * graded bench constructs every query 3–5 times. Keyed on the
-    * (path, mtime, size) fingerprint of every file under the table path
-    * PLUS the session's parquet confs ([[inferenceConfs]]);
+    * [[FileFingerprint]] (path, mtime, size) of every file under the table
+    * path PLUS the session's parquet confs ([[inferenceConfs]]);
     * JVM-lifetime only, never persisted; any rewrite re-infers. The
     * session conf matters to inference (nanosAsLong surfaces INT64-nanos
     * as LongType, inferTimestampNTZ decides NTZ vs TIMESTAMP), so a schema
@@ -45,26 +45,9 @@ object Tables {
         k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") }
       .toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(",")
 
-  private def tableFingerprint(path: String): Option[String] =
-    try {
-      val root = java.nio.file.Paths.get(path)
-      if (!java.nio.file.Files.exists(root)) None
-      else {
-        val files = new scala.collection.mutable.ArrayBuffer[String]()
-        java.nio.file.Files.walk(root, 3).forEach { p =>
-          if (java.nio.file.Files.isRegularFile(p)) {
-            val a = java.nio.file.Files.readAttributes(
-              p, classOf[java.nio.file.attribute.BasicFileAttributes])
-            files += s"$p:${a.lastModifiedTime.toMillis}:${a.size}"
-          }
-        }
-        Some(files.sorted.mkString(","))
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    tableFingerprint(path) match {
+    FileFingerprint.of(spark, Seq(path)) match {
       case Some(fp) =>
         val key = s"$path|${inferenceConfs(spark)}|$fp"
         val hit = schemaMemo.get(key)

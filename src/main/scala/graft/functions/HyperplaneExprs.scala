@@ -166,13 +166,9 @@ object HyperplaneExprs {
   /** Idempotent session registration of both projection kernels (also the
     * raw-SQL surface for building LSH pipelines in pure SQL).
     */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hp_scores", exprs => HyperplaneScores(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hp_bands", exprs => HyperplaneBands(exprs.head, exprs(1), exprs(2)),
-      "built-in")
-  }
+  def register(spark: SparkSession): Unit = Registration.ifAbsent(spark,
+    ("graft_hp_scores", exprs => HyperplaneScores(exprs.head, exprs(1))),
+    ("graft_hp_bands", exprs => HyperplaneBands(exprs.head, exprs(1), exprs(2))))
 
   def hpScores(vec: Column, planesFlat: Column): Column =
     call_function("graft_hp_scores", vec, planesFlat)

@@ -133,10 +133,8 @@ case class PqEncode(first: Expression, second: Expression,
 
 object PqExprs {
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_encode",
-      exprs => PqEncode(exprs.head, exprs(1), exprs(2), exprs(3)), "built-in")
+  def register(spark: SparkSession): Unit = Registration.ifAbsent(spark,
+    ("graft_pq_encode", exprs => PqEncode(exprs.head, exprs(1), exprs(2), exprs(3))))
 
   def pqEncode(vec: Column, codebookFlat: Column, m: Column, k: Column): Column =
     call_function("graft_pq_encode", vec, codebookFlat, m, k)

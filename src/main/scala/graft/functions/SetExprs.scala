@@ -157,12 +157,9 @@ object SetExprs {
     * GraftExtensions conf); extension-built sessions get the function
     * injected at build time instead.
     */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => SetJaccard(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles", exprs => WordShingles(exprs.head, exprs(1)), "built-in")
-  }
+  def register(spark: SparkSession): Unit = Registration.ifAbsent(spark,
+    (name, exprs => SetJaccard(exprs.head, exprs(1))),
+    ("graft_shingles", exprs => WordShingles(exprs.head, exprs(1))))
 
   /** Column-level distinct word n-gram shingles (codegen'd kernel). */
   def shinglesCol(tokens: Column, n: Column): Column =

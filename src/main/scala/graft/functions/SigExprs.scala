@@ -164,12 +164,9 @@ object SigExprs {
   /** Idempotent session registration — also the raw-SQL surface for
     * building sketch pipelines in pure SQL.
     */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_sig", exprs => MinHashSig(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash_sig", exprs => SimHashSig(exprs.head), "built-in")
-  }
+  def register(spark: SparkSession): Unit = Registration.ifAbsent(spark,
+    ("graft_minhash_sig", exprs => MinHashSig(exprs.head, exprs(1))),
+    ("graft_simhash_sig", exprs => SimHashSig(exprs.head)))
 
   def minhashSig(tokens: Column, paramsFlat: Column): Column =
     call_function("graft_minhash_sig", tokens, paramsFlat)

@@ -153,11 +153,8 @@ case class FreqItemsSketch(
 
 object SketchExprs {
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_freq_items",
-      exprs => FreqItemsSketch(exprs.head, exprs(1)).toAggregateExpression(),
-      "built-in")
+  def register(spark: SparkSession): Unit = Registration.ifAbsent(spark,
+    ("graft_freq_items", exprs => FreqItemsSketch(exprs.head, exprs(1)).toAggregateExpression()))
 
   def freqItems(item: Column, capacity: Column): Column =
     call_function("graft_freq_items", item, capacity)

@@ -149,12 +149,9 @@ case class NfcNormalize(child: Expression)
 
 object StringExprs {
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jaro_winkler", exprs => JaroWinkler(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc", exprs => NfcNormalize(exprs.head), "built-in")
-  }
+  def register(spark: SparkSession): Unit = Registration.ifAbsent(spark,
+    ("graft_jaro_winkler", exprs => JaroWinkler(exprs.head, exprs(1))),
+    ("graft_nfc", exprs => NfcNormalize(exprs.head)))
 
   def jaroWinkler(a: Column, b: Column): Column =
     call_function("graft_jaro_winkler", a, b)

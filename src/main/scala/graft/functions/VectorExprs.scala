@@ -102,12 +102,9 @@ object VectorExprs {
     * `graft_dot(a, b)` / `graft_cosine(a, b)` available to raw-SQL users of
     * the library.
     */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => DotProduct(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", exprs => cosineExpr(exprs.head, exprs(1)), "built-in")
-  }
+  def register(spark: SparkSession): Unit = Registration.ifAbsent(spark,
+    (name, exprs => DotProduct(exprs.head, exprs(1))),
+    ("graft_cosine", exprs => cosineExpr(exprs.head, exprs(1))))
 
   /** Column-level dot product; caller must have run [[register]] on the
     * executing session (every graft vector operator does).

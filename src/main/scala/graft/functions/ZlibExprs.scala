@@ -84,9 +84,8 @@ case class CompressionRatio(child: Expression) extends UnaryExpression {
 
 object ZlibExprs {
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_compression_ratio", exprs => CompressionRatio(exprs.head), "built-in")
+  def register(spark: SparkSession): Unit = Registration.ifAbsent(spark,
+    ("graft_compression_ratio", exprs => CompressionRatio(exprs.head)))
 
   def compressionRatio(c: Column): Column =
     call_function("graft_compression_ratio", c)

@@ -15,10 +15,11 @@ import graft.Det
   *    computed distributed; nothing is collected to the driver — the 1-row
   *    stats relation is crossJoin-broadcast.
   *  - the corpus token stream is FIRST restricted to the query vocabulary
-  *    (a broadcast semi-join when the query side is provably small — gated
-  *    by a bounded `limit(n+1).count()` probe, never assumed), so tf/df
-  *    aggregate only matching terms, not the whole corpus vocabulary.
-  *  - scoring joins are per-term equi-joins; the per-query top-k is a
+  *    (a semi-join, which Spark broadcasts when the query side is small),
+  *    so tf/df aggregate only matching terms, not the whole corpus
+  *    vocabulary.
+  *  - scoring joins are per-term equi-joins, planned by Spark's size-based
+  *    join selection and AQE; the per-query top-k is a
   *    window partitioned by q_id — parallel across queries, and each
   *    query's candidate set is bounded by Σ df(term) over its terms.
   *
@@ -28,28 +29,15 @@ import graft.Det
   */
 object Bm25 {
 
-  /** Max query-relation rows eligible for broadcast — same bound and
-    * rationale as [[SimilarityJoin.MaxBroadcastQueries]].
-    */
-  val MaxBroadcastQueries: Long = SimilarityJoin.MaxBroadcastQueries
-
   /** Score each query document's DISTINCT tokens against the corpus;
     * return the top `k` documents per query.
     *
     * Output: (q_id, rnk, doc_id, score ROUND 6), totally ordered by
     * (q_id, rnk); rnk orders by (score DESC, doc_id).
-    *
-    * `queriesBroadcast`: `Some(b)` skips the bounded size probe (callers
-    * at scale know their query-set size).
     */
   def scoreRS(queries: DataFrame, qIdCol: String, qTextCol: String,
               docs: DataFrame, idCol: String, textCol: String,
-              k: Int, k1: Double = 1.2, b: Double = 0.75,
-              queriesBroadcast: Option[Boolean] = None): DataFrame = {
-    val qSmall = queriesBroadcast.getOrElse(
-      PlanStatMemo.boundedBy(queries, MaxBroadcastQueries))
-    def maybeBroadcast(df: DataFrame): DataFrame = if (qSmall) broadcast(df) else df
-
+              k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     // query terms: distinct per query (classic BM25 drops query-side tf for
     // short queries; q68's fixed-term form has the same semantics)
     val qTerms = queries.select(col(qIdCol).as("q_id"),
@@ -60,7 +48,7 @@ object Bm25 {
     // aggregation — tf/df shuffle only matching terms
     val toks = docs.select(col(idCol).as("doc_id"),
         explode(split(col(textCol), " +")).as("tok"))
-      .join(maybeBroadcast(qVocab), Seq("tok"), "left_semi")
+      .join(qVocab, Seq("tok"), "left_semi")
 
     val dl = docs.select(col(idCol).as("doc_id"),
       size(split(col(textCol), " +")).cast("double").as("dl"))
@@ -79,10 +67,9 @@ object Bm25 {
         / (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl"))))
 
     val w = Window.partitionBy("q_id").orderBy(col("score").desc, col("doc_id"))
-    // df has ≤ |query vocabulary| rows, so its broadcastability follows the
-    // query side's probe — an open query set falls back to shuffle joins
-    tf.join(maybeBroadcast(qTerms), "tok")
-      .join(maybeBroadcast(df), "tok")
+    // df has ≤ |query vocabulary| rows: as small as the query side
+    tf.join(qTerms, "tok")
+      .join(df, "tok")
       .join(dl, "doc_id")
       .crossJoin(broadcast(stats))
       .withColumn("contrib", contrib)

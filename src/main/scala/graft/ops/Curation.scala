@@ -68,9 +68,8 @@ object Curation {
     // relation — the ONLY corpus-order-free window, bounded by score
     // cardinality however large the key is. Materialized (eager
     // localCheckpoint): the relation is derived from a full-corpus
-    // aggregation and consumed THREE times (broadcast probe, whole-bucket
-    // join, boundary join) — unmaterialized, each consumer would re-scan
-    // the corpus. localCheckpoint over persist (r8 ADVICE): cached blocks
+    // aggregation and consumed twice (whole-bucket join, boundary join) —
+    // unmaterialized, each consumer would re-scan the corpus. localCheckpoint over persist (r8 ADVICE): cached blocks
     // are pinned by the CacheManager until explicitly unpersisted, which
     // forced a process-global "previous call" reference that could yank
     // the cache out from under an earlier call's still-unconsumed result;
@@ -96,19 +95,18 @@ object Curation {
     val meta = Seq("graft_b_tok", "graft_b_cum", "graft_key_tok", "graft_b_prev")
 
     // phase 1: whole buckets — plain equi-join, no per-doc window
-    val whole = docs.join(
-      broadcastIfSmall(buckets.filter(fits).select(keyCol, scoreCol)),
+    val whole = docs.join(buckets.filter(fits).select(keyCol, scoreCol),
       Seq(keyCol, scoreCol))
 
     // phase 2: the boundary bucket's docs only, id-ordered, offset-seeded;
-    // the straddler relation is ≤ 1 row per key — broadcast it (same
-    // bounded probe) so restricting the corpus to boundary docs is a
-    // map-side semi-join, not a corpus shuffle
+    // the straddler relation is ≤ 1 row per key, so Spark (or AQE, from the
+    // checkpoint's real size) broadcasts it and restricting the corpus to
+    // boundary docs is a map-side join, not a corpus shuffle
     val wId = Window.partitionBy(keyCol, scoreCol).orderBy(col(idCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val boundary = docs.join(
-      broadcastIfSmall(buckets.filter(straddles)
-        .select(col(keyCol), col(scoreCol), col("graft_b_prev"), col("graft_key_tok"))),
+      buckets.filter(straddles)
+        .select(col(keyCol), col(scoreCol), col("graft_b_prev"), col("graft_key_tok")),
       Seq(keyCol, scoreCol))
       .withColumn("graft_d_cum",
         col("graft_b_prev") + sum(col(tokCol)).over(wId))
@@ -117,12 +115,4 @@ object Curation {
 
     whole.drop(meta: _*).unionByName(boundary.drop(meta: _*))
   }
-
-  /** The bucket relations are distinct-score-sized; at realistic score
-    * cardinalities they broadcast, at degenerate ones (score = id) they
-    * must not — probe with a bounded count, the SimilarityJoin gate
-    * pattern.
-    */
-  private def broadcastIfSmall(df: DataFrame, limit: Long = 100000L): DataFrame =
-    if (PlanStatMemo.boundedBy(df, limit)) broadcast(df) else df
 }

@@ -49,15 +49,6 @@ object EditDistanceJoin {
     */
   val MaxBroadcastDomain: Long = 8192
 
-  /** Max matched-pair rows the symmetrized pair relation may hold and still
-    * broadcast for the expansion joins. A domain passing the
-    * [[MaxBroadcastDomain]] probe bounds the COMPARISON count, not the
-    * MATCH count — a dense near-duplicate domain near 8k strings can emit
-    * tens of millions of matched pairs (r5 ADVICE), so the broadcast is
-    * gated on a second bounded probe of the pair relation itself.
-    */
-  val MaxBroadcastPairs: Long = 4L << 20
-
   /** Distinct-domain edit-distance self-join — same contract as
     * [[selfJoin]], evaluated on the distinct-STRING domain first.
     *
@@ -71,10 +62,13 @@ object EditDistanceJoin {
     *
     * Plan: distinct(s) → pair-gen on the domain (broadcast all-pairs with
     * length prune below [[MaxBroadcastDomain]]; the [[selfJoin]] gram-prefix
-    * index above it — `domainBroadcast` skips the bounded auto-probe, same
-    * protocol as `vocabBroadcast`) → symmetrize + add (s, s, 0) self-pairs →
-    * two expansion equi-joins back to ids on (string, block…), output-bound.
-    * No collect; the only driver-visible number is the bounded probe count.
+    * index above it — `domainBroadcast` skips the bounded auto-probe) →
+    * symmetrize + add (s, s, 0) self-pairs → two expansion equi-joins back
+    * to ids on (string, block…), output-bound. The domain probe is an
+    * algorithm choice; the expansion joins are plain joins that Spark plans
+    * from sizes (the domain bounds comparisons, not matches, so the pair
+    * relation's size is known only at run time). No collect; the only
+    * driver-visible number is the domain probe's bounded count.
     */
   def selfJoinDistinct(df: DataFrame, idCol: String, strCol: String,
                        blockCols: Seq[String], k: Int, q: Int = 2,
@@ -98,8 +92,8 @@ object EditDistanceJoin {
         // open domain: gram-prefix candidates over distinct strings; the
         // string is its own (totally ordered) id. The q-gram vocabulary is
         // structurally ≤ |charset|^q — always broadcastable.
-        selfJoin(strs.withColumn("blk", lit(1)), "s", "s", Seq("blk"), k, q,
-            vocabBroadcast = Some(true))
+        gramJoin(strs.withColumn("blk", lit(1)), "s", "s", Seq("blk"), k, q,
+            broadcastGrams = true)
           .select(col("a_id").as("l_s"), col("b_id").as("r_s"), col("dist"))
       }
 
@@ -115,13 +109,7 @@ object EditDistanceJoin {
     val b = df.select(col(idCol).as("b_id") +: col(strCol).as("b_s") +:
       blockCols.map(c => col(c).as(s"b_$c")): _*)
     val blockEq = blockCols.map(c => col(c) === col(s"b_$c"))
-    // broadcast only when the PAIR relation is provably bounded too: the
-    // domain probe caps comparisons, not matches — a dense near-dup domain
-    // can pass it and still emit tens of millions of pairs. Same bounded
-    // limit(max+1).count() protocol; sym adds ≤ 2·|strict| + |domain| rows.
-    val symSmall = small &&
-      PlanStatMemo.boundedBy(strict, MaxBroadcastPairs)
-    a.join(if (symSmall) broadcast(sym) else sym, "l_s")
+    a.join(sym, "l_s")
       .join(b, (blockEq :+ (col("r_s") === col("b_s")))
         .reduce(_ && _) && col("a_id") < col("b_id"))
       .select(col("a_id") +: col("b_id") +: blockCols.map(col) :+ col("dist"): _*)
@@ -131,13 +119,17 @@ object EditDistanceJoin {
   /** All pairs (a, b) with a.id < b.id, equal block keys, and
     * edit-distance(a.str, b.str) ≤ k. Output: (a_id, b_id, blockCols…,
     * dist), totally ordered by (a_id, b_id).
-    *
-    * `vocabBroadcast` dispatches the gram-frequency join exactly like
-    * [[SimilarityJoin.freqJoined]] (None = bounded auto-probe).
     */
   def selfJoin(df: DataFrame, idCol: String, strCol: String,
-               blockCols: Seq[String], k: Int, q: Int = 2,
-               vocabBroadcast: Option[Boolean] = None): DataFrame = {
+               blockCols: Seq[String], k: Int, q: Int = 2): DataFrame =
+    gramJoin(df, idCol, strCol, blockCols, k, q, broadcastGrams = false)
+
+  /** [[selfJoin]], broadcasting the gram-frequency relation when
+    * `broadcastGrams` (a caller that knows the gram vocabulary is small).
+    */
+  private def gramJoin(df: DataFrame, idCol: String, strCol: String,
+                       blockCols: Seq[String], k: Int, q: Int,
+                       broadcastGrams: Boolean): DataFrame = {
     require(k >= 0 && q >= 1, s"need k >= 0 and q >= 1, got k=$k q=$q")
     val n = df.sparkSession.sessionState.conf.numShufflePartitions
     val prefLen = q * k + 1
@@ -168,7 +160,7 @@ object EditDistanceJoin {
     val ranked = SimilarityJoin.freqJoined(
         longs.select(col("id") +: col("len") +: col("s") +: blockCols.map(col) :+
           explode(col("grams")).as("gram"): _*),
-        freq, "gram", vocabBroadcast)
+        freq, "gram", broadcastGrams)
       .groupBy(col("id") +: col("len") +: col("s") +: blockCols.map(col): _*)
       .agg(sort_array(collect_list(struct(col("df"), col("gram")))).as("rg"))
       .withColumn("prefix", slice(col("rg.gram"), 1, prefLen))

@@ -27,10 +27,11 @@ import graft.Det
   *    partial aggregation (Spark always plans partial+final hash agg) keeps
   *    the shuffle proportional to distinct candidate pairs, not candidate
   *    token matches.
-  *  - nothing touches the driver: no collect, no broadcast of anything
-  *    unbounded (the token→df relation broadcasts only below
-  *    [[SimilarityJoin.MaxBroadcastVocab]] rows; an open vocabulary is
-  *    dispatched to a shuffle equi-join — the plan is otherwise unchanged).
+  *  - nothing touches the driver: no collect, and no broadcast hint on a
+  *    relation whose size the operator has not observed. The token→df
+  *    relation is hinted only when the auto dispatch's [[vocabStats]] job
+  *    saw at most [[SimilarityJoin.MaxBroadcastVocab]] tokens; every other
+  *    join is left to Spark's size-based join selection and AQE.
   *  - no global single-partition window anywhere: the q35 rank is computed
   *    per-df with broadcast offsets from the tiny df-histogram.
   *
@@ -51,23 +52,14 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
   val MaxBroadcastVocab: Long = 4L << 20
 
   /** Join an exploded (…, `key`) relation with its element-frequency
-    * relation, dispatching on vocabulary size: broadcast when the
-    * vocabulary is provably small, plain shuffle equi-join otherwise.
-    *
-    * `forceBroadcast`: `Some(b)` skips the probe (callers at scale know
-    * their vocabulary); `None` auto-probes with a bounded `limit(max+1)
-    * .count()` — the limit caps the probe's work regardless of true
-    * vocabulary size, at the cost of one extra bounded pass over the
-    * aggregation (at 100 TB pass `Some(false)` instead and skip it).
+    * relation: broadcast when the caller already knows the vocabulary is
+    * small (an observed size or a structural bound), otherwise a plain
+    * equi-join that Spark plans from its size estimates.
     */
   private[graft] def freqJoined(exploded: DataFrame, freq: DataFrame, key: String,
-                                forceBroadcast: Option[Boolean],
-                                joinType: String = "inner"): DataFrame = {
-    val small = forceBroadcast.getOrElse(
-      PlanStatMemo.boundedBy(freq, MaxBroadcastVocab))
-    if (small) exploded.join(broadcast(freq), Seq(key), joinType)
-    else exploded.join(freq, Seq(key), joinType)
-  }
+                                broadcastFreq: Boolean,
+                                joinType: String = "inner"): DataFrame =
+    exploded.join(if (broadcastFreq) broadcast(freq) else freq, Seq(key), joinType)
 
   /** Tokenize + dedupe: adds `tokens` (distinct) and `sz` columns. */
   def tokenized(df: DataFrame, textCol: String): DataFrame =
@@ -121,7 +113,7 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
     * 1.0 on an empty vocabulary.
     *
     * `size` = distinct elements: the prefix plan's frequency relation
-    * broadcasts while `size` ≤ [[MaxBroadcastVocab]] (see [[freqJoined]]).
+    * broadcasts while `size` ≤ [[MaxBroadcastVocab]].
     */
   final case class VocabStats(skew: Double, size: Long)
 
@@ -171,23 +163,22 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
 
   /** Decide the auto dispatch: (prefix, salted, vocabulary broadcast).
     * The stats probe runs unless both plan choices are forced, or the
-    * exact branch is forced (it has no frequency relation); the broadcast
-    * choice reuses the probed vocabulary size, and is left to
-    * [[freqJoined]]'s own probe only when no stats were taken.
+    * exact branch is forced (it has no frequency relation). The broadcast
+    * choice reuses the probed vocabulary size; with no stats taken the
+    * frequency join is left to Spark.
     */
   private def autoPlan(site: String, stats: => VocabStats,
                        usePrefix: Option[Boolean],
-                       saltCandidates: Option[Boolean]): (Boolean, Boolean, Option[Boolean]) = {
+                       saltCandidates: Option[Boolean]): (Boolean, Boolean, Boolean) = {
     val probed = !usePrefix.contains(false) && (usePrefix.isEmpty || saltCandidates.isEmpty)
     lazy val st = stats
     val prefix = usePrefix.getOrElse(st.skew >= PrefixSkewThreshold)
     val salted = prefix && saltCandidates.getOrElse(st.skew >= SaltSkewThreshold)
-    val vocabBroadcast = if (probed) Some(st.size <= MaxBroadcastVocab) else None
+    val vocabBroadcast = probed && st.size <= MaxBroadcastVocab
     val branch = if (!prefix) "exact" else if (salted) "prefix, salted" else "prefix"
     logInfo(s"$site: " +
       (if (probed) f"vocab skew ${st.skew}%.3f over ${st.size} tokens" else "forced") +
-      s" -> $branch" +
-      (if (prefix) s", vocab broadcast ${vocabBroadcast.fold("probe")(_.toString)}" else ""))
+      s" -> $branch" + (if (prefix) s", vocab broadcast $vocabBroadcast" else ""))
     (prefix, salted, vocabBroadcast)
   }
 
@@ -243,11 +234,11 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
                       saltCandidates: Option[Boolean] = None,
                       sorted: Boolean = true): DataFrame = {
     val sets = tokenized(docs, textCol)
-    lazy val vocab = vocabulary(sets, "tokens")
+    // set only when the probe runs and misses the memo
+    var freq: Option[DataFrame] = None
     val (prefix, salted, vocabBroadcast) = autoPlan("jaccardSelfAuto",
-      vocab._1, usePrefix, saltCandidates)
-    // vocabBroadcast is defined exactly when the probe ran
-    val freq = vocabBroadcast.flatMap(_ => vocab._2)
+      { val (st, cp) = vocabulary(sets, "tokens"); freq = cp; st },
+      usePrefix, saltCandidates)
     val out =
       if (prefix) prefixSelfJoin(sets, idCol, "tokens", blockCols, tau,
         freq.getOrElse(frequencies(sets, "tokens")), vocabBroadcast,
@@ -382,13 +373,6 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
     * pure candidate filter. Output (q_id, d_id, contain ROUND 6), totally
     * ordered.
     */
-  /** Max query-side rows the containment join may broadcast: eval sets are
-    * small by the operator's nature, but the broadcast is still GATED by a
-    * bounded probe (the r3 `broadcast(freq)` lesson: never broadcast on an
-    * assumption) — an over-bound query side dispatches to shuffle joins.
-    */
-  val MaxBroadcastQueries: Long = 100000L
-
   /** Decontamination against an ARBITRARY eval-set relation: the query side
     * names its own id/text columns (any schema, any id type — an eval
     * benchmark table, not a corpus derivative), scored for shingle
@@ -399,19 +383,17 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
     * every pair), so this form omits it; use [[containmentRS]] when the
     * eval items are derived from the corpus itself. Output
     * (q_id, d_id, contain ROUND 6) with q_id/d_id keeping their input
-    * types; blocks, plan shape, and broadcast gating identical to
-    * [[containmentRS]].
+    * types; blocks and plan shape identical to [[containmentRS]].
     */
   def containmentRSGeneral(queries: DataFrame, qIdCol: String, qTextCol: String,
                            data: DataFrame, dIdCol: String, dTextCol: String,
-                           blockCols: Seq[String], tau: Double, n: Int = 3,
-                           queriesBroadcast: Option[Boolean] = None): DataFrame = {
+                           blockCols: Seq[String], tau: Double, n: Int = 3): DataFrame = {
     val qNorm = queries.select(col(qIdCol).as("__cid") +:
       col(qTextCol).as("__ctext") +: blockCols.map(col): _*)
     val dNorm = data.select(col(dIdCol).as("__cid") +:
       col(dTextCol).as("__ctext") +: blockCols.map(col): _*)
     containmentRS(qNorm, dNorm, "__cid", "__ctext", blockCols, tau, n,
-      queriesBroadcast, excludeSelf = false)
+      excludeSelf = false)
   }
 
   /** The data-side shingle index `containmentRS` rebuilds per call, as a
@@ -446,25 +428,22 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
   def containmentRS(queries: DataFrame, data: DataFrame, idCol: String,
                     textCol: String, blockCols: Seq[String], tau: Double,
                     n: Int = 3,
-                    queriesBroadcast: Option[Boolean] = None,
                     excludeSelf: Boolean = true): DataFrame =
     containmentRSIndexed(queries,
       buildContainmentIndex(data, idCol, textCol, blockCols, n),
-      idCol, textCol, tau, queriesBroadcast, excludeSelf)
+      idCol, textCol, tau, excludeSelf)
 
   /** [[containmentRS]] against a prebuilt (usually persisted) data-side
     * index — the repeated-decontamination entry point: N eval sets scan the
-    * corpus once, not N times.
+    * corpus once, not N times. Every join is a plain join: Spark's join
+    * selection, and AQE at runtime, broadcast the query-side relations
+    * (an eval set is small by the operator's nature) from their sizes.
     */
   def containmentRSIndexed(queries: DataFrame, index: ContainmentIndex,
                            idCol: String, textCol: String, tau: Double,
-                           queriesBroadcast: Option[Boolean] = None,
                            excludeSelf: Boolean = true): DataFrame = {
     val n = index.n
     val blockCols = index.blockCols
-    val qSmall = queriesBroadcast.getOrElse(
-      PlanStatMemo.boundedBy(queries, MaxBroadcastQueries))
-    def maybeBroadcast(df: DataFrame): DataFrame = if (qSmall) broadcast(df) else df
     val qSh = shingled(queries, textCol, n).filter(col("sh_sz") > 0)
       .select(col(idCol).as("q_id") +: col("sh_sz").as("q_sz") +:
         col("shingles").as("q_shingles") +:
@@ -474,19 +453,17 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
 
     // rank each query's shingles rarest-first by DATA-side df (query-only
     // shingles default df 0 — they prune hardest). The exploded query side
-    // is the small side BY CONTRACT (an eval set), so the full df relation
-    // never shuffles: first an inner join restricts freq to the query
-    // shingles (broadcast the query-shingle set, stream freq), then the
-    // outer df-attach joins that RESTRICTED — hence small — relation back
-    // broadcast-side. Two broadcast joins, deliberately: a single outer
-    // join can't broadcast the small side here (BroadcastHashJoin only
-    // builds the non-preserved side, so a right-outer with the query side
-    // preserved would silently shuffle both inputs).
+    // is the small side BY CONTRACT (an eval set): first an inner join
+    // restricts freq to the query shingles, then the outer df-attach joins
+    // that RESTRICTED — hence small — relation back. Two joins,
+    // deliberately: a single outer join could not broadcast the small side
+    // (BroadcastHashJoin only builds the non-preserved side, so a
+    // right-outer with the query side preserved would shuffle both inputs).
     val qExploded = qSh
       .select(col("q_id") +: col("q_sz") +: blockCols.map(c => col(s"q_$c")) :+
         explode(col("q_shingles")).as("sh"): _*)
-    val qFreq = freq.join(maybeBroadcast(qExploded.select("sh").distinct()), Seq("sh"))
-    val qPref = qExploded.join(maybeBroadcast(qFreq), Seq("sh"), "left")
+    val qFreq = freq.join(qExploded.select("sh").distinct(), Seq("sh"))
+    val qPref = qExploded.join(qFreq, Seq("sh"), "left")
       .withColumn("df", coalesce(col("df"), lit(0L)))
       .groupBy(col("q_id") +: col("q_sz") +: blockCols.map(c => col(s"q_$c")): _*)
       .agg(sort_array(collect_list(struct(col("df"), col("sh")))).as("rs"))
@@ -501,13 +478,13 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
     val selfEx = if (excludeSelf) Seq(col("q_id") =!= col("d_id")) else Nil
     val cond = (((col("q_sh") === col("d_sh")) +: blockEq) ++ selfEx).reduce(_ && _)
 
-    // candidates (broadcast prefix probe — no shuffle of the exploded data
-    // side) → exact verification on the carried arrays (block match
-    // already enforced in candidate generation)
-    dInv.join(maybeBroadcast(qPref), cond)
+    // candidates (prefix probe against the data-side index) → exact
+    // verification on the carried arrays (block match already enforced in
+    // candidate generation)
+    dInv.join(qPref, cond)
       .select("q_id", "d_id").distinct()
       .join(dSh.select("d_id", "d_shingles"), "d_id")
-      .join(maybeBroadcast(qSh.select("q_id", "q_sz", "q_shingles")), "q_id")
+      .join(qSh.select("q_id", "q_sz", "q_shingles"), "q_id")
       .withColumn("inter", size(array_intersect(col("q_shingles"), col("d_shingles"))))
       .withColumn("contain", col("inter").cast("double") / col("q_sz").cast("double"))
       .filter(col("contain") >= tau)
@@ -575,7 +552,7 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
                     saltCandidates: Option[Boolean] = None): DataFrame = {
     val (prefix, salted, vocabBroadcast) = autoPlan("jaccardRSAuto",
       vocabStats(tokenized(data, textCol), "tokens"), usePrefix, saltCandidates)
-    if (prefix) jaccardRSPrefix(queries, data, idCol, textCol, blockCols, tau,
+    if (prefix) rsPrefixJoin(queries, data, idCol, textCol, blockCols, tau,
       vocabBroadcast, nSalts = if (salted) CandidateSalts else 1)
     else jaccardRS(queries, data, idCol, textCol, blockCols, tau)
   }
@@ -594,8 +571,16 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
     */
   def jaccardRSPrefix(queries: DataFrame, data: DataFrame, idCol: String,
                       textCol: String, blockCols: Seq[String], tau: Double,
-                      vocabBroadcast: Option[Boolean] = None,
-                      nSalts: Int = 1): DataFrame = {
+                      nSalts: Int = 1): DataFrame =
+    rsPrefixJoin(queries, data, idCol, textCol, blockCols, tau,
+      vocabBroadcast = false, nSalts)
+
+  /** [[jaccardRSPrefix]], broadcasting the frequency relation when
+    * `vocabBroadcast`.
+    */
+  private def rsPrefixJoin(queries: DataFrame, data: DataFrame, idCol: String,
+                           textCol: String, blockCols: Seq[String], tau: Double,
+                           vocabBroadcast: Boolean, nSalts: Int): DataFrame = {
     val freq = tokenized(data, textCol)
       .select(explode(col("tokens")).as("token"))
       .groupBy("token")
@@ -679,16 +664,15 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
     */
   def jaccardSelfPrefixOnSets(sets: DataFrame, idCol: String, setCol: String,
                               blockCols: Seq[String], tau: Double,
-                              vocabBroadcast: Option[Boolean] = None,
                               nSalts: Int = 1,
                               sorted: Boolean = true): DataFrame =
     prefixSelfJoin(sets, idCol, setCol, blockCols, tau, frequencies(sets, setCol),
-      vocabBroadcast, nSalts, sorted)
+      vocabBroadcast = false, nSalts, sorted)
 
   /** [[jaccardSelfPrefixOnSets]] over a given (token, df) relation. */
   private def prefixSelfJoin(sets: DataFrame, idCol: String, setCol: String,
                              blockCols: Seq[String], tau: Double, freq: DataFrame,
-                             vocabBroadcast: Option[Boolean], nSalts: Int,
+                             vocabBroadcast: Boolean, nSalts: Int,
                              sorted: Boolean): DataFrame = {
     val idx = rankedPrefixes(sets, idCol, setCol, blockCols, tau, freq, vocabBroadcast)
     val ranked = idx.df
@@ -739,15 +723,14 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
 
   /** The prefix join's ranked relation (id, sz, blocks…, sorted_tokens,
     * prefix), checkpointed once. Each record's tokens are ordered
-    * rarest-first by (df, token); the frequency relation broadcasts only
-    * while the vocabulary is provably bounded — open-vocabulary corpora
-    * take the shuffle equi-join (see [[freqJoined]]). `bytes` estimates
+    * rarest-first by (df, token); the frequency relation is broadcast when
+    * `vocabBroadcast`, else the join is Spark's to plan. `bytes` estimates
     * the exploded prefix index: one row (id, sz, sorted_tokens, token,
     * blocks…) per prefix token.
     */
   private[graft] def rankedPrefixes(sets: DataFrame, idCol: String, setCol: String,
                                     blockCols: Seq[String], tau: Double, freq: DataFrame,
-                                    vocabBroadcast: Option[Boolean]): Materialized = {
+                                    vocabBroadcast: Boolean): Materialized = {
     val toks = sets
       .select(col(idCol).as("id") +: size(col(setCol)).as("sz") +:
         col(setCol).as("tokens") +: blockCols.map(col): _*)

@@ -14,12 +14,12 @@ import org.apache.spark.sql.functions._
   * each STRING pair millions of times — measured 11.4 s for the q67
   * Jaro-Winkler join at sf0.1 (≈8M in-block scorer calls); scoring the
   * domain first is |domain|² = 4k calls, and the rest of the plan is two
-  * output-bound expansion equi-joins. Same bounded-probe protocol as the
-  * edit-distance tiers: domain size AND matched-pair count are both probed
-  * with `limit(max+1).count()` before anything broadcasts; an over-bound
-  * domain falls back to the in-block pair join (correct at any size, the
-  * quadratic cost being inherent to an unbounded domain without a
-  * metric-specific index).
+  * output-bound expansion equi-joins. Same domain probe as the
+  * edit-distance tiers: the domain size is probed with a bounded
+  * `limit(max+1).count()`; an over-bound domain falls back to the in-block
+  * pair join (correct at any size, the quadratic cost being inherent to an
+  * unbounded domain without a metric-specific index). The expansion joins
+  * are plain joins that Spark plans from sizes.
   */
 object StringSimJoin {
 
@@ -69,9 +69,7 @@ object StringSimJoin {
     val b = df.select(col(idCol).as("b_id") +: col(strCol).as("b_s") +:
       blockCols.map(c => col(c).as(s"b_$c")): _*)
     val blockEq = blockCols.map(c => col(c) === col(s"b_$c"))
-    val symSmall =
-      PlanStatMemo.boundedBy(strict, EditDistanceJoin.MaxBroadcastPairs)
-    a.join(if (symSmall) broadcast(sym) else sym, "l_s")
+    a.join(sym, "l_s")
       .join(b, (blockEq :+ (col("r_s") === col("b_s")))
         .reduce(_ && _) && col("a_id") < col("b_id"))
       .select(col("a_id") +: col("b_id") +: blockCols.map(col) :+ col("score"): _*)

@@ -20,8 +20,9 @@ import graft.Det
   * candidate generation is the (token) equi-join of the query vectors
   * against the corpus vectors — exactly the inverted-index shape of
   * [[SimilarityJoin.jaccardRS]] with weights riding along. Norms ride the
-  * doc side (computed once, joined by id). Broadcasts are gated on the
-  * query side's bounded row probe.
+  * doc side (computed once, joined by id). The query-side and vocabulary
+  * joins are plain joins: Spark's join selection, and AQE at runtime,
+  * broadcast them from their sizes.
   *
   * Determinism (§2.1): weights, norms-squared, dots, and the final cosine
   * are each ROUND(,6) — the same round-terms-then-round-sums protocol as
@@ -31,8 +32,6 @@ import graft.Det
   */
 object TfIdf {
 
-  val MaxBroadcastQueries: Long = SimilarityJoin.MaxBroadcastQueries
-
   /** Top-`k` corpus documents per query document by tf-idf cosine,
     * excluding the query row itself when ids collide. Output:
     * (q_id, rnk, d_id, sim ROUND 6) totally ordered by (q_id, rnk);
@@ -40,13 +39,7 @@ object TfIdf {
     */
   def cosineRS(queries: DataFrame, qIdCol: String, qTextCol: String,
                docs: DataFrame, idCol: String, textCol: String,
-               k: Int,
-               queriesBroadcast: Option[Boolean] = None,
-               vocabBroadcast: Option[Boolean] = None): DataFrame = {
-    val qSmall = queriesBroadcast.getOrElse(
-      PlanStatMemo.boundedBy(queries, MaxBroadcastQueries))
-    def maybeBroadcast(df: DataFrame): DataFrame = if (qSmall) broadcast(df) else df
-
+               k: Int): DataFrame = {
     val toks = docs.select(col(idCol).as("doc_id"),
       explode(split(col(textCol), " +")).as("tok"))
     val tf = toks.groupBy("doc_id", "tok").agg(count(lit(1)).cast("double").as("tf"))
@@ -57,17 +50,9 @@ object TfIdf {
     // aggregated relation (guide §2.3: aggregate before you shuffle).
     val dfr = tf.groupBy("tok").agg(count(lit(1)).cast("double").as("df"))
     val nDocs = docs.select(count(lit(1)).cast("double").as("n_docs"))
-    // the vocabulary relation broadcasts only while provably bounded —
-    // probed ONCE here, shared by both weight joins (freqJoined protocol).
-    // r21: the probe is memoized per (plan, input files) — it executes the
-    // FULL tf+df aggregation just to count the vocabulary, a whole corpus
-    // pass the main job then re-pays, so re-runs over unchanged inputs
-    // were paying the pipeline's heaviest stage twice per execution
-    val vocabSmall = vocabBroadcast.getOrElse(
-      PlanStatMemo.boundedBy(dfr, SimilarityJoin.MaxBroadcastVocab))
 
     // corpus tf-idf vectors: weight per (doc, token), norm² per doc
-    val w = SimilarityJoin.freqJoined(tf, dfr, "tok", Some(vocabSmall))
+    val w = tf.join(dfr, "tok")
       .crossJoin(broadcast(nDocs))
       .withColumn("w", Det.round6(col("tf") * (log(col("n_docs") / col("df")) + 1.0)))
       .select("doc_id", "tok", "w")
@@ -78,18 +63,18 @@ object TfIdf {
     val qToks = queries.select(col(qIdCol).as("q_id"),
       explode(split(col(qTextCol), " +")).as("tok"))
     val qTf = qToks.groupBy("q_id", "tok").agg(count(lit(1)).cast("double").as("qtf"))
-    val qW = SimilarityJoin.freqJoined(qTf, dfr, "tok", Some(vocabSmall))
+    val qW = qTf.join(dfr, "tok")
       .crossJoin(broadcast(nDocs))
       .withColumn("qw", Det.round6(col("qtf") * (log(col("n_docs") / col("df")) + 1.0)))
       .select("q_id", "tok", "qw")
     val qNorms = qW.groupBy("q_id").agg(Det.round6(sum(col("qw") * col("qw"))).as("qn2"))
 
     val win = Window.partitionBy("q_id").orderBy(col("sim").desc, col("d_id"))
-    w.join(maybeBroadcast(qW), "tok")
+    w.join(qW, "tok")
       .groupBy("q_id", "doc_id")
       .agg(Det.round6(sum(col("qw") * col("w"))).as("dot"))
       .join(norms, "doc_id")
-      .join(maybeBroadcast(qNorms), "q_id")
+      .join(qNorms, "q_id")
       .withColumn("sim", Det.round6(col("dot") / sqrt(col("qn2") * col("n2"))))
       .filter(col("q_id") =!= col("doc_id"))
       .withColumnRenamed("doc_id", "d_id")

@@ -60,10 +60,9 @@ class Bm25Spec extends SparkSpec {
   test("tfidf broadcast dispatch: forced-shuffle plan equals forced-broadcast plan") {
     val docs = Tables.documents(spark, sf0001)
     val queries = docs.filter(col("doc_id") < 10)
-    def run(bc: Boolean) = graft.ops.TfIdf.cosineRS(queries, "doc_id", "text",
-        docs, "doc_id", "text", k = 5, queriesBroadcast = Some(bc))
-      .collect().map(_.toString).toSeq
-    assert(run(true) === run(false))
+    val (bc, sh) = bothJoinPaths(graft.ops.TfIdf.cosineRS(queries, "doc_id", "text",
+        docs, "doc_id", "text", k = 5))(_.collect().map(_.toString).toSeq)
+    assert(bc === sh)
   }
 
   test("broadcast dispatch: forced-shuffle plan equals forced-broadcast plan") {
@@ -71,9 +70,8 @@ class Bm25Spec extends SparkSpec {
     val queries = docs.filter(col("doc_id") < 5)
       .select((col("doc_id") + 1000000L).as("doc_id"),
         concat_ws(" ", slice(split(col("text"), " +"), 1, 8)).as("text"))
-    def run(bc: Boolean) = Bm25.scoreRS(queries, "doc_id", "text",
-        docs, "doc_id", "text", k = 10, queriesBroadcast = Some(bc))
-      .collect().map(_.toString).toSeq
-    assert(run(true) === run(false))
+    val (bc, sh) = bothJoinPaths(Bm25.scoreRS(queries, "doc_id", "text",
+        docs, "doc_id", "text", k = 10))(_.collect().map(_.toString).toSeq)
+    assert(bc === sh)
   }
 }

@@ -47,10 +47,8 @@ class EditDistanceJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("forced shuffle-path frequency join produces identical pairs") {
     val p = Tables.part(spark, sf0001)
-    val bc = pairs(EditDistanceJoin.selfJoin(p, "p_partkey", "p_name", Seq("p_brand"), 2,
-      vocabBroadcast = Some(true)))
-    val sh = pairs(EditDistanceJoin.selfJoin(p, "p_partkey", "p_name", Seq("p_brand"), 2,
-      vocabBroadcast = Some(false)))
+    val (bc, sh) = bothJoinPaths(
+      EditDistanceJoin.selfJoin(p, "p_partkey", "p_name", Seq("p_brand"), 2))(pairs)
     assert(sh === bc)
   }
 

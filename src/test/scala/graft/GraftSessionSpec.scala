@@ -29,4 +29,24 @@ class GraftSessionSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.extensions") === "graft.plans.GraftExtensions")
     assert(spark.sparkContext.getConf.get("spark.ui.enabled") === "false")
   }
+
+  test("query builds keep the functions GraftExtensions injected") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val session = spark.newSession()
+    val registry = session.sessionState.functionRegistry
+    val ids = Seq("graft_jaro_winkler", "graft_nfc").map(FunctionIdentifier(_))
+    def builders = ids.map(id => registry.lookupFunctionBuilder(id).get)
+    val injected = builders
+    assert(registry.lookupFunction(ids.head).get.getClassName ===
+      classOf[graft.functions.JaroWinkler].getName)
+    // q147 registers the string kernels on every build
+    for (_ <- 1 to 2) SparkEntry.queries("q147_sorted_neighborhood")(session, sf0001)
+    builders.zip(injected).foreach { case (now, before) => assert(now eq before) }
+    // a session that lacks a function still gets it from register
+    registry.dropFunction(ids.head)
+    graft.functions.StringExprs.register(session)
+    assert(registry.functionExists(ids.head))
+    assert(SparkEntry.queries("q147_sorted_neighborhood")(session, sf0001).count() ===
+      SparkEntry.queries("q147_sorted_neighborhood")(spark, sf0001).count())
+  }
 }

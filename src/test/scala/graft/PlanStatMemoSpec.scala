@@ -52,6 +52,34 @@ class PlanStatMemoSpec extends SparkSpec {
     }
   }
 
+  test("both planning memos hit on a table served under a non-file: scheme") {
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration.set(
+      s"fs.${TestSchemeFileSystem.Scheme}.impl", classOf[TestSchemeFileSystem].getName)
+    val dir = java.nio.file.Files.createTempDirectory("memoscheme").toFile
+    try {
+      Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val sfDir = s"${TestSchemeFileSystem.Scheme}://${dir.getAbsolutePath}"
+      // the schema memo stores one entry on the first load and hits after
+      val before = Tables.schemaMemoSize
+      val docs = Tables.load(spark, sfDir, "documents")
+      val stored = Tables.schemaMemoSize
+      assert(stored === (if (before >= Tables.SchemaMemoBound) 1 else before + 1))
+      assert(Tables.load(spark, sfDir, "documents").count() === 2L)
+      assert(Tables.schemaMemoSize === stored)
+      // the statistic memo computes once
+      assert(docs.inputFiles.forall(_.startsWith(s"${TestSchemeFileSystem.Scheme}:")))
+      assert(PlanStatMemo.key(docs, "scheme").nonEmpty)
+      var computed = 0
+      (1 to 2).foreach(_ => PlanStatMemo.cached(docs, "scheme") { computed += 1; computed })
+      assert(computed === 1)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(dir)
+      ()
+    }
+  }
+
   test("past Bound entries the memo starts over, and the newest entry still hits") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("memobound").toFile
@@ -67,4 +95,16 @@ class PlanStatMemoSpec extends SparkSpec {
       ()
     }
   }
+}
+
+/** The local filesystem served under its own URI scheme, standing in for a
+  * remote store (`s3a:`, `hdfs:`) that `java.nio` cannot stat.
+  */
+class TestSchemeFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create(s"${TestSchemeFileSystem.Scheme}:///")
+  override def getScheme: String = TestSchemeFileSystem.Scheme
+}
+
+object TestSchemeFileSystem {
+  val Scheme = "graftlocal"
 }

@@ -499,7 +499,7 @@ class PropertiesSpec extends SparkSpec {
     val freq = sets.select(explode(col("tokens")).as("token")).groupBy("token")
       .agg(count(lit(1)).as("df"))
     val bytes = SimilarityJoin.rankedPrefixes(sets, "doc_id", "tokens", Seq("blk"), 0.6,
-      freq, Some(true)).bytes
+      freq, vocabBroadcast = true).bytes
     pinsThreshold(bytes)(SimilarityJoin.jaccardSelfPrefix(df, "doc_id", "text", Seq("blk"), 0.6))
   }
 

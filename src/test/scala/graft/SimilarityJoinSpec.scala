@@ -39,12 +39,9 @@ class SimilarityJoinSpec extends SparkSpec {
 
   test("prefix path: vocabulary-size dispatch — shuffle join ≡ broadcast join") {
     val sets = SimilarityJoin.tokenized(Tables.documents(spark, sf0001), "text")
-    val bcPairs = SimilarityJoin.jaccardSelfPrefixOnSets(
-        sets, "doc_id", "tokens", Seq("lang", "source"), 0.8, Some(true))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val shPairs = SimilarityJoin.jaccardSelfPrefixOnSets(
-        sets, "doc_id", "tokens", Seq("lang", "source"), 0.8, Some(false))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val (bcPairs, shPairs) = bothJoinPaths(SimilarityJoin.jaccardSelfPrefixOnSets(
+        sets, "doc_id", "tokens", Seq("lang", "source"), 0.8))(
+      _.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
     assert(shPairs === bcPairs)
     assert(bcPairs.nonEmpty)
   }

@@ -22,6 +22,29 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** Build and run a query twice: at the session's broadcast threshold,
+    * and under `spark.sql.autoBroadcastJoinThreshold` = −1, which forces
+    * every un-hinted join to shuffle. Asserts that the first executed plan
+    * holds a BroadcastHashJoin and the second none, so the two runs took
+    * different join paths, and returns both results for comparison.
+    */
+  def bothJoinPaths[A](build: => org.apache.spark.sql.DataFrame)(
+      result: org.apache.spark.sql.DataFrame => A): (A, A) = {
+    val plans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    def run(): (A, Boolean) = {
+      val df = build
+      val out = result(df)
+      (out, plans.find(df.queryExecution.executedPlan)(
+        _.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastHashJoinExec]).isDefined)
+    }
+    val (atDefault, broadcastAtDefault) = run()
+    val (forced, broadcastForced) =
+      withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(run())
+    assert(broadcastAtDefault, "no BroadcastHashJoin at the default threshold")
+    assert(!broadcastForced, "a BroadcastHashJoin under threshold -1")
+    (atDefault, forced)
+  }
+
   /** Run `body` and return the properties of every Spark job it started,
     * in start order. Jobs are matched by a job group unique to the call,
     * so jobs of other threads never count; the group reaches the jobs
