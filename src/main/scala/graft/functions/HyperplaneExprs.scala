@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.classic.GraftBridge.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Batched hyperplane-projection kernels (top-level object → static
@@ -163,16 +163,9 @@ case class HyperplaneBands(first: Expression, second: Expression,
 
 object HyperplaneExprs {
 
-  /** Idempotent session registration of both projection kernels (also the
-    * raw-SQL surface for building LSH pipelines in pure SQL).
-    */
-  def register(spark: SparkSession): Unit = Registration.ifAbsent(spark,
-    ("graft_hp_scores", exprs => HyperplaneScores(exprs.head, exprs(1))),
-    ("graft_hp_bands", exprs => HyperplaneBands(exprs.head, exprs(1), exprs(2))))
-
   def hpScores(vec: Column, planesFlat: Column): Column =
-    call_function("graft_hp_scores", vec, planesFlat)
+    column(HyperplaneScores(expression(vec), expression(planesFlat)))
 
   def hpBands(vec: Column, planesFlat: Column, nBands: Column): Column =
-    call_function("graft_hp_bands", vec, planesFlat, nBands)
+    column(HyperplaneBands(expression(vec), expression(planesFlat), expression(nBands)))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.classic.GraftBridge.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Product-quantization code assignment as ONE kernel (top-level object →
@@ -133,9 +133,6 @@ case class PqEncode(first: Expression, second: Expression,
 
 object PqExprs {
 
-  def register(spark: SparkSession): Unit = Registration.ifAbsent(spark,
-    ("graft_pq_encode", exprs => PqEncode(exprs.head, exprs(1), exprs(2), exprs(3))))
-
   def pqEncode(vec: Column, codebookFlat: Column, m: Column, k: Column): Column =
-    call_function("graft_pq_encode", vec, codebookFlat, m, k)
+    column(PqEncode(expression(vec), expression(codebookFlat), expression(m), expression(k)))
 }

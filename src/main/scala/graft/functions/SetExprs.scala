@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.classic.GraftBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -18,13 +18,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * aggregate/array_intersect higher-order formulation).
   */
 object SetOps {
-  /** Exact set Jaccard |A∩B| / |A∪B| over two string arrays. Inputs are
-    * treated as SETS (duplicates collapse; null elements ignored), matching
-    * the library's `array_distinct`-tokenized pipeline, so the SQL surface
-    * agrees with [[graft.ops.SimilarityJoin]] bit for bit. Returns NaN when
-    * the union is empty (both sets empty) — mapped to SQL NULL by the
-    * expression, since J(∅, ∅) is undefined.
-    */
   /** Distinct word n-gram shingles, space-joined, first-occurrence order
     * (identical strings and SET to the `transform`/`array_distinct` HOF
     * formulation; null tokens are skipped inside a shingle, matching
@@ -48,6 +41,13 @@ object SetOps {
     new GenericArrayData(seen.toArray(new Array[AnyRef](seen.size())))
   }
 
+  /** Exact set Jaccard |A∩B| / |A∪B| over two string arrays. Inputs are
+    * treated as SETS (duplicates collapse; null elements ignored), matching
+    * the library's `array_distinct`-tokenized pipeline, so the SQL surface
+    * agrees with [[graft.ops.SimilarityJoin]] bit for bit. Returns NaN when
+    * the union is empty (both sets empty) — mapped to SQL NULL by the
+    * expression, since J(∅, ∅) is undefined.
+    */
   def jaccard(a: ArrayData, b: ArrayData): Double = {
     val sa = new java.util.HashSet[UTF8String]()
     var i = 0
@@ -151,22 +151,12 @@ case class SetJaccard(left: Expression, right: Expression) extends BinaryExpress
 }
 
 object SetExprs {
-  private val name = "graft_jaccard"
-
-  /** Idempotent per-session registration (sessions built WITHOUT the
-    * GraftExtensions conf); extension-built sessions get the function
-    * injected at build time instead.
-    */
-  def register(spark: SparkSession): Unit = Registration.ifAbsent(spark,
-    (name, exprs => SetJaccard(exprs.head, exprs(1))),
-    ("graft_shingles", exprs => WordShingles(exprs.head, exprs(1))))
 
   /** Column-level distinct word n-gram shingles (codegen'd kernel). */
   def shinglesCol(tokens: Column, n: Column): Column =
-    call_function("graft_shingles", tokens, n)
+    column(WordShingles(expression(tokens), expression(n)))
 
-  /** Column-level exact set Jaccard; caller must have [[register]]ed or
-    * built the session with GraftExtensions.
-    */
-  def jaccard(a: Column, b: Column): Column = call_function(name, a, b)
+  /** Column-level exact set Jaccard (codegen'd kernel). */
+  def jaccard(a: Column, b: Column): Column =
+    column(SetJaccard(expression(a), expression(b)))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.classic.GraftBridge.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Per-document sketch kernels (top-level object → static forwarders for
@@ -161,16 +161,9 @@ case class SimHashSig(child: Expression) extends UnaryExpression {
 
 object SigExprs {
 
-  /** Idempotent session registration — also the raw-SQL surface for
-    * building sketch pipelines in pure SQL.
-    */
-  def register(spark: SparkSession): Unit = Registration.ifAbsent(spark,
-    ("graft_minhash_sig", exprs => MinHashSig(exprs.head, exprs(1))),
-    ("graft_simhash_sig", exprs => SimHashSig(exprs.head)))
-
   def minhashSig(tokens: Column, paramsFlat: Column): Column =
-    call_function("graft_minhash_sig", tokens, paramsFlat)
+    column(MinHashSig(expression(tokens), expression(paramsFlat)))
 
   def simhashSig(tokens: Column): Column =
-    call_function("graft_simhash_sig", tokens)
+    column(SimHashSig(expression(tokens)))
 }

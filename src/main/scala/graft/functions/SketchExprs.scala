@@ -4,13 +4,13 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.classic.GraftBridge.{column, expression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -153,9 +153,6 @@ case class FreqItemsSketch(
 
 object SketchExprs {
 
-  def register(spark: SparkSession): Unit = Registration.ifAbsent(spark,
-    ("graft_freq_items", exprs => FreqItemsSketch(exprs.head, exprs(1)).toAggregateExpression()))
-
   def freqItems(item: Column, capacity: Column): Column =
-    call_function("graft_freq_items", item, capacity)
+    column(FreqItemsSketch(expression(item), expression(capacity)).toAggregateExpression())
 }

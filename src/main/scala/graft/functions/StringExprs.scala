@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.classic.GraftBridge.{column, expression}
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -149,12 +149,8 @@ case class NfcNormalize(child: Expression)
 
 object StringExprs {
 
-  def register(spark: SparkSession): Unit = Registration.ifAbsent(spark,
-    ("graft_jaro_winkler", exprs => JaroWinkler(exprs.head, exprs(1))),
-    ("graft_nfc", exprs => NfcNormalize(exprs.head)))
-
   def jaroWinkler(a: Column, b: Column): Column =
-    call_function("graft_jaro_winkler", a, b)
+    column(JaroWinkler(expression(a), expression(b)))
 
-  def nfc(s: Column): Column = call_function("graft_nfc", s)
+  def nfc(s: Column): Column = column(NfcNormalize(expression(s)))
 }

@@ -1,11 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, sqrt}
+import org.apache.spark.sql.classic.GraftBridge.{column, expression}
+import org.apache.spark.sql.functions.sqrt
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native codegen'd dot product over two array<double> columns.
@@ -84,7 +85,6 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
 }
 
 object VectorExprs {
-  private val name = "graft_dot"
 
   /** `graft_cosine(a, b)` expression tree: pure composition of the codegen'd
     * [[DotProduct]] with Spark's Sqrt/Divide — no new kernel, whole-stage
@@ -97,19 +97,9 @@ object VectorExprs {
       Multiply(Sqrt(DotProduct(a, a)), Sqrt(DotProduct(b, b))))
   }
 
-  /** Idempotent session registration — `call_function` resolves the name
-    * through the session's function registry at analysis time. Also makes
-    * `graft_dot(a, b)` / `graft_cosine(a, b)` available to raw-SQL users of
-    * the library.
-    */
-  def register(spark: SparkSession): Unit = Registration.ifAbsent(spark,
-    (name, exprs => DotProduct(exprs.head, exprs(1))),
-    ("graft_cosine", exprs => cosineExpr(exprs.head, exprs(1))))
-
-  /** Column-level dot product; caller must have run [[register]] on the
-    * executing session (every graft vector operator does).
-    */
-  def dot(a: Column, b: Column): Column = call_function(name, a, b)
+  /** Column-level dot product (codegen'd kernel). */
+  def dot(a: Column, b: Column): Column =
+    column(DotProduct(expression(a), expression(b)))
 
   /** Euclidean norm via the same codegen'd loop. */
   def norm(v: Column): Column = sqrt(dot(v, v))

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.classic.GraftBridge.{column, expression}
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -84,9 +84,5 @@ case class CompressionRatio(child: Expression) extends UnaryExpression {
 
 object ZlibExprs {
 
-  def register(spark: SparkSession): Unit = Registration.ifAbsent(spark,
-    ("graft_compression_ratio", exprs => CompressionRatio(exprs.head)))
-
-  def compressionRatio(c: Column): Column =
-    call_function("graft_compression_ratio", c)
+  def compressionRatio(c: Column): Column = column(CompressionRatio(expression(c)))
 }

@@ -324,8 +324,8 @@ object GraphOps extends org.apache.spark.internal.Logging {
     * join fan-out is its HIGHER-neighbor count, which for the
     * min-oriented form of a skewed graph is the standard mitigation) and
     * by dedup graphs being clique-shaped with bounded clique sizes.
-    */
-  /** `assumeCanonical = true` (r20): the caller asserts `edges` is already
+    *
+    * `assumeCanonical = true` (r20): the caller asserts `edges` is already
     * DISTINCT and oriented src < dst per row (the similarity-pair shape),
     * so the canonicalizing least/greatest + `distinct()` shuffle is
     * skipped — identical output for such inputs.
@@ -378,8 +378,8 @@ object GraphOps extends org.apache.spark.internal.Logging {
     * cost model; lineage is truncated per round and the previous round's
     * checkpoint is unpersisted. Fixed `iters` (no convergence probe):
     * rank consumers want a bounded-cost estimate, not a fixpoint.
-    */
-  /** `edgesCanonical = true` (r20): the caller asserts `edges` is already
+    *
+    * `edgesCanonical = true` (r20): the caller asserts `edges` is already
     * DISTINCT with src < dst per row (exactly what the similarity-pair
     * relations emit — one row per unordered pair), so the symmetrizing
     * union cannot produce duplicates and the edge-relation-sized

@@ -54,7 +54,6 @@ object MinHash extends org.apache.spark.internal.Logging {
     */
   def signatures(docs: DataFrame, idCol: String, textCol: String,
                  nHashes: Int = 32, keep: Seq[String] = Nil): DataFrame = {
-    graft.functions.SigExprs.register(docs.sparkSession)
     val flat: Seq[Long] = params(nHashes).flatMap { case (a, b) => Seq(a, b) }
     SimilarityJoin.tokenized(docs, textCol)
       // a doc with no usable token has no signature — mirror the explode
@@ -77,7 +76,6 @@ object MinHash extends org.apache.spark.internal.Logging {
     */
   def groupSignatures(docs: DataFrame, groupCols: Seq[String], textCol: String,
                       nHashes: Int = 32): DataFrame = {
-    graft.functions.SigExprs.register(docs.sparkSession)
     val flat: Seq[Long] = params(nHashes).flatMap { case (a, b) => Seq(a, b) }
     SimilarityJoin.tokenized(docs, textCol)
       .filter(size(col("tokens")) > 0)

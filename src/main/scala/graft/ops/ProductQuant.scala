@@ -86,7 +86,6 @@ object ProductQuant {
     // codegen method limits around k≈64; see PqExprs scaladoc).
     require(m >= 1 && k >= 2 && k <= 256, s"m=$m k=$k")
     require(iters >= 1, s"iters=$iters")
-    graft.functions.PqExprs.register(emb.sparkSession)
     val v = emb.select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("v"))
     val dim = v.select(size(col("v"))).head.getInt(0)
@@ -138,7 +137,6 @@ object ProductQuant {
     */
   def encode(emb: DataFrame, idCol: String, vecCol: String,
              model: PqModel): DataFrame = {
-    graft.functions.PqExprs.register(emb.sparkSession)
     val v = emb.select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("v"))
     v.select(col("id"), codesFor(col("v"), model).as("codes"))
@@ -162,7 +160,6 @@ object ProductQuant {
                      coarse: PqModel, pq: PqModel): DataFrame = {
     require(coarse.m == 1 && coarse.dim == pq.dim,
       s"coarse must be an m=1 model of dim ${pq.dim}")
-    graft.functions.PqExprs.register(emb.sparkSession)
     val v = emb.select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("v"))
     v.select(col("id"),

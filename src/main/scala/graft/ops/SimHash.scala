@@ -36,7 +36,6 @@ object SimHash extends org.apache.spark.internal.Logging {
     */
   def signatures(docs: DataFrame, idCol: String, textCol: String,
                  keep: Seq[String] = Nil): DataFrame = {
-    graft.functions.SigExprs.register(docs.sparkSession)
     SimilarityJoin.tokenized(docs, textCol)
       // no usable token → no signature, mirroring the explode formulation;
       // the cheap equivalent of sig.isNotNull (see MinHash.signatures for

@@ -254,8 +254,8 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
     * (distinct elements) — the generic core behind [[jaccardSelf]] (word
     * tokens) and the char-n-gram join (gram sets). Same inverted-index +
     * length-filter plan.
-    */
-  /** `sorted = false` (r20 optimization round) skips the final global
+    *
+    * `sorted = false` (r20 optimization round) skips the final global
     * ORDER BY for consumers that immediately re-aggregate or re-key the
     * pairs (graph closures, anti-joins): those callers eagerly materialize
     * the pair relation (GraphOps checkpoints its edge input), which would
@@ -348,31 +348,11 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
     * of the two forms is pinned in SigExprsSpec).
     */
   def shingled(df: DataFrame, textCol: String, n: Int): DataFrame = {
-    graft.functions.SetExprs.register(df.sparkSession)
     df.withColumn("shingles", graft.functions.SetExprs.shinglesCol(
         split(col(textCol), " +"), lit(n)))
       .withColumn("sh_sz", size(col("shingles")))
   }
 
-  /** Containment R-S join — the decontamination primitive: for each QUERY
-    * document (an eval/benchmark item), every data document containing at
-    * least `tau` of the query's word `n`-gram shingles.
-    * C(Q, D) = |S(Q) ∩ S(D)| / |S(Q)| — asymmetric by design: a test item
-    * fully quoted inside a long training document scores 1.0 where Jaccard
-    * would vanish, which is exactly why decontamination uses containment.
-    *
-    * Plan (prefix-filtered since r6 — the hot-shingle fanout of the naive
-    * full inverted join measured 10.1 s at sf0.1, prefix form ~1 s):
-    * candidate generation explodes only each query's RAREST
-    * |S(Q)| − ⌈τ·|S(Q)|⌉ + 1 shingles (ascending data-side df; the overlap
-    * bound o ≥ ⌈τ·|S(Q)|⌉ guarantees any qualifying D shares at least one
-    * prefix shingle — the standard overlap-prefix lemma applied to the Q
-    * side, which is the only side containment constrains), equi-joined
-    * against the full data-side shingle index. Exact verification then
-    * recomputes |S(Q) ∩ S(D)| on the carried arrays, so the prefix is a
-    * pure candidate filter. Output (q_id, d_id, contain ROUND 6), totally
-    * ordered.
-    */
   /** Decontamination against an ARBITRARY eval-set relation: the query side
     * names its own id/text columns (any schema, any id type — an eval
     * benchmark table, not a corpus derivative), scored for shingle
@@ -425,6 +405,25 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
     ContainmentIndex(dSh, freq, n, blockCols)
   }
 
+  /** Containment R-S join — the decontamination primitive: for each QUERY
+    * document (an eval/benchmark item), every data document containing at
+    * least `tau` of the query's word `n`-gram shingles.
+    * C(Q, D) = |S(Q) ∩ S(D)| / |S(Q)| — asymmetric by design: a test item
+    * fully quoted inside a long training document scores 1.0 where Jaccard
+    * would vanish, which is exactly why decontamination uses containment.
+    *
+    * Plan (prefix-filtered since r6 — the hot-shingle fanout of the naive
+    * full inverted join measured 10.1 s at sf0.1, prefix form ~1 s):
+    * candidate generation explodes only each query's RAREST
+    * |S(Q)| − ⌈τ·|S(Q)|⌉ + 1 shingles (ascending data-side df; the overlap
+    * bound o ≥ ⌈τ·|S(Q)|⌉ guarantees any qualifying D shares at least one
+    * prefix shingle — the standard overlap-prefix lemma applied to the Q
+    * side, which is the only side containment constrains), equi-joined
+    * against the full data-side shingle index. Exact verification then
+    * recomputes |S(Q) ∩ S(D)| on the carried arrays, so the prefix is a
+    * pure candidate filter. Output (q_id, d_id, contain ROUND 6), totally
+    * ordered.
+    */
   def containmentRS(queries: DataFrame, data: DataFrame, idCol: String,
                     textCol: String, blockCols: Seq[String], tau: Double,
                     n: Int = 3,
@@ -496,10 +495,7 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
     * Bounded by vocabulary size → broadcastable.
     */
   def tokenFrequency(docs: DataFrame, textCol: String): DataFrame =
-    tokenized(docs, textCol)
-      .select(explode(col("tokens")).as("token"))
-      .groupBy("token")
-      .agg(count(lit(1)).as("df"))
+    frequencies(tokenized(docs, textCol), "tokens")
 
   /** Token-frequency relation with a dense global rank by (df, token) —
     * WITHOUT a global single-partition window. Rank = per-df row_number
@@ -581,10 +577,7 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
   private def rsPrefixJoin(queries: DataFrame, data: DataFrame, idCol: String,
                            textCol: String, blockCols: Seq[String], tau: Double,
                            vocabBroadcast: Boolean, nSalts: Int): DataFrame = {
-    val freq = tokenized(data, textCol)
-      .select(explode(col("tokens")).as("token"))
-      .groupBy("token")
-      .agg(count(lit(1)).as("df"))
+    val freq = frequencies(tokenized(data, textCol), "tokens")
 
     def ranked(df: DataFrame, p: String) = {
       val toks = tokenized(df, textCol)

@@ -41,7 +41,6 @@ object VectorSearch {
     */
   def cosineKnn(emb: DataFrame, idCol: String, vecCol: String,
                 queryPred: Column, k: Int): DataFrame = {
-    graft.functions.VectorExprs.register(emb.sparkSession)
     val v = emb.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("nrm", norm(col("v")))
     val q = v.filter(queryPred)
@@ -117,7 +116,6 @@ object VectorSearch {
   private def assignToCentroids(emb: DataFrame, idCol: String, vecCol: String,
                                 centroidPred: Column,
                                 maxCentroids: Int): DataFrame = {
-    graft.functions.VectorExprs.register(emb.sparkSession)
     val v = emb.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
     val cents = v.filter(centroidPred).orderBy("id").limit(maxCentroids + 1)
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
@@ -182,7 +180,6 @@ object VectorSearch {
                 centroidPred: Column, iters: Int,
                 maxCentroids: Int = MaxCentroids): DataFrame = {
     require(iters >= 1, s"kmeansFit needs iters >= 1, got $iters")
-    graft.functions.VectorExprs.register(emb.sparkSession)
     val v = emb.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
     val seed = v.filter(centroidPred).orderBy("id").limit(maxCentroids + 1)
       .collect().map(r => r.getSeq[Double](1))
@@ -282,8 +279,6 @@ object VectorSearch {
   def ivfCosineKnn(emb: DataFrame, idCol: String, vecCol: String,
                    queryPred: Column, k: Int,
                    nCells: Int = 16, nProbe: Int = 4, dim: Int = 64): DataFrame = {
-    graft.functions.VectorExprs.register(emb.sparkSession)
-    graft.functions.HyperplaneExprs.register(emb.sparkSession)
     val cents = hyperplanes(nCells, dim) // unit-direction surrogate centroids
     val n = emb.sparkSession.sessionState.conf.numShufflePartitions
 
@@ -332,7 +327,6 @@ object VectorSearch {
     */
   def cosinePairsExact(emb: DataFrame, idCol: String, vecCol: String,
                        tau: Double): DataFrame = {
-    graft.functions.VectorExprs.register(emb.sparkSession)
     val n = emb.sparkSession.sessionState.conf.numShufflePartitions
     val v = emb.select(col(idCol).as("vid"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("nrm", norm(col("v")))
@@ -355,8 +349,6 @@ object VectorSearch {
   def cosinePairsLsh(emb: DataFrame, idCol: String, vecCol: String, tau: Double,
                      nPlanes: Int = 32, nBands: Int = 8, dim: Int = 64): DataFrame = {
     require(nPlanes % nBands == 0, "nPlanes must divide into nBands")
-    graft.functions.VectorExprs.register(emb.sparkSession)
-    graft.functions.HyperplaneExprs.register(emb.sparkSession)
     val planes = hyperplanes(nPlanes, dim)
     // one fused codegen node for the whole signature — see LshOps scaladoc
     // for why N per-plane dot columns are an AQE plan-churn hazard
@@ -419,8 +411,6 @@ object VectorSearch {
                    queryPred: Column, k: Int,
                    nPlanes: Int = 16, nBands: Int = 4, dim: Int = 64): DataFrame = {
     require(nPlanes % nBands == 0, "nPlanes must divide into nBands")
-    graft.functions.VectorExprs.register(emb.sparkSession)
-    graft.functions.HyperplaneExprs.register(emb.sparkSession)
     val planes = hyperplanes(nPlanes, dim)
 
     // one fused codegen node for the whole banded signature (identical bit

@@ -187,7 +187,6 @@ final case class GraftUpdateCommand(rel: DataSourceV2Relation, gt: GraftTable,
   override val output: Seq[Attribute] = Nil
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val relation = gt.underlying
     require(relation.pinned.isEmpty,
       "graft UPDATE: a VERSION/TIMESTAMP AS OF view is an immutable snapshot")
@@ -207,7 +206,7 @@ final case class GraftUpdateCommand(rel: DataSourceV2Relation, gt: GraftTable,
           s"recorded partition transform ${spec.render}, would leave the " +
           s"derived partition column $pc stale — DELETE and re-INSERT instead"))
     }
-    val df = GraftBridge.ofRows(classic, rel)
+    val df = GraftBridge.ofRows(spark, rel)
     val condCol = condition.map(GraftBridge.column).getOrElse(lit(true))
     // phase 1: which partitions hold matching rows? The condition pushes
     // into the relation's own pruning (manifest keys, stats sidecars,
@@ -227,7 +226,7 @@ final case class GraftUpdateCommand(rel: DataSourceV2Relation, gt: GraftTable,
         case None => GraftBridge.column(a).as(a.name)
       }
     }: _*)
-    val staged = AtomicCommit.stage(classic, relation.root, store, updated,
+    val staged = AtomicCommit.stage(spark, relation.root, store, updated,
       pc, 1, Some(m))
     AtomicCommit.publish(relation.root, store, staged)
     Nil
@@ -245,7 +244,6 @@ final case class GraftMergeCommand(rel: DataSourceV2Relation, gt: GraftTable,
   override val output: Seq[Attribute] = Nil
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val relation = gt.underlying
     require(relation.pinned.isEmpty,
       "graft MERGE: a VERSION/TIMESTAMP AS OF view is an immutable snapshot")
@@ -315,7 +313,7 @@ final case class GraftMergeCommand(rel: DataSourceV2Relation, gt: GraftTable,
           s"assignments only, got $other")
       }.toMap
 
-    var srcDf = GraftBridge.ofRows(classic, source)
+    var srcDf = GraftBridge.ofRows(spark, source)
     renames.foreach { case (t, s) => srcDf = srcDf.withColumnRenamed(s, t) }
 
     val pc = AtomicCommit.readManifest(relation.store).map(_.partitionCol)
@@ -334,7 +332,7 @@ final case class GraftMergeCommand(rel: DataSourceV2Relation, gt: GraftTable,
         case _ => false
       } else a.assignments
 
-    var b = Merge.into(classic, relation.root, relation.store)
+    var b = Merge.into(spark, relation.root, relation.store)
       .using(srcDf).onKeys(keyPairs.map(_._1): _*)
     matched.foreach {
       case a: UpdateAction => b = a.condition match {

@@ -1,12 +1,11 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.DoubleType
-import graft.functions.{DotProduct, SetJaccard}
+import graft.functions.DotProduct
 
 /** Optimizer rule: recognize the higher-order-function dot-product idiom
   *
@@ -49,11 +48,12 @@ object DotProductRewrite extends Rule[LogicalPlan] {
   * `spark.sql.extensions=graft.plans.GraftExtensions` (set by the graft
   * harness mains) or `.withExtensions(new GraftExtensions)`.
   *
-  * Injects the optimizer rewrite AND the graft SQL functions (`graft_dot`,
-  * `graft_jaccard`) so a raw-SQL user of an extension-built session can call
-  * the similarity kernels with no Scala at all — SURVEY §3.3's SQL entry
-  * point. (Sessions built without the conf use
-  * `VectorExprs.register` / `SetExprs.register` instead.)
+  * Injects the optimizer rewrite AND every graft SQL kernel
+  * ([[graft.functions.Kernels]]: `graft_dot`, `graft_jaccard`, …) so a
+  * raw-SQL user of an extension-built session can call the similarity
+  * kernels with no Scala at all — SURVEY §3.3's SQL entry point. A session
+  * built without the conf gets the same functions from
+  * `graft.functions.Kernels.register`; the Scala Column API needs neither.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -75,65 +75,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // lower onto the engine's partition-CoW machinery (post-hoc = after
     // reference resolution, before the planner rejects them)
     ext.injectPostHocResolutionRule(_ => GraftDmlRewrite)
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => DotProduct(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_jaccard"),
-      new ExpressionInfo(classOf[SetJaccard].getName, "graft_jaccard"),
-      (exprs: Seq[Expression]) => SetJaccard(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_cosine"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.VectorExprs.cosineExpr(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[graft.functions.NfcNormalize].getName, "graft_nfc"),
-      (exprs: Seq[Expression]) => graft.functions.NfcNormalize(exprs.head)))
-    // the remaining public kernels, so the extension-built SQL surface is
-    // the COMPLETE function set (parity with the Scala register() helpers)
-    ext.injectFunction((
-      FunctionIdentifier("graft_jaro_winkler"),
-      new ExpressionInfo(classOf[graft.functions.JaroWinkler].getName, "graft_jaro_winkler"),
-      (exprs: Seq[Expression]) => graft.functions.JaroWinkler(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_hp_scores"),
-      new ExpressionInfo(classOf[graft.functions.HyperplaneScores].getName, "graft_hp_scores"),
-      (exprs: Seq[Expression]) => graft.functions.HyperplaneScores(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_hp_bands"),
-      new ExpressionInfo(classOf[graft.functions.HyperplaneBands].getName, "graft_hp_bands"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.HyperplaneBands(exprs.head, exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_pq_encode"),
-      new ExpressionInfo(classOf[graft.functions.PqEncode].getName, "graft_pq_encode"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.PqEncode(exprs.head, exprs(1), exprs(2), exprs(3))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[graft.functions.WordShingles].getName, "graft_shingles"),
-      (exprs: Seq[Expression]) => graft.functions.WordShingles(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[graft.functions.MinHashSig].getName, "graft_minhash_sig"),
-      (exprs: Seq[Expression]) => graft.functions.MinHashSig(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash_sig"),
-      new ExpressionInfo(classOf[graft.functions.SimHashSig].getName, "graft_simhash_sig"),
-      (exprs: Seq[Expression]) => graft.functions.SimHashSig(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_compression_ratio"),
-      new ExpressionInfo(classOf[graft.functions.CompressionRatio].getName,
-        "graft_compression_ratio"),
-      (exprs: Seq[Expression]) => graft.functions.CompressionRatio(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_freq_items"),
-      new ExpressionInfo(classOf[graft.functions.FreqItemsSketch].getName,
-        "graft_freq_items"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.FreqItemsSketch(exprs.head, exprs(1)).toAggregateExpression()))
+    // the graft SQL kernels, one table shared with Kernels.register
+    graft.functions.Kernels.all.foreach(ext.injectFunction)
   }
 }

@@ -573,7 +573,6 @@ object PipelineQueries {
   val q88 = Q(
     "q88_repetition_ratio",
     (s, d) => {
-      graft.functions.SetExprs.register(s)
       Tables.documents(s, d)
         .withColumn("toks", split(col("text"), " +"))
         .withColumn("n_grams", greatest(size(col("toks")) - 2, lit(0)))
@@ -774,7 +773,6 @@ object PipelineQueries {
   val q113 = Q(
     "q113_compression_ratio",
     (s, d) => {
-      graft.functions.ZlibExprs.register(s)
       Tables.documents(s, d)
         .select(col("doc_id"), col("lang"),
           length(col("text")).as("n_chars"),
@@ -800,7 +798,6 @@ object PipelineQueries {
   val q114 = Q(
     "q114_frequent_items",
     (s, d) => {
-      graft.functions.SketchExprs.register(s)
       Tables.documents(s, d)
         .select(explode(split(lower(col("text")), " +")).as("token"))
         .filter(length(col("token")) > 0)

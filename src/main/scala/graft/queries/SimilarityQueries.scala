@@ -279,7 +279,6 @@ object SimilarityQueries {
   val q67 = Q(
     "q67_jaro_winkler_join",
     (s, d) => {
-      graft.functions.StringExprs.register(s)
       graft.ops.StringSimJoin.selfJoinDistinct(
           Tables.part(s, d), "p_partkey", "p_name", Seq("p_brand"),
           scorer = graft.functions.StringExprs.jaroWinkler,
@@ -636,7 +635,6 @@ object SimilarityQueries {
   val q116 = Q(
     "q116_int8_quant",
     (s, d) => {
-      graft.functions.VectorExprs.register(s)
       import graft.functions.VectorExprs.{dot, norm}
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
@@ -741,7 +739,6 @@ object SimilarityQueries {
   val q126 = Q(
     "q126_semantic_dedup",
     (s, d) => {
-      graft.functions.VectorExprs.register(s)
       import graft.functions.VectorExprs.{dot, norm}
       val emb = Tables.embeddings(s, d)
       // r20: the assignment carries the vector through its map pass
@@ -864,7 +861,6 @@ object SimilarityQueries {
   val q144 = Q(
     "q144_cluster_quality",
     (s, d) => {
-      graft.functions.VectorExprs.register(s)
       import graft.functions.VectorExprs.{dot, norm}
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
@@ -960,7 +956,6 @@ object SimilarityQueries {
   val q147 = Q(
     "q147_sorted_neighborhood",
     (s, d) => {
-      graft.functions.StringExprs.register(s)
       import graft.functions.StringExprs.jaroWinkler
       val base = Tables.part(s, d)
         .select(col("p_partkey").as("key"), col("p_name").as("name"))

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -2276,15 +2277,15 @@ object AtomicCommit {
   private[sources] def applyDvBitmap(df: DataFrame, partitionCol: String,
       sub: Map[(UTF8String, UTF8String), DvBitmap.Bitmap]): DataFrame =
     if (sub.isEmpty) df
-    else df.filter(DvBitmap.exprColumn(DvKeep(sub,
+    else df.filter(GraftBridge.column(DvKeep(sub,
       // the null partition probes as the SENTINEL (no decoded value can
       // collide with it): DvKeep is a null-intolerant ternary, so a raw
       // null here would null the filter and drop EVERY null-keyed row —
       // readSidecars keys the null partition's bitmaps the same way
-      DvBitmap.colExpr(coalesce(col(partitionCol).cast("string"),
+      GraftBridge.expression(coalesce(col(partitionCol).cast("string"),
         lit(GraftRelation.NullPartitionName))),
-      DvBitmap.colExpr(col("_metadata.file_name")),
-      DvBitmap.colExpr(col("_metadata.row_index")))))
+      GraftBridge.expression(col("_metadata.file_name")),
+      GraftBridge.expression(col("_metadata.row_index")))))
 
   private[sources] def applyDv(df: DataFrame, partitionCol: String,
                                gen: String, dv: Option[DataFrame]): DataFrame =

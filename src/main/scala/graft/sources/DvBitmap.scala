@@ -290,27 +290,6 @@ object DvBitmap {
     Some(out.view.mapValues(_.toMap).toMap)
   }
 
-  // Expression → Column and back. The constructors live behind
-  // `private[sql]` on org.apache.spark.sql.classic.ExpressionUtils
-  // (bytecode-public), so this goes through the same reflective door as
-  // GraftStreamSource's internalCreateDataFrame — resolved once, then
-  // plain invokes at plan-construction time only.
-  private lazy val exprUtilsModule: AnyRef =
-    Class.forName("org.apache.spark.sql.classic.ExpressionUtils$")
-      .getField("MODULE$").get(null)
-  private lazy val columnMethod =
-    exprUtilsModule.getClass.getMethod("column", classOf[Expression])
-  private lazy val expressionMethod =
-    exprUtilsModule.getClass.getMethod("expression",
-      classOf[org.apache.spark.sql.Column])
-
-  private[sources] def exprColumn(e: Expression): org.apache.spark.sql.Column =
-    columnMethod.invoke(exprUtilsModule, e)
-      .asInstanceOf[org.apache.spark.sql.Column]
-
-  private[sources] def colExpr(c: org.apache.spark.sql.Column): Expression =
-    expressionMethod.invoke(exprUtilsModule, c).asInstanceOf[Expression]
-
   /** Static probe for generated code: keep the row unless its file's
     * bitmap marks its position. Files with no bitmap have no deletes.
     * The UTF8String keys hash/compare by bytes, so the scan-side values

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.execution.streaming.Sink
 
 import graft.sources.{AtomicCommit, ManifestStore}
@@ -41,13 +42,7 @@ final class GraftStreamSink(root: String, store: ManifestStore,
     // the engine hands an incremental-execution DataFrame that cannot be
     // re-planned by a batch write directly — rebuild a BATCH frame over
     // the same computed rows (the standard V1 sink discipline)
-    val spark = data.sparkSession
-    val m = spark.getClass.getMethod("internalCreateDataFrame",
-      classOf[org.apache.spark.rdd.RDD[_]],
-      classOf[org.apache.spark.sql.types.StructType],
-      java.lang.Boolean.TYPE)
-    val batch = m.invoke(spark, data.queryExecution.toRdd, data.schema,
-      java.lang.Boolean.FALSE).asInstanceOf[DataFrame]
+    val batch = GraftBridge.overRows(data, isStreaming = false)
     mode match {
       case "append" =>
         AtomicStreamSink.commitBatch(root, store, partitionCol, queryKey,

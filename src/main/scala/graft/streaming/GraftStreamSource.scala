@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SQLContext}
+import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.execution.streaming.{Offset => V1Offset, Source}
 import org.apache.spark.sql.types.StructType
 
@@ -164,18 +165,12 @@ final class GraftStreamSource(sqlContext: SQLContext, root: String,
   /** Wrap the derived batch plan as a STREAMING DataFrame — Spark 4's
     * MicroBatchExecution asserts `isStreaming` on every V1 `getBatch`
     * result. `internalCreateDataFrame` is what Spark's own V1 file
-    * source calls for exactly this; it is `private[sql]` in source but
-    * public in bytecode, reached reflectively (one driver-side call per
-    * micro-batch — the executed plan underneath is unchanged).
+    * source calls for exactly this; it is `private[sql]`, reached through
+    * [[GraftBridge]] (one driver-side call per micro-batch — the executed
+    * plan underneath is unchanged).
     */
-  private def asStreaming(df: DataFrame): DataFrame = {
-    val session = df.sparkSession
-    val m = session.getClass.getMethod("internalCreateDataFrame",
-      classOf[org.apache.spark.rdd.RDD[_]], classOf[StructType],
-      java.lang.Boolean.TYPE)
-    m.invoke(session, df.queryExecution.toRdd, df.schema,
-      java.lang.Boolean.TRUE).asInstanceOf[DataFrame]
-  }
+  private def asStreaming(df: DataFrame): DataFrame =
+    GraftBridge.overRows(df, isStreaming = true)
 
   override def stop(): Unit = ()
 }

@@ -81,7 +81,6 @@ object StreamDedup {
   def nearDedupWithinWatermark(docs: DataFrame, tsCol: String, textCol: String,
                                horizon: String, nHashes: Int = 32,
                                bandRows: Int = 4): DataFrame = {
-    graft.functions.SigExprs.register(docs.sparkSession)
     val keyed = docs.withColumn("fp", nearFingerprint(textCol, nHashes, bandRows))
     if (docs.isStreaming)
       keyed.withWatermark(tsCol, horizon).dropDuplicatesWithinWatermark("fp")

@@ -4,15 +4,19 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession => ApiSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** The two `private[sql]` hooks graft's lowered SQL DML commands need —
-  * exposed through a package-located accessor, the standard extension
-  * technique (Delta and Iceberg ship the same kind of bridge):
+/** graft's one accessor for Spark's `private[sql]` hooks, located in
+  * Spark's package — the standard extension technique (Delta and Iceberg
+  * ship the same kind of bridge). Exactly these cross:
   *
-  *  - a resolved [[LogicalPlan]] → [[DataFrame]] (the UPDATE/MERGE
-  *    commands re-read their analyzed target/source plans as frames so
-  *    one DataFrame pipeline serves SQL and Scala identically), and
-  *  - a resolved catalyst [[Expression]] → [[Column]] (clause conditions
-  *    and SET values re-addressed into the merge join).
+  *  - `Dataset.ofRows`: a resolved [[LogicalPlan]] → [[DataFrame]] (the
+  *    UPDATE/MERGE commands, the change feed and the file index re-read
+  *    analyzed plans as frames);
+  *  - `ExpressionUtils.column` / `expression`: a catalyst [[Expression]]
+  *    ↔ [[Column]] (the graft kernels' Column API, the DML clause
+  *    conditions, the deletion-bitmap filter);
+  *  - `SparkSession.internalCreateDataFrame`: a frame's computed rows
+  *    re-wrapped as a batch or streaming frame (the stream sink and
+  *    source).
   *
   * Nothing else crosses the boundary; keep it that way.
   */
@@ -22,4 +26,11 @@ object GraftBridge {
     Dataset.ofRows(spark.asInstanceOf[SparkSession], plan)
 
   def column(e: Expression): Column = ExpressionUtils.column(e)
+
+  def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A new frame over `df`'s computed rows, flagged `isStreaming`. */
+  def overRows(df: DataFrame, isStreaming: Boolean): DataFrame =
+    df.sparkSession.asInstanceOf[SparkSession]
+      .internalCreateDataFrame(df.queryExecution.toRdd, df.schema, isStreaming)
 }

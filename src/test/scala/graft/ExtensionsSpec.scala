@@ -79,7 +79,7 @@ class ExtensionsSpec extends SparkSpec {
 
   test("raw SQL graft_nfc is injected by the extension (no Scala registration)") {
     // SparkSpec's session is built WITH the extension conf — the SQL name
-    // must resolve without any StringExprs.register call in this test
+    // must resolve without any registration call in this test
     val r = spark.sql(
       "SELECT graft_nfc('cafe\u0301') AS c").collect()(0)
     assert(r.getString(0) === "caf\u00e9")

@@ -165,7 +165,6 @@ class PipelineSpec extends SparkSpec {
 
   test("freq-items sketch is exact when capacity covers the vocabulary (q114 grade basis)") {
     import org.apache.spark.sql.functions._
-    graft.functions.SketchExprs.register(spark)
     val toks = Tables.documents(spark, sf0001)
       .select(explode(split(lower(col("text")), " +")).as("token"))
       .filter(length(col("token")) > 0)
@@ -181,7 +180,6 @@ class PipelineSpec extends SparkSpec {
 
   test("freq-items sketch under eviction: MG bound holds and heavy hitters survive") {
     import org.apache.spark.sql.functions._
-    graft.functions.SketchExprs.register(spark)
     // synthetic skew: item_0 appears 2000x, 1000 tail items 3x each;
     // N = 5000, capacity 16 => undercount <= N/(cap+1) = 295 (rounded up)
     val n = 5000

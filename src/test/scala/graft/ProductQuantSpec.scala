@@ -101,7 +101,6 @@ class ProductQuantSpec extends SparkSpec {
   }
 
   test("dirty inputs: null elements/geometry yield null, NaN never crashes, train skips bad rows") {
-    graft.functions.PqExprs.register(spark)
     val r = spark.sql("""
       SELECT graft_pq_encode(array(1.0d, CAST(NULL AS DOUBLE)),
                              array(1.0d, 0.0d, 0.0d, 1.0d), 1, 2) AS null_elem,

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{HyperplaneExprs, SigExprs, StringExprs, VectorExprs}
+import graft.functions.{HyperplaneExprs, StringExprs, VectorExprs}
 import graft.ops.{MinHash, SimilarityJoin, VectorSearch}
 
 /** The fused signature expressions must be BIT-IDENTICAL to the unfused
@@ -16,8 +16,6 @@ class SigExprsSpec extends SparkSpec {
     .limit(100)
 
   test("graft_hp_scores equals per-plane graft_dot columns exactly") {
-    VectorExprs.register(spark)
-    HyperplaneExprs.register(spark)
     val planes = VectorSearch.hyperplanes(8, 64)
     val unfused = emb.select(col("id"),
       array(planes.map(p => VectorExprs.dot(col("v"), typedLit(p))): _*).as("s"))
@@ -30,8 +28,6 @@ class SigExprsSpec extends SparkSpec {
   }
 
   test("graft_hp_bands equals the unfused sign-bit packing exactly") {
-    VectorExprs.register(spark)
-    HyperplaneExprs.register(spark)
     val nPlanes = 16; val nBands = 4; val rows = nPlanes / nBands
     val planes = VectorSearch.hyperplanes(nPlanes, 64)
     val bits = planes.map(p =>
@@ -46,7 +42,6 @@ class SigExprsSpec extends SparkSpec {
   }
 
   test("graft_minhash_sig equals the explode + min-aggregation formulation exactly") {
-    SigExprs.register(spark)
     val nHashes = 32
     val ps = MinHash.params(nHashes)
     val docs = Tables.documents(spark, sf0001)
@@ -66,7 +61,6 @@ class SigExprsSpec extends SparkSpec {
   }
 
   test("graft_simhash_sig equals the explode + 64-vote aggregation formulation exactly") {
-    SigExprs.register(spark)
     val docs = Tables.documents(spark, sf0001)
     val base = SimilarityJoin.tokenized(docs, "text")
       .select(col("doc_id").as("id"), explode(col("tokens")).as("tok"))
@@ -87,7 +81,6 @@ class SigExprsSpec extends SparkSpec {
   }
 
   test("graft_shingles equals the transform/array_distinct HOF formulation exactly") {
-    graft.functions.SetExprs.register(spark)
     val n = 3
     val docs = Tables.documents(spark, sf0001)
     val toks = split(col("text"), " +")
@@ -107,7 +100,6 @@ class SigExprsSpec extends SparkSpec {
   }
 
   test("graft_jaro_winkler pins the textbook values incl. the boost threshold") {
-    graft.functions.StringExprs.register(spark)
     val r = spark.sql("""
       SELECT graft_jaro_winkler('martha', 'marhta')     AS w1,
              graft_jaro_winkler('dixon', 'dicksonx')    AS w2,
@@ -127,7 +119,6 @@ class SigExprsSpec extends SparkSpec {
   }
 
   test("graft_nfc composes combining sequences; dedup keys unify render-identical text") {
-    StringExprs.register(spark)
     // explicit \u escapes: an editor or VCS could silently re-normalize a
     // literal combining sequence, hollowing the test out
     val pre = "caf\u00e9"           // precomposed e-acute
@@ -161,8 +152,6 @@ class SigExprsSpec extends SparkSpec {
   }
 
   test("fused expressions null out on malformed input instead of mis-hashing") {
-    HyperplaneExprs.register(spark)
-    SigExprs.register(spark)
     val r = spark.sql("""
       SELECT graft_hp_scores(cast(array() AS array<double>), array(1.0d, 2.0d)) AS empty_vec,
              graft_hp_scores(array(1.0d, 2.0d), array(1.0d, 2.0d, 3.0d)) AS bad_dim,

@@ -95,7 +95,6 @@ class StreamDedupSpec extends SparkSpec {
 
   test("near-dup fingerprint: appended-token variants mostly collide; disjoint docs never") {
     import spark.implicits._
-    graft.functions.SigExprs.register(spark)
     val docs = Tables.documents(spark, sf0001).limit(100)
     val orig = docs.select(col("doc_id"),
       StreamDedup.nearFingerprint("text").as("fp"))
@@ -118,7 +117,6 @@ class StreamDedupSpec extends SparkSpec {
   test("streaming near-dup: variant within horizon drops, disjoint survives, eviction re-emits") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    graft.functions.SigExprs.register(spark)
     val docA = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
     val docC = "completely different tokens with nothing shared at all whatsoever"
     // a 1-token-appended variant collides on the band key w.p. (12/13)^4 —
