@@ -2,9 +2,9 @@ package graft
 
 /** Temp-dir discipline for queries that must touch disk (format
   * round-trips, streaming checkpoints): every directory created here is
-  * removed at JVM exit, so repeated executions inside one session (Bench
-  * runs each query 3–5 times) cannot leak corpus copies or checkpoint
-  * state past the process.
+  * removed, at the latest at JVM exit, so repeated executions inside one
+  * session (Bench runs each query 3–5 times) cannot leak corpus copies or
+  * checkpoint state past the process.
   */
 object Scratch {
   private def deleteRecursively(f: java.io.File): Unit = {
@@ -22,6 +22,17 @@ object Scratch {
     val p = java.nio.file.Files.createTempDirectory(prefix)
     Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(p.toFile)))
     p.toString
+  }
+
+  /** A fresh temp dir for the duration of `body`, deleted when `body`
+    * returns or throws. Use for the checkpoint of a streaming query that
+    * stops inside `body`: nothing reads it afterwards, and an
+    * [[ephemeral]] dir would keep one directory and one shutdown hook per
+    * run until JVM exit.
+    */
+  def scoped[A](prefix: String)(body: String => A): A = {
+    val p = java.nio.file.Files.createTempDirectory(prefix)
+    try body(p.toString) finally deleteRecursively(p.toFile)
   }
 
   private val fixed = new java.util.concurrent.ConcurrentHashMap[String, String]()

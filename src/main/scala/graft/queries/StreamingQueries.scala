@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.{Det, Tables}
-import graft.streaming.{StreamJoin, WindowTopK}
+import graft.{Det, Scratch, Tables}
+import graft.streaming.{StreamDedup, StreamJoin, WindowTopK}
 
 /** SURVEY.md §2 rows 44–47: streaming window semantics.
   *
@@ -22,7 +22,7 @@ import graft.streaming.{StreamJoin, WindowTopK}
   * 10-minute watermark matters: state eviction is what makes the job run
   * forever.
   */
-object StreamingQueries {
+object StreamingQueries extends org.apache.spark.internal.Logging {
 
   private val fmt = "yyyy-MM-dd HH:mm:ss"
 
@@ -104,6 +104,13 @@ object StreamingQueries {
   // append mode, and returns the emitted rows. Append emission and late-row
   // dropping are runtime behavior — no SQL oracle exists, so the driver's
   // rows-only check applies; StreamingSpec pins the semantics.
+  // Cost per micro-batch (`triggerExecution` ms, of it `addBatch`, the
+  // batch's one stateful job; sf0.01, local[4], three warm runs): data
+  // batch 1 (5,000 rows) 750–930 (580–730), its idle batch 430–540
+  // (335–430), data batch 2 (5,001 rows) 430–500 (340–415), its idle batch
+  // 330–550 (250–430). The offset and commit logs add about 65 ms to each.
+  // The idle batches stay: only the trailing one emits the windows that
+  // the last watermark closes.
   val q47 = Q(
     "q47_stream_watermark",
     (s, d) => {
@@ -114,44 +121,16 @@ object StreamingQueries {
         .collect()
         .sortBy(r => (r._2.getTime, r._1))
       val (batch1, batch2) = rows.splitAt(rows.length / 2)
-
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val stream = MemoryStream[(Long, java.sql.Timestamp, String)]
-      val agg = stream.toDF().toDF("event_id", "ts", "event_type")
-        .withWatermark("ts", "10 minutes")
-        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(date_format(col("w.start"), fmt).as("ws"), col("event_type"), col("n"))
-
-      val ckpt = graft.Scratch.ephemeral("graft_q47_ckpt")
-      val sinkName = "graft_q47_sink"
-      // The state store commits once per shuffle partition per micro-batch;
-      // at this key cardinality (windows × event types) 4 partitions is
-      // plenty, and the session-wide width is restored afterward. The
-      // partition count is baked into the new checkpoint at first start.
-      // (Measured: 8 vs 4 makes no difference to q47 — its ~2.7 s warm cost
-      // is the MemoryStream query lifecycle, not state commits.)
-      // a prior invocation in this session leaves its memory-sink view
-      // behind — drop it so the query function is re-runnable
-      s.catalog.dropTempView(sinkName)
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val query = agg.writeStream
-          .format("memory").queryName(sinkName).outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .start()
-        try {
-          stream.addData(batch1.toSeq)
-          query.processAllAvailable()
-          // batch2 plus a late replay of the globally oldest event: its event
-          // time is far below the watermark after batch1, so append mode must
-          // drop it rather than re-open the closed window.
-          stream.addData(batch2.toSeq :+ rows.head)
-          query.processAllAvailable()
-        } finally query.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.table(sinkName).orderBy("ws", "event_type")
+      // batch2 plus a late replay of the globally oldest event: its event
+      // time is far below the watermark after batch1, so append mode must
+      // drop it rather than re-open the closed window.
+      memorySinkRun(s, "q47", Seq(batch1.toSeq, batch2.toSeq :+ rows.head), None) {
+        _.toDF("event_id", "ts", "event_type")
+          .withWatermark("ts", "10 minutes")
+          .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+          .agg(count(lit(1)).as("n"))
+          .select(date_format(col("w.start"), fmt).as("ws"), col("event_type"), col("n"))
+      }.orderBy("ws", "event_type")
     },
     None)
 
@@ -174,33 +153,14 @@ object StreamingQueries {
         (id, new java.sql.Timestamp(base + id * 1000L), t)
       }
       val (batch1, batch2) = rows.splitAt(rows.length / 2)
-
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val stream = MemoryStream[(Long, java.sql.Timestamp, String)]
-      val deduped = graft.streaming.StreamDedup.dedupWithinWatermark(
-        stream.toDF().toDF("doc_id", "ts", "text"), "ts", "text", "10 minutes")
-        .select(col("doc_id"), col("fp"))
-
-      val ckpt = graft.Scratch.ephemeral("graft_q59_ckpt")
-      val sinkName = "graft_q59_sink"
-      s.catalog.dropTempView(sinkName)
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4") // state-store commits per partition (see q47)
-      try {
-        val query = deduped.writeStream
-          .format("memory").queryName(sinkName).outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .start()
-        try {
-          stream.addData(batch1.toSeq)
-          query.processAllAvailable()
-          // batch2 + replay: the first doc's content is in state (its
-          // 10-minute expiry is ahead of the watermark) → dropped as dup
-          stream.addData(batch2.toSeq :+ rows.head)
-          query.processAllAvailable()
-        } finally query.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.table(sinkName).orderBy("doc_id")
+      val horizonMin = 10
+      // batch2 + replay: the first doc's content is in state (its
+      // 10-minute expiry is ahead of the watermark) → dropped as dup
+      memorySinkRun(s, "q59", Seq(batch1.toSeq, batch2.toSeq :+ rows.head), Some(horizonMin)) {
+        in => StreamDedup.dedupWithinWatermark(
+          in.toDF("doc_id", "ts", "text"), "ts", "text", s"$horizonMin minutes")
+          .select(col("doc_id"), col("fp"))
+      }.orderBy("doc_id")
     },
     None)
 
@@ -227,33 +187,80 @@ object StreamingQueries {
       val batch2 = docs.take(50).map { case (id, t) =>
         (id + 1000000L, new java.sql.Timestamp(lastTs + id * 1000L), t + " xtra")
       }
-
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val stream = MemoryStream[(Long, java.sql.Timestamp, String)]
-      val deduped = graft.streaming.StreamDedup.nearDedupWithinWatermark(
-        stream.toDF().toDF("doc_id", "ts", "text"), "ts", "text", "60 minutes")
-        .select(col("doc_id"), col("fp"))
-
-      val ckpt = graft.Scratch.ephemeral("graft_q70_ckpt")
-      val sinkName = "graft_q70_sink"
-      s.catalog.dropTempView(sinkName)
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4") // state-store commits per partition (see q47)
-      try {
-        val query = deduped.writeStream
-          .format("memory").queryName(sinkName).outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .start()
-        try {
-          stream.addData(batch1.toSeq)
-          query.processAllAvailable()
-          stream.addData(batch2.toSeq)
-          query.processAllAvailable()
-        } finally query.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.table(sinkName).orderBy("doc_id")
+      val horizonMin = 60
+      memorySinkRun(s, "q70", Seq(batch1.toSeq, batch2.toSeq), Some(horizonMin)) {
+        in => StreamDedup.nearDedupWithinWatermark(
+          in.toDF("doc_id", "ts", "text"), "ts", "text", s"$horizonMin minutes")
+          .select(col("doc_id"), col("fp"))
+      }.orderBy("doc_id")
     },
     None)
+
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+  private val NoDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+  /** The memory-sink lifecycle of q47, q59 and q70: feeds `batches` in
+    * order through a MemoryStream into `plan` (whose input columns are
+    * `_1`, `_2` = event time, `_3`), one `processAllAvailable` per batch,
+    * stops the query, and returns the memory sink `graft_<key>_sink`.
+    *
+    * - State partitions: min(4, the session's shuffle partitions). The
+    *   state store commits once per partition per micro-batch, and the
+    *   count is baked into the checkpoint at first start.
+    * - Idle (no-data) micro-batches: a dedup plan (`dedupHorizonMin`
+    *   set) runs without them when the event times fed before the last
+    *   batch span less than 2 × the horizon; the
+    *   [[graft.streaming.StreamDedup]] doc shows the output is then the
+    *   same. Windowed plans (`None`) keep them on.
+    * - Both confs are set for the run only and restored afterwards, also
+    *   when a batch throws; the checkpoint is deleted once the query has
+    *   stopped (a memory sink cannot be restarted from it).
+    *
+    * Logs one INFO line per run: state partitions, the idle-batch choice
+    * and its reason, and each micro-batch's id, input rows and
+    * `triggerExecution` ms.
+    */
+  private[graft] def memorySinkRun(s: SparkSession, key: String,
+      batches: Seq[Seq[(Long, java.sql.Timestamp, String)]],
+      dedupHorizonMin: Option[Int])(plan: DataFrame => DataFrame): DataFrame = {
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val stream = MemoryStream[(Long, java.sql.Timestamp, String)]
+    val sinkName = s"graft_${key}_sink"
+    val statePartitions = math.min(4, s.conf.get(ShufflePartitions).toInt)
+    val fedBeforeLast = batches.dropRight(1).flatten.map(_._2.getTime)
+    val spanMs = if (fedBeforeLast.isEmpty) 0L else fedBeforeLast.max - fedBeforeLast.min
+    val idle = dedupHorizonMin.forall(h => spanMs >= 2 * h * 60000L)
+    // a prior run in this session leaves its memory-sink view behind
+    s.catalog.dropTempView(sinkName)
+    val prior = Seq(ShufflePartitions, NoDataBatches).map(k => k -> s.conf.getAll.get(k))
+    s.conf.set(ShufflePartitions, statePartitions.toString)
+    s.conf.set(NoDataBatches, idle.toString)
+    val progress = try Scratch.scoped(s"graft_${key}_ckpt") { ckpt =>
+      // the first batch is fed before the start, so the first trigger has
+      // data and reports no empty progress event
+      stream.addData(batches.head)
+      val query = plan(stream.toDF()).writeStream
+        .format("memory").queryName(sinkName).outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .start()
+      try {
+        query.processAllAvailable()
+        batches.tail.foreach { b => stream.addData(b); query.processAllAvailable() }
+      } finally query.stop()
+      query.recentProgress
+    } finally prior.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+    val why = dedupHorizonMin.fold("windowed plan: emits on the watermark")(h =>
+      s"span ${spanMs / 1000} s ${if (idle) ">=" else "<"} 2 x horizon = ${2 * h * 60} s")
+    logInfo(s"$sinkName: $statePartitions state partitions, idle batches " +
+      s"${if (idle) "on" else "off"} ($why); batches " +
+      progress.map(p => s"${p.batchId}: ${p.numInputRows} rows, " +
+        s"${p.durationMs.get("triggerExecution")} ms").mkString("[", "; ", "]"))
+    s.table(sinkName)
+  }
 
   // ---- 74. typed stateful sessionization, batch-graded (added r7) ----------
   // graft.streaming.Sessionize.sessionCounts — flatMapGroupsWithState with a
@@ -435,18 +442,19 @@ object StreamingQueries {
         .as[(Long, String, Long)].collect().sortBy(_._1)
       val (b1, b2) = docs.splitAt(docs.length / 2)
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val out = graft.Scratch.ephemeral("graft_q129_sink")
-      val ckpt = graft.Scratch.ephemeral("graft_q129_ckpt")
+      val out = Scratch.ephemeral("graft_q129_sink")
       val stream = MemoryStream[(Long, String, Long)]
-      val query = stream.toDF().toDF("doc_id", "lang", "n_chars").writeStream
-        .foreachBatch((df: DataFrame, id: Long) =>
-          graft.streaming.IdempotentSink.writeBatch(out)(df, id))
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      try {
-        stream.addData(b1.toSeq); query.processAllAvailable()
-        stream.addData(b2.toSeq); query.processAllAvailable()
-      } finally query.stop()
+      Scratch.scoped("graft_q129_ckpt") { ckpt =>
+        val query = stream.toDF().toDF("doc_id", "lang", "n_chars").writeStream
+          .foreachBatch((df: DataFrame, id: Long) =>
+            graft.streaming.IdempotentSink.writeBatch(out)(df, id))
+          .option("checkpointLocation", ckpt)
+          .outputMode("append").start()
+        try {
+          stream.addData(b1.toSeq); query.processAllAvailable()
+          stream.addData(b2.toSeq); query.processAllAvailable()
+        } finally query.stop()
+      }
       // the crash contract: batch 0 delivered AGAIN with the same id
       graft.streaming.IdempotentSink.writeBatch(out)(
         b1.toSeq.toDF("doc_id", "lang", "n_chars"), 0L)

@@ -25,6 +25,21 @@ import org.apache.spark.sql.functions._
   * Works unchanged on a batch DataFrame (the watermark is a no-op there and
   * the dedup collapses to `dropDuplicates` on the fingerprint) — the
   * batch/stream parity that StreamDedupSpec pins.
+  *
+  * Idle micro-batches. After a batch advances the watermark, Spark runs a
+  * no-data batch whose only work here is evicting entries whose expiry
+  * (event time + horizon) is at or below the watermark. Skipping them
+  * (`spark.sql.streaming.noDataMicroBatches.enabled` = false) leaves the
+  * output of a finite run unchanged when the event times fed before its
+  * last batch span less than 2 × the horizon: every watermark before the
+  * last batch is at most (max − horizon), below every earlier entry's
+  * expiry (≥ min + horizon), so no idle batch could have evicted an entry
+  * before the last batch looks it up. Late-row filtering reads the same
+  * watermark either way, rows are emitted as they arrive, and the
+  * trailing idle batch emits nothing. Above that span an idle batch can
+  * evict an entry a later duplicate then misses, so the batches stay on.
+  * `StreamingQueries.memorySinkRun` applies this rule; StreamDedupSpec
+  * checks it either side of the bound.
   */
 object StreamDedup {
 

@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryException, StreamingQueryListener}
+import graft.queries.StreamingQueries.memorySinkRun
 import graft.streaming.StreamDedup
 
 /** Runtime semantics of the streaming exact-dedup operator: in-batch and
@@ -14,6 +17,58 @@ class StreamDedupSpec extends SparkSpec {
 
   private val base = java.sql.Timestamp.valueOf("2026-01-01 10:00:00")
   private def at(min: Int) = new java.sql.Timestamp(base.getTime + min * 60000L)
+  private def atSec(sec: Long) = new java.sql.Timestamp(base.getTime + sec * 1000L)
+  private type Fed = (Long, java.sql.Timestamp, String)
+  private val NoData = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+  /** Runs `body` and counts the progress events a session listener sees
+    * for the streaming query named `name`: one per micro-batch run.
+    */
+  private def progressEvents[A](name: String)(body: => A): (A, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.name == name) n.incrementAndGet()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try {
+      val a = body
+      org.apache.spark.GraftListenerDrain(spark.sparkContext)
+      (a, n.get)
+    } finally spark.streams.removeListener(listener)
+  }
+
+  /** The memory-sink lifecycle spelled out, with idle batches forced on
+    * or off and 4 state partitions; returns the sink's (doc_id, fp) rows.
+    */
+  private def inlineRun(sinkName: String, batches: Seq[Seq[Fed]], idle: Boolean)(
+      plan: DataFrame => DataFrame): Seq[(Long, Long)] = {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val stream = MemoryStream[Fed]
+    spark.catalog.dropTempView(sinkName)
+    withSQLConf("spark.sql.shuffle.partitions" -> "4", NoData -> idle.toString) {
+      Scratch.scoped("graft_spec_inline_ckpt") { ckpt =>
+        stream.addData(batches.head) // no empty first trigger to count
+        val query = plan(stream.toDF()).writeStream
+          .format("memory").queryName(sinkName).outputMode("append")
+          .option("checkpointLocation", ckpt)
+          .start()
+        try {
+          query.processAllAvailable()
+          batches.tail.foreach { b => stream.addData(b); query.processAllAvailable() }
+        } finally query.stop()
+      }
+    }
+    sinkRows(spark.table(sinkName))
+  }
+
+  private def sinkRows(df: DataFrame): Seq[(Long, Long)] =
+    df.select(col("doc_id"), col("fp")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
 
   test("streaming dedup: duplicate handling across the watermark horizon") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -186,5 +241,93 @@ class StreamDedupSpec extends SparkSpec {
     val expected = docs.withColumn("fp", StreamDedup.fingerprint("text"))
       .dropDuplicates("fp")
     assert(streamedOp.count() === expected.count())
+  }
+
+  test("q70 runs two micro-batches at sf0.01 and returns the always-idle lifecycle's rows") {
+    val (rows, batches) = progressEvents("graft_q70_sink") {
+      sinkRows(SparkEntry.queries("q70_stream_neardup")(spark, sf001))
+    }
+    assert(batches === 2, "q70's two data batches need no idle batch")
+    // q70's input, fed through the lifecycle with idle batches on
+    import spark.implicits._
+    val docs = Tables.documents(spark, sf001)
+      .select(col("doc_id"), col("text")).as[(Long, String)]
+      .collect().sortBy(_._1)
+    val b1 = docs.map { case (id, t) => (id, atSec(id), t) }.toSeq
+    val b2 = docs.take(50).map { case (id, t) =>
+      (id + 1000000L, atSec(docs.length + id), t + " xtra") }.toSeq
+    val (idleRows, idleBatches) = progressEvents("graft_spec_q70_idle") {
+      inlineRun("graft_spec_q70_idle", Seq(b1, b2), idle = true) { in =>
+        StreamDedup.nearDedupWithinWatermark(
+          in.toDF("doc_id", "ts", "text"), "ts", "text", "60 minutes")
+      }
+    }
+    assert(idleBatches === 4, "each data batch followed by its idle batch")
+    assert(rows === idleRows)
+  }
+
+  test("idle-batch rule, either side of 2 × horizon: the rule's run equals the always-idle run") {
+    val horizonMin = 10
+    val bound = 2L * horizonMin * 60
+    val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "exact" -> (in => StreamDedup.dedupWithinWatermark(
+        in.toDF("doc_id", "ts", "text"), "ts", "text", s"$horizonMin minutes")),
+      "near" -> (in => StreamDedup.nearDedupWithinWatermark(
+        in.toDF("doc_id", "ts", "text"), "ts", "text", s"$horizonMin minutes")))
+    for (span <- Seq(bound - 1, bound, bound + 1); (opName, op) <- ops) {
+      // batch 1 spreads 8 disjoint documents over [0, span]; batch 2
+      // repeats each just past batch 1's last event time (not late), plus
+      // one fresh document. Over the bound, the idle batch after batch 1
+      // evicts document 0, so its repeat is emitted only with idle batches.
+      val text = (i: Long) => s"d$i a$i b$i c$i"
+      val b1 = (0L until 8L).map(i => (i, atSec(i * span / 7), text(i)))
+      val b2 = (0L until 8L).map(i => (100L + i, atSec(span + 1 + i), text(i))) :+
+        ((200L, atSec(span + 10), "fresh"))
+      val label = s"$opName, span $span s against ${bound} s"
+      val (ruleRows, ruleBatches) = progressEvents("graft_spec_rule_sink") {
+        sinkRows(memorySinkRun(spark, "spec_rule", Seq(b1, b2), Some(horizonMin))(op))
+      }
+      val idleRows = inlineRun("graft_spec_idle", Seq(b1, b2), idle = true)(op)
+      assert(ruleRows === idleRows, label)
+      if (span < bound) assert(ruleBatches === 2, label)
+      else {
+        assert(ruleBatches === 4, s"$label: idle batches must stay on")
+        val skipped = inlineRun("graft_spec_skip", Seq(b1, b2), idle = false)(op)
+        assert(skipped !== idleRows, s"$label: the stream must expose a skipped eviction")
+        assert(idleRows.map(_._1).contains(100L), label)
+      }
+    }
+  }
+
+  test("memorySinkRun leaves no active query, prior confs and no checkpoint, also when a batch throws") {
+    val keys = Seq("spark.sql.shuffle.partitions", NoData)
+    def confs = keys.map(k => k -> spark.conf.getAll.get(k))
+    def ckpts(key: String) =
+      new java.io.File(System.getProperty("java.io.tmpdir")).listFiles()
+        .map(_.getName).filter(_.startsWith(s"graft_${key}_ckpt")).toSet
+    val q47Rows = for (explicit <- Seq(Nil, Seq(keys(0) -> "3", NoData -> "false")))
+      yield withSQLConf(explicit: _*) {
+        val prior = confs
+        val priorDirs = Seq("q47", "q59", "q70", "spec_throw").map(ckpts)
+        val q47 = SparkEntry.queries("q47_stream_watermark")(spark, sf0001).collect().toSeq
+        for (q <- Seq("q59_stream_dedup", "q70_stream_neardup"))
+          assert(SparkEntry.queries(q)(spark, sf0001).count() > 0, q)
+        assert(spark.streams.active.isEmpty)
+        assert(confs === prior, s"after the queries, caller confs $explicit")
+        val thrown = intercept[StreamingQueryException] {
+          memorySinkRun(spark, "spec_throw", Seq(Seq((1L, at(0), "x"))), Some(10)) {
+            _.withColumn("_1", when(col("_1") >= 0, raise_error(lit("boom")))
+              .otherwise(col("_1")))
+          }
+        }
+        assert(thrown.getMessage.contains("boom"))
+        assert(spark.streams.active.isEmpty)
+        assert(confs === prior, s"after a failed batch, caller confs $explicit")
+        assert(Seq("q47", "q59", "q70", "spec_throw").map(ckpts) === priorDirs,
+          "a checkpoint directory outlived its query")
+        q47
+      }
+    // q47 keeps its idle batches even when the caller turned them off
+    assert(q47Rows(0) === q47Rows(1))
   }
 }
