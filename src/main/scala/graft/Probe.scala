@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.{GraftListenerDrain, SparkContext}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
@@ -13,10 +14,12 @@ import org.apache.spark.sql.execution.FormattedMode
   *  - `profile <query>...`: wall time and row count of each query, run
   *    SPARK_GRAFT_REPS times (default 2) so warm cost shows next to cold,
   *    with the driver jobs, completed stages, tasks and shuffle read/write
-  *    bytes each rep scheduled — the counters raw wall time hides (a
-  *    recompute shows up as duplicated stages, a dead action as an extra
-  *    job). With SPARK_GRAFT_EXECPLAN set, the last rep also prints the
-  *    final adaptive plan.
+  *    bytes each rep scheduled, and the generated classes it compiled —
+  *    the counters raw wall time hides (a recompute shows up as duplicated
+  *    stages, a dead action as an extra job, a codegen cache too small for
+  *    the plans as `compiles` above 0 on warm reps). With
+  *    SPARK_GRAFT_EXECPLAN set, the last rep also prints the final
+  *    adaptive plan.
   *  - `plans <tag> <suffix> <query>...`: writes each query's formatted
   *    physical plan to `plans/<tag>/<shortKey>_<suffix>.txt`.
   *  - `explain <query>...`: prints the formatted physical plan.
@@ -94,9 +97,13 @@ object Probe {
     }
   }
 
-  /** Jobs started, stages completed, their tasks and shuffle bytes. */
+  /** Jobs started, stages completed, their tasks and shuffle bytes, and
+    * the classes Spark's code generator compiled since the last reset.
+    */
   private final class StageCounters extends SparkListener {
     private val jobs, stages, tasks, shufRead, shufWrite = new AtomicLong(0L)
+    private var compiled0 = 0L
+    private def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
     override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
 
@@ -112,12 +119,14 @@ object Probe {
     def reset(sc: SparkContext): Unit = {
       GraftListenerDrain(sc)
       Seq(jobs, stages, tasks, shufRead, shufWrite).foreach(_.set(0L))
+      compiled0 = compiled
     }
 
     def report(sc: SparkContext): String = {
       GraftListenerDrain(sc)
       s"jobs=${jobs.get} stages=${stages.get} tasks=${tasks.get} " +
-        s"shufRead=${shufRead.get / 1024}KiB shufWrite=${shufWrite.get / 1024}KiB"
+        s"shufRead=${shufRead.get / 1024}KiB shufWrite=${shufWrite.get / 1024}KiB " +
+        s"compiles=${compiled - compiled0}"
     }
   }
 }

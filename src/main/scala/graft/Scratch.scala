@@ -26,9 +26,9 @@ object Scratch {
 
   /** A fresh temp dir for the duration of `body`, deleted when `body`
     * returns or throws. Use for the checkpoint of a streaming query that
-    * stops inside `body`: nothing reads it afterwards, and an
-    * [[ephemeral]] dir would keep one directory and one shutdown hook per
-    * run until JVM exit.
+    * stops inside `body`, or a sink whose rows `body` reads back eagerly:
+    * nothing reads it afterwards, and an [[ephemeral]] dir would keep one
+    * directory and one shutdown hook per run until JVM exit.
     */
   def scoped[A](prefix: String)(body: String => A): A = {
     val p = java.nio.file.Files.createTempDirectory(prefix)

@@ -54,9 +54,21 @@ object DotProductRewrite extends Rule[LogicalPlan] {
   * kernels with no Scala at all — SURVEY §3.3's SQL entry point. A session
   * built without the conf gets the same functions from
   * `graft.functions.Kernels.register`; the Scala Column API needs neither.
+  *
+  * The first graft session in a JVM also sizes Spark's cache of compiled
+  * generated classes to [[CodegenCache.MaxEntries]] (Spark's default of
+  * 100 is below one pass over graft's plans, which then recompiles the
+  * same code every pass) and logs one INFO line with the size (logger
+  * `graft.plans.CodegenCache`). An application's own
+  * `spark.sql.codegen.cache.maxEntries` (`--conf`, `-Dspark.…`, the
+  * builder) wins. If this JVM compiled classes before the first graft
+  * session, the size is already fixed: one WARN names the conf to set
+  * instead. Executor JVMs of a cluster size their own cache from the
+  * application's conf; this does not reach them.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    CodegenCache()
     ext.injectOptimizerRule(_ => DotProductRewrite)
     // AFTER V2ScanRelationPushDown (the pre-CBO batch), so the rule sees
     // the pushed DataSourceV2ScanRelation + V1ScanWrapper it prices.

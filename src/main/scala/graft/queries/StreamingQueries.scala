@@ -442,26 +442,30 @@ object StreamingQueries extends org.apache.spark.internal.Logging {
         .as[(Long, String, Long)].collect().sortBy(_._1)
       val (b1, b2) = docs.splitAt(docs.length / 2)
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val out = Scratch.ephemeral("graft_q129_sink")
       val stream = MemoryStream[(Long, String, Long)]
-      Scratch.scoped("graft_q129_ckpt") { ckpt =>
-        val query = stream.toDF().toDF("doc_id", "lang", "n_chars").writeStream
-          .foreachBatch((df: DataFrame, id: Long) =>
-            graft.streaming.IdempotentSink.writeBatch(out)(df, id))
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").start()
-        try {
-          stream.addData(b1.toSeq); query.processAllAvailable()
-          stream.addData(b2.toSeq); query.processAllAvailable()
-        } finally query.stop()
+      // the per-lang rows are read out of the sink before it is deleted
+      // and returned as a local relation of the same schema and order
+      Scratch.scoped("graft_q129_sink") { out =>
+        Scratch.scoped("graft_q129_ckpt") { ckpt =>
+          val query = stream.toDF().toDF("doc_id", "lang", "n_chars").writeStream
+            .foreachBatch((df: DataFrame, id: Long) =>
+              graft.streaming.IdempotentSink.writeBatch(out)(df, id))
+            .option("checkpointLocation", ckpt)
+            .outputMode("append").start()
+          try {
+            stream.addData(b1.toSeq); query.processAllAvailable()
+            stream.addData(b2.toSeq); query.processAllAvailable()
+          } finally query.stop()
+        }
+        // the crash contract: batch 0 delivered AGAIN with the same id
+        graft.streaming.IdempotentSink.writeBatch(out)(
+          b1.toSeq.toDF("doc_id", "lang", "n_chars"), 0L)
+        val perLang = graft.streaming.IdempotentSink.read(s, out)
+          .groupBy("lang")
+          .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars"))
+          .orderBy("lang")
+        s.createDataFrame(java.util.Arrays.asList(perLang.collect(): _*), perLang.schema)
       }
-      // the crash contract: batch 0 delivered AGAIN with the same id
-      graft.streaming.IdempotentSink.writeBatch(out)(
-        b1.toSeq.toDF("doc_id", "lang", "n_chars"), 0L)
-      graft.streaming.IdempotentSink.read(s, out)
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars"))
-        .orderBy("lang")
     },
     Some("""SELECT lang, count(*) AS n_docs, sum(n_chars)::BIGINT AS n_chars
             FROM documents GROUP BY lang ORDER BY lang"""))

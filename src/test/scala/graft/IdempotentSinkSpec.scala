@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.functions.{col, count, lit, sum}
+import org.apache.spark.sql.types._
 import graft.streaming.IdempotentSink
 
 class IdempotentSinkSpec extends SparkSpec {
@@ -26,5 +28,22 @@ class IdempotentSinkSpec extends SparkSpec {
     b0.write.mode("append").parquet(naive)
     assert(spark.read.parquet(naive).count() === 4L,
       "control: an append sink duplicates the replayed batch")
+  }
+
+  test("q129 leaves no sink or checkpoint directory and returns the per-lang totals in order") {
+    def dirs = new java.io.File(System.getProperty("java.io.tmpdir")).listFiles()
+      .map(_.getName).filter(_.startsWith("graft_q129_")).toSet
+    val before = dirs
+    val runs = Seq.fill(2)(SparkEntry.queries("q129_stream_sink")(spark, sf0001))
+    assert(dirs === before, "a q129 execution left a directory behind")
+    val expected = Tables.documents(spark, sf0001)
+      .groupBy("lang")
+      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars"))
+      .orderBy("lang").collect().toSeq
+    for (df <- runs) {
+      assert(df.schema === StructType(Seq(StructField("lang", StringType),
+        StructField("n_docs", LongType, nullable = false), StructField("n_chars", LongType))))
+      assert(df.collect().toSeq === expected)
+    }
   }
 }
