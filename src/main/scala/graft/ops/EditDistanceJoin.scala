@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Q-gram prefix-filtered edit-distance self-join (Ed-Join, Xiao/Wang/Lin
@@ -47,7 +47,7 @@ object EditDistanceJoin {
     * generation delegates to the gram-prefix path over the SAME distinct
     * domain (still row-count-independent).
     */
-  val MaxBroadcastDomain: Long = 8192
+  val MaxBroadcastDomain: Int = 8192
 
   /** Distinct-domain edit-distance self-join — same contract as
     * [[selfJoin]], evaluated on the distinct-STRING domain first.
@@ -61,26 +61,32 @@ object EditDistanceJoin {
     * O(|domain|²) instead of O(rows²) and the rest of the plan output-bound.
     *
     * Plan: distinct(s) → pair-gen on the domain (broadcast all-pairs with
-    * length prune below [[MaxBroadcastDomain]]; the [[selfJoin]] gram-prefix
-    * index above it — `domainBroadcast` skips the bounded auto-probe) →
-    * symmetrize + add (s, s, 0) self-pairs → two expansion equi-joins back
-    * to ids on (string, block…), output-bound. The domain probe is an
-    * algorithm choice; the expansion joins are plain joins that Spark plans
-    * from sizes (the domain bounds comparisons, not matches, so the pair
-    * relation's size is known only at run time). No collect; the only
-    * driver-visible number is the domain probe's bounded count.
+    * length prune when a bounded probe sees at most [[MaxBroadcastDomain]]
+    * strings; the [[selfJoin]] gram-prefix index above it) → symmetrize +
+    * add (s, s, 0) self-pairs → two expansion equi-joins back to ids on
+    * (string, block…), output-bound ([[expandDomainPairs]]). The domain
+    * probe is an algorithm choice; the expansion joins are plain joins that
+    * Spark plans from sizes (the domain bounds comparisons, not matches, so
+    * the pair relation's size is known only at run time). No collect; the
+    * only driver-visible number is the domain probe's bounded count.
     */
   def selfJoinDistinct(df: DataFrame, idCol: String, strCol: String,
-                       blockCols: Seq[String], k: Int, q: Int = 2,
-                       domainBroadcast: Option[Boolean] = None): DataFrame = {
+                       blockCols: Seq[String], k: Int, q: Int = 2): DataFrame =
+    selfJoinDistinctTier(df, idCol, strCol, blockCols, k, q,
+      smallDomain = PlanStatMemo.boundedBy(distinctStrings(df, strCol), MaxBroadcastDomain))
+
+  /** [[selfJoinDistinct]] on one tier: broadcast all-pairs when
+    * `smallDomain`, the gram-prefix index otherwise.
+    */
+  private[graft] def selfJoinDistinctTier(df: DataFrame, idCol: String, strCol: String,
+                                          blockCols: Seq[String], k: Int, q: Int,
+                                          smallDomain: Boolean): DataFrame = {
     require(k >= 0, s"need k >= 0, got k=$k")
-    val strs = df.select(col(strCol).as("s")).filter(col("s").isNotNull).distinct()
-    val small = domainBroadcast.getOrElse(
-      PlanStatMemo.boundedBy(strs, MaxBroadcastDomain))
+    val strs = distinctStrings(df, strCol)
 
     // strict pairs over the domain: (l_s < r_s, dist ∈ 1..k)
     val strict =
-      if (small) {
+      if (smallDomain) {
         val x = strs.select(col("s").as("l_s"), length(col("s")).as("l_len"))
         val y = strs.select(col("s").as("r_s"), length(col("s")).as("r_len"))
         x.join(broadcast(y),
@@ -96,13 +102,26 @@ object EditDistanceJoin {
             broadcastGrams = true)
           .select(col("a_id").as("l_s"), col("b_id").as("r_s"), col("dist"))
       }
+    expandDomainPairs(df, idCol, strCol, blockCols, strs, strict, "dist", lit(0))
+  }
 
-    // both orientations + identical-string self-pairs, so each id pair
-    // (a_id < b_id) matches exactly one row — no post-expansion dedup
+  /** The distinct non-null string domain `s` of `strCol`. */
+  private[ops] def distinctStrings(df: DataFrame, strCol: String): DataFrame =
+    df.select(col(strCol).as("s")).filter(col("s").isNotNull).distinct()
+
+  /** Expand strict domain pairs (l_s < r_s, `value`) back to id pairs:
+    * both orientations plus each string's self-pair (`selfValue` over
+    * `strs`' column `s`), so each id pair (a_id < b_id) matches exactly one
+    * row — no post-expansion dedup — through two equi-joins on (string,
+    * block…). Output (a_id, b_id, blockCols…, `value`), totally ordered.
+    */
+  private[ops] def expandDomainPairs(df: DataFrame, idCol: String, strCol: String,
+                                     blockCols: Seq[String], strs: DataFrame,
+                                     strict: DataFrame, value: String,
+                                     selfValue: Column): DataFrame = {
     val sym = strict
-      .unionByName(strict.select(col("r_s").as("l_s"), col("l_s").as("r_s"), col("dist")))
-      .unionByName(strs.select(col("s").as("l_s"), col("s").as("r_s"),
-        lit(0).as("dist")))
+      .unionByName(strict.select(col("r_s").as("l_s"), col("l_s").as("r_s"), col(value)))
+      .unionByName(strs.select(col("s").as("l_s"), col("s").as("r_s"), selfValue.as(value)))
 
     val a = df.select(col(idCol).as("a_id") +: col(strCol).as("l_s") +:
       blockCols.map(col): _*)
@@ -112,7 +131,7 @@ object EditDistanceJoin {
     a.join(sym, "l_s")
       .join(b, (blockEq :+ (col("r_s") === col("b_s")))
         .reduce(_ && _) && col("a_id") < col("b_id"))
-      .select(col("a_id") +: col("b_id") +: blockCols.map(col) :+ col("dist"): _*)
+      .select(col("a_id") +: col("b_id") +: blockCols.map(col) :+ col(value): _*)
       .orderBy("a_id", "b_id")
   }
 

@@ -54,29 +54,39 @@ object GraphOps extends org.apache.spark.internal.Logging {
   /** Driver-path size estimate per directed edge row: two longs. */
   private val EdgeRowBytes = 16L
 
+  /** Propagation-loop round cap: with pointer jumping, 20 rounds cover any
+    * diameter up to ~2^20; a deeper graph hands off to alternating-star.
+    */
+  private val MaxPropagationRounds = 20
+
+  /** Alternating-star round cap: it converges in O(log n) rounds. */
+  private val MaxAlternatingRounds = 60
+
   /** Label each node of the undirected graph `edges` with the MINIMUM node
     * id reachable from it. Output: (`srcCol` → node id, `cluster_id`), one
     * row per distinct endpoint, totally ordered by node id.
     *
     * Dispatch: see the object scaladoc — broadcast-sized graphs finish on
-    * the driver (`maxIter` / `fallback` do not apply: the union-find
-    * always completes); larger ones run the pointer-jumping loop
-    * (`maxIter` is a round cap, so the default 20 covers any diameter up
-    * to ~2^20) with, when the cap is still exceeded, an automatic hand-off
-    * of the ALREADY MATERIALIZED edge relation to
-    * [[connectedComponentsAlternating]] (O(log n) rounds on any shape) —
-    * so a pathological input degrades to the alternating-star algorithm
-    * instead of failing. `fallback = false` restores the loud `require`
-    * for callers that would rather fail than absorb the extra rounds. A
-    * session threshold of −1 forces the loop.
+    * the driver (the union-find always completes); larger ones run the
+    * pointer-jumping loop, capped at 20 rounds (`MaxPropagationRounds`). A
+    * graph still changing labels at the cap hands its ALREADY
+    * MATERIALIZED edge relation to [[connectedComponentsAlternating]]
+    * (O(log n) rounds on any shape), so a pathological input degrades to
+    * the alternating-star algorithm instead of failing. Which path ran is
+    * the observed round count's choice, logged at INFO. A session
+    * threshold of −1 forces the loop.
     *
     * A NULL endpoint is not an edge to anything: the non-null nodes form
     * components over the all-non-null edges, and (as the loop's null-key
     * joins have always produced) one NULL-node row is labeled with the
     * minimum of its direct non-null partners, or NULL if it has none.
     */
-  def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-                          maxIter: Int = 20, fallback: Boolean = true): DataFrame = {
+  def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    connectedComponentsCapped(edges, srcCol, dstCol, MaxPropagationRounds)
+
+  /** [[connectedComponents]] with the propagation loop capped at `maxIter` rounds. */
+  private[graft] def connectedComponentsCapped(edges: DataFrame, srcCol: String,
+                                               dstCol: String, maxIter: Int): DataFrame = {
     // materialize the (typically expensive) directed edge relation ONCE,
     // observing its row count on the same job — every later consumer (the
     // driver collect, loop rounds, fallback) reads blocks, never the
@@ -152,11 +162,10 @@ object GraphOps extends org.apache.spark.internal.Logging {
       Materialized.release(prev)
       i += 1
     }
-    if (!converged && fallback) {
+    if (!converged) {
       decided(s"propagation loop, $i rounds without converging, alternating-star fallback")
       // the propagation cap is a ROUND bound (≈ log2 diameter with pointer
-      // jumping), not an error, when the alternating-star path is
-      // available: re-dispatch the materialized edge relation (the
+      // jumping), not an error: re-dispatch the materialized edge relation (the
       // expensive upstream plan, e.g. the whole similarity join, is NOT
       // recomputed; the callee canonicalizes orientation itself)
       Materialized.release(labels)
@@ -167,9 +176,7 @@ object GraphOps extends org.apache.spark.internal.Logging {
       Materialized.release(directed)
       return out
     }
-    decided(s"propagation loop, $i rounds" + (if (converged) "" else ", not converged"))
-    require(converged, s"connectedComponents did not converge in $maxIter rounds " +
-      "— log2(component diameter) exceeds the cap; raise maxIter or enable fallback")
+    decided(s"propagation loop, $i rounds")
     // the result depends only on the FINAL label checkpoint (released by
     // the ContextCleaner when the caller drops the result); the edge
     // relation served its last consumer in the loop above
@@ -233,8 +240,7 @@ object GraphOps extends org.apache.spark.internal.Logging {
     * rooted at its minimum, read out as (child → root).
     */
   def connectedComponentsAlternating(edges: DataFrame, srcCol: String,
-                                     dstCol: String,
-                                     maxRounds: Int = 60): DataFrame = {
+                                     dstCol: String): DataFrame = {
     def canon(df: DataFrame, keep: Column = col("a") =!= col("b")): DataFrame = df
       .filter(keep)
       .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
@@ -256,7 +262,7 @@ object GraphOps extends org.apache.spark.internal.Logging {
     var prevCount = e0.count()
     var converged = prevCount == 0L
     var i = 0
-    while (!converged && i < maxRounds) {
+    while (!converged && i < MaxAlternatingRounds) {
       // large-star
       val und = e.select(col("u"), col("v"))
         .union(e.select(col("v").as("u"), col("u").as("v")))
@@ -292,7 +298,7 @@ object GraphOps extends org.apache.spark.internal.Logging {
       if (prev ne e0) Materialized.release(prev)
       i += 1
     }
-    require(converged, s"alternating-star did not converge in $maxRounds rounds")
+    require(converged, s"alternating-star did not converge in $MaxAlternatingRounds rounds")
     // the result depends on `nodes` and the FINAL `e` (ContextCleaner-
     // released with the result); the seed edge checkpoint is dead unless
     // the loop never replaced it

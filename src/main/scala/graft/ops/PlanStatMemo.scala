@@ -75,8 +75,10 @@ object PlanStatMemo {
   /** The bounded-count probe the algorithm-choice sites share: is `df`
     * provably ≤ `limit` rows? The `limit(max+1)` bounds the probe's work
     * regardless of true cardinality; the result is memoized per
-    * (plan, files, limit).
+    * (plan, files, limit). `limit` must leave room for that extra row.
     */
-  def boundedBy(df: DataFrame, limit: Long): Boolean =
-    cached(df, s"le:$limit")(df.limit((limit + 1).toInt).count() <= limit)
+  def boundedBy(df: DataFrame, limit: Int): Boolean = {
+    require(limit >= 0 && limit < Int.MaxValue, s"boundedBy limit $limit")
+    cached(df, s"le:$limit")(df.limit(limit + 1).count() <= limit)
+  }
 }

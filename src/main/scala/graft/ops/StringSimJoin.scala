@@ -31,13 +31,20 @@ object StringSimJoin {
   def selfJoinDistinct(df: DataFrame, idCol: String, strCol: String,
                        blockCols: Seq[String],
                        scorer: (Column, Column) => Column,
-                       keep: Column => Column,
-                       domainBroadcast: Option[Boolean] = None): DataFrame = {
-    val strs = df.select(col(strCol).as("s")).filter(col("s").isNotNull).distinct()
-    val small = domainBroadcast.getOrElse(
-      PlanStatMemo.boundedBy(strs, EditDistanceJoin.MaxBroadcastDomain))
+                       keep: Column => Column): DataFrame =
+    selfJoinDistinctTier(df, idCol, strCol, blockCols, scorer, keep,
+      smallDomain = PlanStatMemo.boundedBy(
+        EditDistanceJoin.distinctStrings(df, strCol), EditDistanceJoin.MaxBroadcastDomain))
 
-    if (!small) {
+  /** [[selfJoinDistinct]] on one tier: broadcast domain all-pairs when
+    * `smallDomain`, the in-block pair join otherwise.
+    */
+  private[graft] def selfJoinDistinctTier(df: DataFrame, idCol: String, strCol: String,
+                                          blockCols: Seq[String],
+                                          scorer: (Column, Column) => Column,
+                                          keep: Column => Column,
+                                          smallDomain: Boolean): DataFrame = {
+    if (!smallDomain) {
       // open domain: no metric-agnostic index exists — in-block pair join
       val a = df.select(col(idCol).as("a_id") +: col(strCol).as("a_s") +:
         blockCols.map(c => col(c).as(s"a_$c")): _*)
@@ -52,27 +59,13 @@ object StringSimJoin {
         .orderBy("a_id", "b_id")
     }
 
+    val strs = EditDistanceJoin.distinctStrings(df, strCol)
     val x = strs.select(col("s").as("l_s"))
     val y = strs.select(col("s").as("r_s"))
     val strict = x.join(broadcast(y), col("l_s") < col("r_s"))
       .withColumn("score", graft.Det.round6(scorer(col("l_s"), col("r_s"))))
       .filter(keep(col("score")))
-    // both orientations + identical-string self-pairs → each id pair
-    // matches exactly one sym row (the EditDistanceJoin.sym construction)
-    val sym = strict
-      .unionByName(strict.select(col("r_s").as("l_s"), col("l_s").as("r_s"), col("score")))
-      .unionByName(strs.select(col("s").as("l_s"), col("s").as("r_s"),
-        graft.Det.round6(scorer(col("s"), col("s"))).as("score")))
-
-    val a = df.select(col(idCol).as("a_id") +: col(strCol).as("l_s") +:
-      blockCols.map(col): _*)
-    val b = df.select(col(idCol).as("b_id") +: col(strCol).as("b_s") +:
-      blockCols.map(c => col(c).as(s"b_$c")): _*)
-    val blockEq = blockCols.map(c => col(c) === col(s"b_$c"))
-    a.join(sym, "l_s")
-      .join(b, (blockEq :+ (col("r_s") === col("b_s")))
-        .reduce(_ && _) && col("a_id") < col("b_id"))
-      .select(col("a_id") +: col("b_id") +: blockCols.map(col) :+ col("score"): _*)
-      .orderBy("a_id", "b_id")
+    EditDistanceJoin.expandDomainPairs(df, idCol, strCol, blockCols, strs, strict,
+      "score", graft.Det.round6(scorer(col("s"), col("s"))))
   }
 }

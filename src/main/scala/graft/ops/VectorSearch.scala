@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Det
@@ -64,11 +64,12 @@ object VectorSearch {
     * scale story is "the query side fits in a broadcast"; beyond this bound
     * that premise fails and only the banded LSH plan is sane.
     */
-  val MaxBroadcastKnnQueries: Long = 100000L
+  val MaxBroadcastKnnQueries: Int = 100000
 
-  /** Max centroid rows [[kmeansAssign]] will inline. A k-means/IVF model is
-    * O(k·dim) — a plan-time constant, never data-sized — so the cap is a
-    * loud-failure guard against a mis-scoped predicate, not a tuning knob.
+  /** Max centroid rows [[kmeansAssign]] will inline, and so the bound on
+    * the driver-side centroid collect. A k-means/IVF model is O(k·dim) — a
+    * plan-time constant, never data-sized — so the cap is a loud-failure
+    * guard against a mis-scoped predicate, not a tuning knob.
     */
   val MaxCentroids: Int = 1024
 
@@ -90,9 +91,8 @@ object VectorSearch {
     * agrees. Output: one row per input vector, `(id, centroid_id, sim)`.
     */
   def kmeansAssign(emb: DataFrame, idCol: String, vecCol: String,
-                   centroidPred: Column,
-                   maxCentroids: Int = MaxCentroids): DataFrame =
-    assignToCentroids(emb, idCol, vecCol, centroidPred, maxCentroids)
+                   centroidPred: Column): DataFrame =
+    assignToCentroids(emb, idCol, vecCol, centroidPred)
       .select(col("id"), col("centroid_id"), col("sim"))
 
   /** [[kmeansAssign]] with the (double-cast) input vector still attached:
@@ -104,9 +104,8 @@ object VectorSearch {
     * carrying `v` through costs nothing and the join disappears.
     */
   def kmeansAssignWithVectors(emb: DataFrame, idCol: String, vecCol: String,
-                              centroidPred: Column,
-                              maxCentroids: Int = MaxCentroids): DataFrame =
-    assignToCentroids(emb, idCol, vecCol, centroidPred, maxCentroids)
+                              centroidPred: Column): DataFrame =
+    assignToCentroids(emb, idCol, vecCol, centroidPred)
       .select(col("id"), col("v"), col("centroid_id"), col("sim"))
 
   /** Shared E-step core: per-row nearest centroid with the input vector
@@ -114,17 +113,20 @@ object VectorSearch {
     * join back to the data.
     */
   private def assignToCentroids(emb: DataFrame, idCol: String, vecCol: String,
-                                centroidPred: Column,
-                                maxCentroids: Int): DataFrame = {
+                                centroidPred: Column): DataFrame = {
     val v = emb.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-    val cents = v.filter(centroidPred).orderBy("id").limit(maxCentroids + 1)
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
-    require(cents.length >= 2,
-      s"kmeansAssign needs at least 2 centroids, predicate matched ${cents.length}")
-    require(cents.length <= maxCentroids,
-      s"kmeansAssign centroid predicate matched > $maxCentroids rows — " +
+    assignFromModel(v, centroidRows(v, centroidPred).map(r => (r.getLong(0), r.getSeq[Double](1))))
+  }
+
+  /** The `centroidPred` rows of `v` in id order: the one driver-side
+    * collect, loud beyond [[MaxCentroids]] rows and below 2.
+    */
+  private def centroidRows(v: DataFrame, centroidPred: Column): Array[Row] = {
+    val rows = v.filter(centroidPred).orderBy("id").limit(MaxCentroids + 1).collect()
+    require(rows.length >= 2 && rows.length <= MaxCentroids,
+      s"k-means centroid predicate matched ${rows.length} rows (need 2..$MaxCentroids) — " +
         "a k-means model is a plan-time constant; re-scope the predicate")
-    assignFromModel(v, cents)
+    rows
   }
 
   /** Distributed k-means M-step: the element-wise mean vector of every
@@ -142,9 +144,8 @@ object VectorSearch {
     * are engine-exact.
     */
   def kmeansUpdate(emb: DataFrame, idCol: String, vecCol: String,
-                   centroidPred: Column,
-                   maxCentroids: Int = MaxCentroids): DataFrame =
-    meanByCluster(assignToCentroids(emb, idCol, vecCol, centroidPred, maxCentroids))
+                   centroidPred: Column): DataFrame =
+    meanByCluster(assignToCentroids(emb, idCol, vecCol, centroidPred))
       .orderBy("centroid_id", "dim")
 
   /** k·dim element-wise means of an assignment carrying `(centroid_id, v)`
@@ -177,14 +178,10 @@ object VectorSearch {
     * to the lowest ordinal.
     */
   def kmeansFit(emb: DataFrame, idCol: String, vecCol: String,
-                centroidPred: Column, iters: Int,
-                maxCentroids: Int = MaxCentroids): DataFrame = {
+                centroidPred: Column, iters: Int): DataFrame = {
     require(iters >= 1, s"kmeansFit needs iters >= 1, got $iters")
     val v = emb.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-    val seed = v.filter(centroidPred).orderBy("id").limit(maxCentroids + 1)
-      .collect().map(r => r.getSeq[Double](1))
-    require(seed.length >= 2 && seed.length <= maxCentroids,
-      s"kmeansFit centroid predicate matched ${seed.length} rows (need 2..$maxCentroids)")
+    val seed = centroidRows(v, centroidPred).map(_.getSeq[Double](1))
     // ordinal ids: centers stop being input rows after the first update
     var model: Array[(Long, Seq[Double])] =
       seed.zipWithIndex.map { case (c, i) => (i.toLong, c) }
@@ -230,20 +227,17 @@ object VectorSearch {
     * over-bound one to [[lshCosineKnn]] (banded candidates, exact cosine
     * re-rank — precision stays 1, recall is the pinned approximation).
     * `queryPred` must reference only the renamed `id` column (both
-    * downstream paths share that contract). `forceExact`: `Some(b)` skips
-    * the probe; the 100 TB deployment passes its known answer.
+    * downstream paths share that contract). The probe counts at most
+    * [[MaxBroadcastKnnQueries]] + 1 ids, and only the id column, so it stays
+    * cheap on any corpus; a caller that wants one path calls it directly.
     */
   def cosineKnnAuto(emb: DataFrame, idCol: String, vecCol: String,
                     queryPred: Column, k: Int,
-                    maxBroadcastQueries: Long = MaxBroadcastKnnQueries,
-                    forceExact: Option[Boolean] = None,
-                    nPlanes: Int = 16, nBands: Int = 4, dim: Int = 64): DataFrame = {
-    val small = forceExact.getOrElse(
-      PlanStatMemo.boundedBy(
-        emb.select(col(idCol).as("id")).filter(queryPred), maxBroadcastQueries))
-    if (small) cosineKnn(emb, idCol, vecCol, queryPred, k)
+                    nPlanes: Int = 16, nBands: Int = 4, dim: Int = 64): DataFrame =
+    if (PlanStatMemo.boundedBy(
+        emb.select(col(idCol).as("id")).filter(queryPred), MaxBroadcastKnnQueries))
+      cosineKnn(emb, idCol, vecCol, queryPred, k)
     else lshCosineKnn(emb, idCol, vecCol, queryPred, k, nPlanes, nBands, dim)
-  }
 
   /** Deterministic pseudo-random hyperplanes: splitmix64-style sequence from
     * a fixed seed, mapped to [-1, 1). Plan-time constants — no runtime
@@ -380,25 +374,20 @@ object VectorSearch {
     * (10k rows ≈ 5·10⁷ pairs is the workable ceiling for a quadratic plan;
     * beyond it the banded path's hash shuffle wins by orders of magnitude).
     */
-  val MaxExactPairRows: Long = 10000L
+  val MaxExactPairRows: Int = 10000
 
   /** Size-dispatched cosine near-dup pairs: a bounded `limit(max+1).count()`
     * probe (same protocol as SimilarityJoin.freqJoined — the limit caps the
     * probe's cost regardless of true input size) routes small inputs to the
     * exact product and everything else to the LSH-banded plan, so the
     * quadratic form can never be dispatched on an input where only the
-    * banded path is sane. `forceExact`: `Some(b)` skips the probe for
-    * callers that know their size (the 100 TB deployment passes
-    * `Some(false)`).
+    * banded path is sane. The probe reads at most [[MaxExactPairRows]] + 1
+    * rows whatever the input size; a caller that wants one path calls
+    * [[cosinePairsExact]] or [[cosinePairsLsh]] directly.
     */
-  def cosinePairs(emb: DataFrame, idCol: String, vecCol: String, tau: Double,
-                  maxExactRows: Long = MaxExactPairRows,
-                  forceExact: Option[Boolean] = None): DataFrame = {
-    val small = forceExact.getOrElse(
-      PlanStatMemo.boundedBy(emb, maxExactRows))
-    if (small) cosinePairsExact(emb, idCol, vecCol, tau)
+  def cosinePairs(emb: DataFrame, idCol: String, vecCol: String, tau: Double): DataFrame =
+    if (PlanStatMemo.boundedBy(emb, MaxExactPairRows)) cosinePairsExact(emb, idCol, vecCol, tau)
     else cosinePairsLsh(emb, idCol, vecCol, tau)
-  }
 
   /** Approximate cosine top-k via random-hyperplane LSH.
     *

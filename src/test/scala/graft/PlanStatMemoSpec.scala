@@ -95,6 +95,18 @@ class PlanStatMemoSpec extends SparkSpec {
       ()
     }
   }
+
+  test("boundedBy: exactly limit rows is bounded, limit + 1 is not") {
+    // the probe counts at most limit + 1 rows; an Int limit leaves no
+    // room to wrap that count the way a Long narrowed to Int did
+    for (limit <- Seq(0, 1, 5, 8192)) {
+      assert(PlanStatMemo.boundedBy(spark.range(limit).toDF(), limit), s"$limit rows, limit $limit")
+      assert(!PlanStatMemo.boundedBy(spark.range(limit + 1L).toDF(), limit),
+        s"${limit + 1} rows, limit $limit")
+    }
+    intercept[IllegalArgumentException](PlanStatMemo.boundedBy(spark.range(1).toDF(), Int.MaxValue))
+    intercept[IllegalArgumentException](PlanStatMemo.boundedBy(spark.range(1).toDF(), -1))
+  }
 }
 
 /** The local filesystem served under its own URI scheme, standing in for a

@@ -343,6 +343,13 @@ class PropertiesSpec extends SparkSpec {
     }
   }
 
+  /** The prefix join's extreme-skew branch: the candidate join salted
+    * [[SimilarityJoin.CandidateSalts]] ways.
+    */
+  private def saltedPrefix(df: org.apache.spark.sql.DataFrame, tau: Double) =
+    SimilarityJoin.jaccardSelfPrefixOnSets(SimilarityJoin.tokenized(df, "text"), "doc_id",
+      "tokens", Seq("blk"), tau, nSalts = SimilarityJoin.CandidateSalts)
+
   test("jaccardSelfAuto: auto, exact, prefix and salted branches equal brute force on Zipfian corpora") {
     import org.scalacheck.Gen
     // Zipf(1) over 40 words, plus near-copies (one word swapped) so that
@@ -358,12 +365,12 @@ class PropertiesSpec extends SparkSpec {
     holds(8, 36L)(org.scalacheck.Prop.forAllNoShrink(corpus) { case (docs, tau) =>
       val df = toDf(docs)
       val expected = bruteForce(docs.map(_.toSet), tau)
-      def run(usePrefix: Option[Boolean], salt: Option[Boolean]) =
-        SimilarityJoin.jaccardSelfAuto(df, "doc_id", "text", Seq("blk"), tau,
-            usePrefix, salt)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      Seq(run(None, None), run(Some(false), None), run(Some(true), Some(false)),
-        run(Some(true), Some(true)), run(Some(true), None)).forall(_ == expected)
+      def pairsOf(out: org.apache.spark.sql.DataFrame) =
+        out.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      Seq(SimilarityJoin.jaccardSelfAuto(df, "doc_id", "text", Seq("blk"), tau),
+        SimilarityJoin.jaccardSelf(df, "doc_id", "text", Seq("blk"), tau),
+        SimilarityJoin.jaccardSelfPrefix(df, "doc_id", "text", Seq("blk"), tau),
+        saltedPrefix(df, tau)).forall(pairsOf(_) == expected)
     })
   }
 
@@ -416,8 +423,9 @@ class PropertiesSpec extends SparkSpec {
         org.scalacheck.Gen.oneOf(0.5, 0.6, 0.75, 0.8)) { (docs, tau) =>
       val df = toDf(docs)
       val expected = bruteForce(docs.map(tokensOf), tau)
-      def run(salt: Boolean) = rowsOf(SimilarityJoin.jaccardSelfAuto(df, "doc_id", "text",
-        Seq("blk"), tau, usePrefix = Some(true), saltCandidates = Some(salt))).toSet
+      def run(salt: Boolean) = rowsOf(
+        if (salt) saltedPrefix(df, tau)
+        else SimilarityJoin.jaccardSelfPrefix(df, "doc_id", "text", Seq("blk"), tau)).toSet
       val broadcast = Seq(run(false), run(true))
       val shuffled = shuffleForced(Seq(run(false), run(true)))
       (broadcast ++ shuffled).forall(_ == expected)
@@ -515,5 +523,171 @@ class PropertiesSpec extends SparkSpec {
     val df = toDf(nearCopies)
     val bytes = SimHash.signedBands(df, "doc_id", "text", Seq("blk"), 4).bytes
     pinsThreshold(bytes)(SimHash.hammingPairs(df, "doc_id", "text", Seq("blk"), 3))
+  }
+
+  // ---- the four bounded-count dispatches (PlanStatMemo.boundedBy): each
+  // branch, run directly, equals brute force
+
+  /** Strings with duplicates, NULLs, empty strings and one-character
+    * variants of a shared pool, in blocks x / y / NULL, so near-matches
+    * fall inside and across blocks.
+    */
+  private val stringCorpus: org.scalacheck.Gen[List[(Option[String], Option[String])]] = {
+    import org.scalacheck.Gen
+    val pool = Seq("", "a", "ab", "abc", "abd", "xbc", "kitten", "sitten", "sitting",
+      "aaaa", "aaab", "abcdefgh", "abxdefgh")
+    val variant = for {
+      s <- Gen.oneOf(pool.filter(_.nonEmpty)); i <- Gen.choose(0, 7); c <- Gen.oneOf('a', 'b', 'x')
+    } yield s.updated(i % s.length, c)
+    val str = Gen.frequency(1 -> Gen.const(None), 1 -> Gen.const(Some("")),
+      6 -> Gen.oneOf(pool).map(Some(_)), 3 -> variant.map(Some(_)))
+    val blk = Gen.frequency(4 -> Gen.const(Some("x")), 3 -> Gen.const(Some("y")),
+      1 -> Gen.const(None))
+    Gen.choose(0, 24).flatMap(Gen.listOfN(_, Gen.zip(str, blk)))
+  }
+
+  private def stringDf(rows: Seq[(Option[String], Option[String])]) =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.zipWithIndex.map { case ((s, b), i) =>
+        Row(i.toLong, s.orNull, b.orNull) }, 2),
+      StructType(Seq(StructField("id", LongType), StructField("s", StringType),
+        StructField("blk", StringType))))
+
+  private def rowSeq(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(_.toSeq)
+
+  test("edit distance: the auto dispatch and both distinct-domain tiers equal brute force") {
+    import graft.ops.EditDistanceJoin
+    var pairs = 0
+    holds(8, 57L)(org.scalacheck.Prop.forAllNoShrink(stringCorpus,
+        org.scalacheck.Gen.oneOf(1, 2)) { (rows, k) =>
+      val df = stringDf(rows)
+      val brute = rowSeq(EditDistanceJoin.selfJoinBrute(df, "id", "s", Seq("blk"), k))
+      pairs += brute.size
+      rowSeq(EditDistanceJoin.selfJoinDistinct(df, "id", "s", Seq("blk"), k)) == brute &&
+        Seq(true, false).forall(small => rowSeq(EditDistanceJoin.selfJoinDistinctTier(
+          df, "id", "s", Seq("blk"), k, q = 2, smallDomain = small)) == brute)
+    })
+    assert(pairs > 0, "no case produced a pair")
+  }
+
+  test("Jaro-Winkler: the auto dispatch and both tiers equal a brute in-block pair join") {
+    import org.apache.spark.sql.functions._
+    import graft.ops.StringSimJoin
+    import graft.functions.StringExprs.jaroWinkler
+    val keep = (c: org.apache.spark.sql.Column) => c >= 0.8
+    var pairs = 0
+    holds(8, 61L)(org.scalacheck.Prop.forAllNoShrink(stringCorpus) { rows =>
+      val df = stringDf(rows)
+      val a = df.select(col("id").as("a_id"), col("s").as("a_s"), col("blk"))
+      val b = df.select(col("id").as("b_id"), col("s").as("b_s"), col("blk").as("b_blk"))
+      val brute = rowSeq(a.join(b, col("blk") === col("b_blk") && col("a_id") < col("b_id"))
+        .select(col("a_id"), col("b_id"), col("blk"),
+          Det.round6(jaroWinkler(col("a_s"), col("b_s"))).as("score"))
+        .filter(keep(col("score")))
+        .orderBy("a_id", "b_id"))
+      pairs += brute.size
+      rowSeq(StringSimJoin.selfJoinDistinct(df, "id", "s", Seq("blk"), jaroWinkler, keep)) ==
+        brute && Seq(true, false).forall(small => rowSeq(StringSimJoin.selfJoinDistinctTier(
+          df, "id", "s", Seq("blk"), jaroWinkler, keep, smallDomain = small)) == brute)
+    })
+    assert(pairs > 0, "no case produced a pair")
+  }
+
+  /** 64-dim vectors (the LSH planes' width): random, exact copies,
+    * near-copies with a few coordinates nudged, blends with a random
+    * vector (cosine ≈ 0.6–0.85 to their base, where banding misses some
+    * pairs), and NULL vectors.
+    */
+  private val vectorCorpus: org.scalacheck.Gen[List[Option[Vector[Double]]]] = {
+    import org.scalacheck.Gen
+    val vec = Gen.listOfN(64, Gen.choose(-1.0, 1.0)).map(_.toVector)
+    for {
+      base <- Gen.choose(2, 12).flatMap(Gen.listOfN(_, vec))
+      copies <- Gen.someOf(base)
+      nudges <- Gen.listOfN(copies.size, Gen.listOfN(3, Gen.zip(Gen.choose(0, 63),
+        Gen.choose(-0.1, 0.1))))
+      blends <- Gen.someOf(base)
+      noise <- Gen.listOfN(blends.size, Gen.zip(vec, Gen.oneOf(0.6, 1.0, 1.3)))
+      dups <- Gen.someOf(base)
+      nulls <- Gen.choose(0, 2)
+    } yield {
+      val near = copies.zip(nudges).map { case (v, ns) =>
+        ns.foldLeft(v) { case (acc, (i, d)) => acc.updated(i, acc(i) + d) } }
+      val mixed = blends.zip(noise).map { case (v, (r, f)) =>
+        v.zip(r).map { case (x, y) => x + f * y } }
+      new scala.util.Random(base.size).shuffle(
+        (base ++ near ++ mixed ++ dups).map(Some(_)) ++ List.fill(nulls)(None)).toList
+    }
+  }
+
+  private def vectorDf(vs: Seq[Option[Vector[Double]]]) =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(vs.zipWithIndex.map { case (v, i) =>
+        Row(i.toLong, v.orNull) }, 2),
+      StructType(Seq(StructField("vec_id", LongType),
+        StructField("embedding", ArrayType(DoubleType)))))
+
+  /** The operators' cosine, op for op: sequential dot products, norms as
+    * the square root of a vector's dot with itself.
+    */
+  private def cosine(a: Vector[Double], b: Vector[Double]): Double = {
+    def dot(x: Vector[Double], y: Vector[Double]) = {
+      var s = 0.0; var i = 0
+      while (i < x.length) { s += x(i) * y(i); i += 1 }
+      s
+    }
+    dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b)))
+  }
+
+  private def round6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  test("cosinePairs: auto and exact equal brute force, banded is a subset with equal sims") {
+    import graft.ops.VectorSearch
+    var pairs = 0
+    holds(8, 67L)(org.scalacheck.Prop.forAllNoShrink(vectorCorpus,
+        org.scalacheck.Gen.oneOf(0.5, 0.6, 0.8, 0.95)) { (vs, tau) =>
+      val df = vectorDf(vs)
+      val ids = vs.zipWithIndex.collect { case (Some(v), i) => (i.toLong, v) }
+      val brute = (for {
+        (a, va) <- ids; (b, vb) <- ids if a < b
+        sim = round6(cosine(va, vb)) if sim >= tau
+      } yield Seq[Any](a, b, sim)).sortBy(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long]))
+      pairs += brute.size
+      val truth = brute.map(r => (r(0), r(1)) -> r(2)).toMap
+      val banded = rowSeq(VectorSearch.cosinePairsLsh(df, "vec_id", "embedding", tau))
+      rowSeq(VectorSearch.cosinePairs(df, "vec_id", "embedding", tau)) == brute &&
+        rowSeq(VectorSearch.cosinePairsExact(df, "vec_id", "embedding", tau)) == brute &&
+        banded.forall(r => truth.get((r(0), r(1))).contains(r(2)))
+    })
+    assert(pairs > 0, "no case produced a pair")
+  }
+
+  test("cosineKnnAuto: auto and exact equal brute-force top-k, banded emits true sims") {
+    import org.apache.spark.sql.functions._
+    import graft.ops.VectorSearch
+    holds(8, 73L)(org.scalacheck.Prop.forAllNoShrink(vectorCorpus,
+        org.scalacheck.Gen.choose(0, 12), org.scalacheck.Gen.choose(1, 4)) { (vs, m, k) =>
+      val df = vectorDf(vs)
+      val pred = col("id") < m
+      val all = vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      // top-k by (raw sim desc, NULL sims last, neighbor id), as the window ranks
+      val brute = all.filter(_._1 < m).flatMap { case (q, qv) =>
+        val ranked = all.filter(_._1 != q).map { case (n, nv) =>
+          (n, for (a <- qv; b <- nv) yield cosine(a, b))
+        }.sortBy { case (n, s) => (s.isEmpty, -s.getOrElse(0.0), n) }
+        ranked.take(k).zipWithIndex.map { case ((n, s), r) =>
+          Seq[Any](q, r + 1, n, s.map(x => round6(x): Any).orNull) }
+      }
+      val sims = (for {
+        (a, Some(va)) <- all; (b, Some(vb)) <- all if a != b
+      } yield (a, b) -> round6(cosine(va, vb))).toMap
+      val banded = rowSeq(VectorSearch.lshCosineKnn(df, "vec_id", "embedding", pred, k))
+      rowSeq(VectorSearch.cosineKnnAuto(df, "vec_id", "embedding", pred, k)) == brute &&
+        rowSeq(VectorSearch.cosineKnn(df, "vec_id", "embedding", pred, k)) == brute &&
+        banded.forall(r =>
+          sims.get((r(0).asInstanceOf[Long], r(2).asInstanceOf[Long])).contains(r(3)))
+    })
   }
 }

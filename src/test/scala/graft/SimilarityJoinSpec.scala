@@ -144,10 +144,10 @@ class SimilarityJoinSpec extends SparkSpec {
     val exact = SimilarityJoin.jaccardRS(queries, docs, "doc_id", "text", Seq("lang"), 0.6)
       .collect().map(_.toString).toSeq
     assert(auto === exact)
-    // forced-prefix branch stays exact too (equivalence is the contract)
-    val forced = SimilarityJoin.jaccardRSAuto(queries, docs, "doc_id", "text", Seq("lang"), 0.6,
-      usePrefix = Some(true)).collect().map(_.toString).toSeq
-    assert(forced === exact)
+    // the prefix branch stays exact too (equivalence is the contract)
+    val prefix = SimilarityJoin.jaccardRSPrefix(queries, docs, "doc_id", "text", Seq("lang"), 0.6)
+      .collect().map(_.toString).toSeq
+    assert(prefix === exact)
   }
 
   test("auto dispatch: flat vocabulary probes below threshold and takes the exact path") {
@@ -205,10 +205,9 @@ class SimilarityJoinSpec extends SparkSpec {
       .collect().map(_.toString).toSeq
     assert(exact.length === 150, "expected exactly the 150 twin pairs")
     assert(auto.collect().map(_.toString).toSeq === exact)
-    // moderate skew (forced off) still takes the unsalted prefix plan
+    // the unsalted prefix plan, on the same shuffle path, plans no salt
     val unsalted = withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(
-      SimilarityJoin.jaccardSelfAuto(docs, "doc_id", "text", Seq("blk"), 0.5,
-        usePrefix = Some(true), saltCandidates = Some(false)))
+      SimilarityJoin.jaccardSelfPrefix(docs, "doc_id", "text", Seq("blk"), 0.5))
     assert(!unsalted.queryExecution.optimizedPlan.toString.contains("_salt"))
     assert(unsalted.collect().map(_.toString).toSeq === exact)
   }

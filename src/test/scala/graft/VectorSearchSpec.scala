@@ -57,25 +57,34 @@ class VectorSearchSpec extends SparkSpec {
     }
   }
 
+  /** `n` synthetic 64-dim vectors (vec_id, embedding): enough rows to
+    * cross a dispatch bound, planned but never scored.
+    */
+  private def synthetic(n: Long) = spark.range(n).select(col("id").as("vec_id"),
+    array_repeat(lit(1.0f), 64).as("embedding"))
+
+  private def hasProduct(df: org.apache.spark.sql.DataFrame): Boolean = {
+    val plan = df.queryExecution.executedPlan.toString
+    plan.contains("NestedLoop") || plan.contains("Cartesian")
+  }
+
   test("cosinePairs guard: above-bound inputs dispatch to the banded plan, no product") {
-    val emb = Tables.embeddings(spark, sf0001)
+    // at the real bound: MaxExactPairRows rows plan the exact product, one
+    // row more plans the banded equi-join (the probe reads at most
+    // bound + 1 ids and prunes the vector column)
+    val bound = VectorSearch.MaxExactPairRows
+    def pairs(n: Long) = VectorSearch.cosinePairs(synthetic(n), "vec_id", "embedding", 0.4)
+    assert(hasProduct(pairs(bound)), s"$bound rows should take the exact product")
+    assert(!hasProduct(pairs(bound + 1L)), s"${bound + 1} rows must not plan a product")
     // below bound: exact nested-loop product is the intended (fastest) plan
-    val exactPlan = VectorSearch.cosinePairs(emb, "vec_id", "embedding", 0.4,
-      maxExactRows = 10000).queryExecution.executedPlan.toString
-    assert(exactPlan.contains("NestedLoop") || exactPlan.contains("Cartesian"),
-      exactPlan.take(1200))
-    // above bound (forced low): the guard fires and the plan must contain NO
-    // quadratic product — candidates come from the banded equi-join
-    val guarded = VectorSearch.cosinePairs(emb, "vec_id", "embedding", 0.4,
-      maxExactRows = 100)
-    val guardedPlan = guarded.queryExecution.executedPlan.toString
-    assert(!guardedPlan.contains("NestedLoop") && !guardedPlan.contains("Cartesian"),
-      guardedPlan.take(1200))
+    val emb = Tables.embeddings(spark, sf0001)
+    assert(hasProduct(VectorSearch.cosinePairs(emb, "vec_id", "embedding", 0.4)))
     // banded output: precision 1 (subset of exact pairs, identical sims),
     // recall pinned on this corpus
     val exact = VectorSearch.cosinePairsExact(emb, "vec_id", "embedding", 0.4)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val banded = guarded.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
+    val banded = VectorSearch.cosinePairsLsh(emb, "vec_id", "embedding", 0.4)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
     assert(banded.nonEmpty)
     banded.foreach { case (k, s) =>
       assert(exact.contains(k), s"false positive pair $k")
@@ -86,29 +95,30 @@ class VectorSearchSpec extends SparkSpec {
   }
 
   test("cosineKnnAuto guard: over-bound query sets route to the banded LSH plan") {
+    // at the real bound: MaxBroadcastKnnQueries query ids plan the exact
+    // broadcast product, one more plans the banded LSH join
+    val bound = VectorSearch.MaxBroadcastKnnQueries
+    def knnOver(n: Long) = VectorSearch.cosineKnnAuto(synthetic(n), "vec_id", "embedding",
+      col("id") >= 0, 3)
+    assert(hasProduct(knnOver(bound)), s"$bound queries should take the exact product")
+    assert(!hasProduct(knnOver(bound + 1L)), s"${bound + 1} queries must not plan a product")
     val emb = Tables.embeddings(spark, sf0001)
     val pred = col("id") < 100
-    // default bound: the probe confirms broadcastability → exact path,
+    // within the bound: the probe confirms broadcastability → exact path,
     // byte-identical to cosineKnn (this is q40's graded plan)
     val auto = VectorSearch.cosineKnnAuto(emb, "vec_id", "embedding", pred, 3)
     val exact = VectorSearch.cosineKnn(emb, "vec_id", "embedding", pred, 3)
     assert(auto.collect().map(_.toString).toSeq === exact.collect().map(_.toString).toSeq)
-    // forced low bound: the guard fires, dispatching to lshCosineKnn — same
-    // rows as the direct LSH call, and NO quadratic/broadcast-product shape
-    val routed = VectorSearch.cosineKnnAuto(emb, "vec_id", "embedding", pred, 3,
-      maxBroadcastQueries = 10)
-    val lsh = VectorSearch.lshCosineKnn(emb, "vec_id", "embedding", pred, 3)
-    assert(routed.collect().map(_.toString).toSeq === lsh.collect().map(_.toString).toSeq)
-    val plan = routed.queryExecution.executedPlan.toString
-    assert(!plan.contains("NestedLoop") && !plan.contains("Cartesian"), plan.take(1200))
-    // re-rank semantics intact on the routed path: every emitted sim is the
+    // re-rank semantics intact on the banded path: every emitted sim is the
     // exact cosine of its pair (precision 1; only recall is approximate)
+    val lsh = VectorSearch.lshCosineKnn(emb, "vec_id", "embedding", pred, 3).collect()
+    assert(lsh.nonEmpty)
     val truth = VectorSearch.cosineKnn(emb, "vec_id", "embedding", pred, 1500)
       .collect().map(r => (r.getLong(0), r.getLong(2)) -> r.getDouble(3)).toMap
-    routed.collect().foreach { r =>
+    lsh.foreach { r =>
       val key = (r.getLong(0), r.getLong(2))
       assert(truth.contains(key) && math.abs(truth(key) - r.getDouble(3)) < 1e-9,
-        s"routed pair $key sim mismatch")
+        s"banded pair $key sim mismatch")
     }
   }
 
@@ -140,9 +150,12 @@ class VectorSearchSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       VectorSearch.kmeansAssign(emb, "vec_id", "embedding", col("id") < 1)
     }
-    intercept[IllegalArgumentException] {
-      VectorSearch.kmeansAssign(emb, "vec_id", "embedding", lit(true), maxCentroids = 16)
+    val over = intercept[IllegalArgumentException] {
+      VectorSearch.kmeansAssign(synthetic(VectorSearch.MaxCentroids + 1L),
+        "vec_id", "embedding", lit(true))
     }
+    assert(over.getMessage.contains(
+      s"matched ${VectorSearch.MaxCentroids + 1} rows (need 2..${VectorSearch.MaxCentroids})"))
   }
 
   test("kmeansUpdate means match brute-force per-cluster element means (r8)") {
