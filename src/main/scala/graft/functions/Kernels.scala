@@ -30,7 +30,6 @@ object Kernels {
     kernel("graft_hp_scores", classOf[HyperplaneScores])(e => HyperplaneScores(e(0), e(1))),
     kernel("graft_hp_bands", classOf[HyperplaneBands])(e =>
       HyperplaneBands(e(0), e(1), e(2))),
-    kernel("graft_pq_encode", classOf[PqEncode])(e => PqEncode(e(0), e(1), e(2), e(3))),
     kernel("graft_minhash_sig", classOf[MinHashSig])(e => MinHashSig(e(0), e(1))),
     kernel("graft_simhash_sig", classOf[SimHashSig])(e => SimHashSig(e(0))),
     kernel("graft_compression_ratio", classOf[CompressionRatio])(e => CompressionRatio(e(0))),

@@ -1,58 +1,34 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Skew-salted two-phase aggregation.
+/** Skew-salted equi-join.
   *
-  * A `groupBy(key).agg(sum)` on a Zipfian key sends every row of the hot
-  * key to one reducer. Salting splits each key into `nSalts` sub-keys for
-  * the first (partial) aggregation, then combines the per-salt partials in
-  * a second, tiny aggregation keyed on the original key — the hot key's
-  * rows now spread over `nSalts` reducers and the second shuffle carries at
-  * most `distinct keys × nSalts` rows regardless of input volume.
+  * A shuffle join on a Zipfian key sends every row of the hot key to one
+  * reducer. Salting gives each probe row a sub-key in `[0, nSalts)` and
+  * replicates the build side once per sub-key, so the hot key's rows
+  * spread over `nSalts` reducers.
   *
   * The salt is derived from deterministic row content (xxhash64 of the
   * salt-by columns), never from randomness or partition ids, so results
   * are reproducible run-to-run — required by the determinism contract and
   * for AQE re-execution safety.
   *
-  * Note Spark's own partial aggregation already handles most skew for
-  * algebraic aggregates when map-side rows of the hot key co-occur in
-  * input partitions; explicit salting matters when upstream layout puts a
-  * hot key's rows in many partitions and the combined per-partition
-  * partials are still reducer-bound, or for high-cardinality state like
-  * collect_list. AQE's skew-join splitting covers joins, not aggregations.
-  *
   * DISPATCH DECISION (r9, SaltingSpec-pinned): for a PLAIN shuffle
   * equi-join with a hot key, Spark 4's default-on AQE skew split handles
   * it — the spec drives an 83%-hot-key sort-merge join and asserts the
   * executed plan carries `skew=true` and equals the salted result — so
   * graded joins need no manual salting. Manual salting remains the tool
-  * for (a) aggregation skew (AQE never splits aggregations), and (b)
-  * joins AQE cannot split because their output feeds an operator with a
-  * required distribution in the same stage (OptimizeSkewedJoin skips the
-  * split rather than break the downstream partitioning).
+  * for joins AQE cannot split because their output feeds an operator with
+  * a required distribution in the same stage (OptimizeSkewedJoin skips
+  * the split rather than break the downstream partitioning): the
+  * similarity joins' candidate stages.
   */
 object Salting {
 
-  /** Salted exact decimal sum + count per key. `saltBy` names columns whose
-    * hashed content spreads the hot keys (value-bearing columns work well).
-    */
-  def saltedSumCount(df: DataFrame, keyCols: Seq[String], valueCol: String,
-                     saltBy: Seq[String], nSalts: Int = 16): DataFrame = {
-    val salt = pmod(xxhash64(saltBy.map(col): _*), lit(nSalts.toLong))
-    df.withColumn("_salt", salt)
-      .groupBy((keyCols :+ "_salt").map(col): _*)
-      .agg(sum(graft.Det.dec2(col(valueCol))).as("_psum"),
-        count(lit(1)).as("_pcnt"))
-      .groupBy(keyCols.map(col): _*)
-      .agg(sum(col("_psum")).cast("double").as("sum_val"),
-        sum(col("_pcnt")).as("n"))
-  }
-
   /** Skew-salted replicate equi-join (fragment-and-replicate on the salt
-    * dimension — the join-side counterpart of [[saltedSumCount]]).
+    * dimension).
     *
     * The skewed `probe` side gets a deterministic salt in [0, nSalts)
     * hashed from `saltBy` row content; the `build` side is replicated once

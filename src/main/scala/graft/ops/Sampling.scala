@@ -27,15 +27,6 @@ object Sampling {
   private def keep(idCols: Seq[String], fraction: Column, salt: Long): Column =
     pmod(xxhash64(idCols.map(col) :+ lit(salt): _*), lit(M)) < fraction * M
 
-  /** Uniform deterministic sample: keep ~`fraction` of rows, selected by
-    * content hash of `idCols`.
-    */
-  def uniformByHash(df: DataFrame, idCols: Seq[String], fraction: Double,
-                    salt: Long = 0L): DataFrame = {
-    require(fraction >= 0.0 && fraction <= 1.0, s"fraction $fraction")
-    df.filter(keep(idCols, lit(fraction), salt))
-  }
-
   /** Stratified deterministic sample: per-stratum fractions (strata absent
     * from the map get `defaultFraction`). The mixture-control primitive: a
     * 100 TB corpus resampled to a target source/language distribution with
@@ -52,52 +43,5 @@ object Sampling {
         when(col(stratumCol) === stratum, lit(f)).otherwise(acc)
     }
     df.filter(keep(idCols, frac, salt))
-  }
-
-  /** [[stratifiedByHash]] with the per-stratum rates as a RELATION instead
-    * of a literal map — the form a planning query's output (q127's
-    * mixture-rebalance rates, a curation report) feeds without a driver
-    * round-trip, and the only form that scales past a handful of strata: a
-    * literal map compiles to a when-chain O(strata) deep in every row's
-    * predicate, where this broadcast-joins the group-sized rate table and
-    * keeps the membership test one hash-compare. Strata absent from
-    * `rates` get `defaultFraction`.
-    */
-  def stratifiedByRateTable(df: DataFrame, stratumCol: String,
-                            rates: DataFrame, rateStratumCol: String,
-                            rateCol: String, idCols: Seq[String],
-                            defaultFraction: Double = 0.0,
-                            salt: Long = 0L): DataFrame = {
-    require(defaultFraction >= 0.0 && defaultFraction <= 1.0,
-      s"defaultFraction $defaultFraction")
-    val r = rates.select(col(rateStratumCol).as("graft_stratum"),
-      col(rateCol).cast("double").as("graft_rate"))
-    // one bounded action over the group-sized rate relation: duplicate
-    // strata would FAN OUT the left join (every kept row emitted once per
-    // duplicate — silent training-data duplication), and an out-of-range
-    // or NaN rate silently empties or floods a stratum. Fail loudly.
-    val audit = r.agg(count(lit(1)).as("n"),
-      countDistinct(col("graft_stratum")).as("nd"),
-      min(col("graft_rate")).as("lo"), max(col("graft_rate")).as("hi"),
-      coalesce(sum(when(isnan(col("graft_rate")) || col("graft_rate").isNull, 1)
-        .otherwise(0)), lit(0L)).as("bad"), // sum over 0 rows is NULL
-      coalesce(sum(when(col("graft_stratum").isNull, 1).otherwise(0)), lit(0L))
-        .as("nullk")
-    ).head()
-    // null strata first: countDistinct skips nulls, so without this check
-    // a null-stratum row would be misreported as a duplicate
-    require(audit.getLong(5) == 0,
-      s"rates has ${audit.getLong(5)} null-stratum row(s) — an equi-join " +
-        "can never apply them; drop or map them to a real stratum")
-    require(audit.getLong(0) == audit.getLong(1),
-      s"rates has duplicate strata (${audit.getLong(0)} rows, " +
-        s"${audit.getLong(1)} distinct) — the join would duplicate data")
-    require(audit.getLong(0) == 0L || (audit.getLong(4) == 0 &&
-      audit.getDouble(2) >= 0.0 && audit.getDouble(3) <= 1.0),
-      s"rates must be non-null, non-NaN, in [0,1]: bad=${audit.getLong(4)}")
-    df.join(broadcast(r), df(stratumCol) === col("graft_stratum"), "left")
-      .withColumn("graft_rate", coalesce(col("graft_rate"), lit(defaultFraction)))
-      .filter(keep(idCols, col("graft_rate"), salt))
-      .drop("graft_stratum", "graft_rate")
   }
 }

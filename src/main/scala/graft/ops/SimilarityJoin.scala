@@ -530,7 +530,9 @@ object SimilarityJoin extends org.apache.spark.internal.Logging {
     * drives the candidate join, and whose frequencies rank both sides)
     * picks [[jaccardRS]] or [[jaccardRSPrefix]], both exact, salts the
     * prefix plan's candidate join at extreme skew, and decides its
-    * vocabulary broadcast.
+    * vocabulary broadcast. No query calls it yet: it is the R-S entry point
+    * of the auto dispatch, pinned against both R-S branches in
+    * SimilarityJoinSpec.
     */
   def jaccardRSAuto(queries: DataFrame, data: DataFrame, idCol: String,
                     textCol: String, blockCols: Seq[String], tau: Double): DataFrame = {

@@ -175,7 +175,8 @@ object VectorSearch {
     * order — after the first update centers are means, not input rows).
     * Deterministic: seeds are data rows fixed by the predicate, every
     * round's means use the ROUND(,6)/DECIMAL protocol, argmax ties break
-    * to the lowest ordinal.
+    * to the lowest ordinal. No query calls it: q100/q101 grade one assign
+    * and one update round, and this is the loop a caller runs past them.
     */
   def kmeansFit(emb: DataFrame, idCol: String, vecCol: String,
                 centroidPred: Column, iters: Int): DataFrame = {

@@ -624,11 +624,7 @@ object SimilarityQueries {
     * reads before switching its ANN index to int8. Quantized vectors hold
     * integral doubles, so `graft_dot` sums are EXACT integer arithmetic
     * and the one sqrt/div per pair is IEEE-identical on both engines
-    * (q49's proven list_cosine_similarity parity). Past scalar int8, the
-    * 16-32x-compression member of this family is product quantization —
-    * shipped as [[graft.ops.ProductQuant]] (subspace codebooks, ADC lookup
-    * ranking, ProductQuantSpec-pinned determinism + recall); its codebook
-    * training reuses the q100/q101 Lloyd protocol. Scale: quantization is
+    * (q49's proven list_cosine_similarity parity). Scale: quantization is
     * a per-row codegen map; both rankings are TakeOrderedAndProject
     * (never a global window); the 1-row query vector broadcasts (q40's
     * matrix shape).

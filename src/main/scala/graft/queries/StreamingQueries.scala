@@ -400,11 +400,7 @@ object StreamingQueries extends org.apache.spark.internal.Logging {
 
   /** q122 (added r8) — WINDOWED TOP-K ([[graft.streaming.WindowTopK]]):
     * top-3 event types per tumbling hour, batch-graded (every window
-    * closed) like q44–q46 — the per-window leaderboard. The STREAMING
-    * runtime form (append-mode typed state emitting exactly once when the
-    * watermark closes each window, state = one count map per open window)
-    * is pinned equal to this batch fold in StatefulStreamingSpec — the
-    * emit-once-at-close semantics is the part a batch grade cannot see.
+    * closed) like q44–q46 — the per-window leaderboard.
     */
   val q122 = Q(
     "q122_window_topk",

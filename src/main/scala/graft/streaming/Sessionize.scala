@@ -12,24 +12,20 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * every batch. State size is O(active users) and independent of event
   * volume — the property that lets this run indefinitely at stream scale.
   *
-  * `sessionCountsEvicting` adds the idle-key eviction that makes
-  * "O(active users)" literal on an unbounded user population: an
-  * EventTimeTimeout drops any user whose last event is older than the
-  * idle horizon behind the watermark, so a user seen once on day 1 does
-  * not hold state forever. Event-time (not processing-time) eviction
-  * keeps the semantics deterministic and replay-safe — the same input
-  * stream evicts the same keys regardless of wall-clock pacing. A user
-  * who re-appears after eviction starts a fresh session count (the
-  * documented trade: totals become per-activity-epoch, which is what a
-  * bounded-state stream can promise).
+  * `sessionRows` emits one row per CLOSED session instead, and drops a
+  * user's state when an event-time timeout closes the session, so a user
+  * seen once on day 1 does not hold state forever. Event-time (not
+  * processing-time) closing keeps the semantics deterministic and
+  * replay-safe — the same input stream closes the same sessions
+  * regardless of wall-clock pacing.
   */
 object Sessionize {
 
   final case class UserEvent(event_id: Long, ts_us: Long, user_id: Long)
   /** `UserEvent` plus the TimestampType column the watermark is declared
     * on — EventTimeTimeout requires the watermarked attribute to survive
-    * into the stateful operator's child plan, so the evicting variant
-    * groups this shape instead of projecting `ts` away.
+    * into the stateful operator's child plan, so `sessionRows` groups this
+    * shape instead of projecting `ts` away.
     */
   final case class UserEventTs(event_id: Long, ts_us: Long, user_id: Long,
                                ts: java.sql.Timestamp)
@@ -66,32 +62,6 @@ object Sessionize {
     if (sorted.nonEmpty) state.update(st)
     if (sorted.isEmpty) Iterator.empty
     else Iterator.single(UserSessions(user, st.nSessions, st.nEvents))
-  }
-
-  /** `updateUser` plus idle-key eviction: on timeout (watermark passed the
-    * user's last event + idle horizon with no new data for the key) the
-    * state is removed and nothing is emitted; on data, the fold runs and
-    * the timeout is re-armed off the new last-event time. The timeout
-    * timestamp is clamped just above the current watermark — Spark rejects
-    * timeouts at-or-behind it, which a key whose batch carried only very
-    * old events would otherwise trip.
-    */
-  def updateUserEvicting(gapUs: Long, evictMs: Long)(
-      user: Long, events: Iterator[UserEventTs],
-      state: GroupState[SessionState]): Iterator[UserSessions] = {
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.empty
-    } else {
-      val out = updateUser(gapUs)(user,
-        events.map(e => UserEvent(e.event_id, e.ts_us, e.user_id)), state)
-      state.getOption.foreach { st =>
-        val armAt = math.max(st.lastTsUs / 1000L + evictMs,
-          state.getCurrentWatermarkMs() + 1L)
-        state.setTimeoutTimestamp(armAt)
-      }
-      out
-    }
   }
 
   /** Per-session fold for `sessionRows`: a session CLOSES in exactly two
@@ -179,26 +149,5 @@ object Sessionize {
       .flatMapGroupsWithState[SessionState, UserSessions](
         OutputMode.Update(), GroupStateTimeout.NoTimeout)(
         updateUser(gapMinutes.toLong * 60L * 1000000L))
-  }
-
-  /** Streaming-only variant with idle-key eviction. The watermark delay
-    * doubles as the idle horizon: state for a user idle more than
-    * `idleEvictMinutes` (in event time) behind the stream head is dropped.
-    */
-  def sessionCountsEvicting(events: Dataset[UserEvent], gapMinutes: Int,
-                            idleEvictMinutes: Int): Dataset[UserSessions] = {
-    implicit val stateEnc = Encoders.product[SessionState]
-    implicit val outEnc = Encoders.product[UserSessions]
-    implicit val keyEnc = Encoders.scalaLong
-    implicit val evEnc = Encoders.product[UserEventTs]
-    events
-      .withColumn("ts", timestamp_micros(col("ts_us")))
-      .withWatermark("ts", s"$idleEvictMinutes minutes")
-      .as[UserEventTs]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, UserSessions](
-        OutputMode.Update(), GroupStateTimeout.EventTimeTimeout)(
-        updateUserEvicting(gapMinutes.toLong * 60L * 1000000L,
-          idleEvictMinutes.toLong * 60L * 1000L))
   }
 }

@@ -32,15 +32,7 @@ object StreamJoin {
     * microseconds (int64 — no float time arithmetic).
     */
   def attributionJoin(views: DataFrame, purchases: DataFrame,
-                      horizonHours: Int): DataFrame =
-    attributionImpl(views, purchases, horizonHours, "inner")
-
-  /** Shared body of the inner and left-outer attribution joins — ONE copy
-    * of the watermark/condition block, so a horizon or condition fix can
-    * never drift between the two variants.
-    */
-  private def attributionImpl(views: DataFrame, purchases: DataFrame,
-                              horizonHours: Int, joinType: String): DataFrame = {
+                      horizonHours: Int): DataFrame = {
     val v = views
       .select(col("event_id").as("view_id"), col("user_id"), col("ts").as("v_ts"))
       .withWatermark("v_ts", s"$horizonHours hours")
@@ -52,24 +44,10 @@ object StreamJoin {
         col("user_id") === col("p_user") &&
           col("p_ts") >= col("v_ts") &&
           col("p_ts") <= col("v_ts") + expr(s"INTERVAL $horizonHours HOURS"),
-        joinType)
+        "inner")
       .select(col("view_id"), col("purchase_id"), col("user_id"),
         (unix_micros(col("p_ts")) - unix_micros(col("v_ts"))).as("gap_us"))
   }
-
-  /** LEFT-OUTER form of [[attributionJoin]]: every view emits — matched
-    * views as in the inner form, UNMATCHED views with null purchase
-    * columns. The subtle streaming semantics (the reason this variant
-    * earns its own runtime pin): an unmatched view cannot emit when it
-    * arrives — a matching purchase may still come — so Structured
-    * Streaming holds it in state and emits the null row only once the
-    * watermark passes `v_ts + horizon`, proving no match can exist. Same
-    * bounded state as the inner join; the null-emission TIMING is the
-    * part only a multi-batch runtime test can observe (StreamJoinSpec).
-    */
-  def attributionJoinLeftOuter(views: DataFrame, purchases: DataFrame,
-                               horizonHours: Int): DataFrame =
-    attributionImpl(views, purchases, horizonHours, "leftOuter")
 
   /** Stream-STATIC enrichment join — the dimension-lookup pattern every
     * event pipeline runs (attach the user's segment/geo to each event as

@@ -1,93 +1,20 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Windowed TOP-K as streaming state: per tumbling event-time window, the
-  * top-k event types by count, emitted EXACTLY ONCE when the watermark
-  * closes the window — the streaming form of top-k-per-group (q25) where
-  * the group is a time window that must stay silent until late data can no
-  * longer change the ranking. A windowed-agg-then-rank pipeline cannot run
-  * as one streaming query (two stateful operators with a rank over an
-  * updating aggregate); the typed-state form holds the per-window count
-  * map and ranks it at close, which is the Spark-native shape for
-  * "leaderboard per window" dashboards.
-  *
-  * State per OPEN window is one count map bounded by the event-type
-  * vocabulary; it is removed at emission, so total state is
-  * O(open windows × types) — bounded by the watermark horizon however
-  * long the stream runs.
+/** Windowed TOP-K: per tumbling event-time window, the top-k event types
+  * by count, ties broken by type name — top-k-per-group (q25) where the
+  * group is a time window, the shape of a "leaderboard per window"
+  * dashboard.
   */
 object WindowTopK {
 
-  final case class TypedEvent(event_id: Long, ts_us: Long, event_type: String)
-  /** Grouped shape: window key + the watermarked ts column (which must
-    * survive into the stateful operator's child plan, as in
-    * [[Sessionize.UserEventTs]]).
-    */
-  final case class WinEvent(win_start_us: Long, event_type: String,
-                            ts: java.sql.Timestamp)
-  final case class TopKState(counts: Map[String, Long])
-  final case class WinTopK(win_start_us: Long, rnk: Int, event_type: String,
-                           n: Long)
-
-  private def rank(winStart: Long, counts: Map[String, Long], k: Int): Seq[WinTopK] =
-    counts.toSeq.sortBy { case (t, n) => (-n, t) }.take(k).zipWithIndex
-      .map { case ((t, n), i) => WinTopK(winStart, i + 1, t, n) }
-
-  /** On data: fold counts into state, arm the close-time timeout, emit
-    * nothing. On timeout (watermark passed window end): emit the ranked
-    * top-k once and drop the state.
-    */
-  def updateWindow(windowUs: Long, k: Int)(
-      winStart: Long, events: Iterator[WinEvent],
-      state: GroupState[TopKState]): Iterator[WinTopK] = {
-    if (state.hasTimedOut) {
-      val counts = state.get.counts
-      state.remove()
-      rank(winStart, counts, k).iterator
-    } else {
-      val m = scala.collection.mutable.Map.empty[String, Long]
-      state.getOption.foreach(s => m ++= s.counts)
-      events.foreach(e => m.update(e.event_type, m.getOrElse(e.event_type, 0L) + 1L))
-      state.update(TopKState(m.toMap))
-      // close at window end (event time); clamp just above the current
-      // watermark — Spark rejects timeouts at-or-behind it
-      val closeMs = (winStart + windowUs) / 1000L
-      state.setTimeoutTimestamp(
-        math.max(closeMs, state.getCurrentWatermarkMs() + 1L))
-      Iterator.empty
-    }
-  }
-
-  /** Streaming entry point: append-mode top-k per tumbling window. The
-    * watermark delay bounds how long a window stays open for late data.
-    */
-  def topKPerWindow(events: Dataset[TypedEvent], windowMinutes: Int, k: Int,
-                    watermarkMinutes: Int): Dataset[WinTopK] = {
-    implicit val stateEnc = Encoders.product[TopKState]
-    implicit val outEnc = Encoders.product[WinTopK]
-    implicit val keyEnc = Encoders.scalaLong
-    implicit val evEnc = Encoders.product[WinEvent]
-    val windowUs = windowMinutes.toLong * 60L * 1000000L
-    events
-      .withColumn("ts", timestamp_micros(col("ts_us")))
-      .withWatermark("ts", s"$watermarkMinutes minutes")
-      .withColumn("win_start_us", col("ts_us") - col("ts_us") % windowUs)
-      .select("win_start_us", "event_type", "ts").as[WinEvent]
-      .groupByKey(_.win_start_us)
-      .flatMapGroupsWithState[TopKState, WinTopK](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout)(
-        updateWindow(windowUs, k))
-  }
-
-  /** Batch form of the same semantics (every window closed): windowed
-    * count + rank ≤ k — the oracle-graded face (q122) and the equality
-    * target the streaming runtime is spec-pinned against. One shuffle for
-    * the (window, type) agg; the rank runs per window over a
-    * type-vocabulary-sized group, and rank ≤ k plans WindowGroupLimit.
+  /** Windowed count + rank ≤ k over every tumbling window — the
+    * oracle-graded face (q122). One shuffle for the (window, type) agg;
+    * the rank runs per window over a type-vocabulary-sized group, and
+    * rank ≤ k plans WindowGroupLimit.
     */
   def batchTopK(events: DataFrame, tsCol: String, typeCol: String,
                 windowMinutes: Int, k: Int): DataFrame = {

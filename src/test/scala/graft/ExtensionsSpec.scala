@@ -92,8 +92,6 @@ class ExtensionsSpec extends SparkSpec {
       SELECT graft_jaro_winkler('martha', 'marhta') AS jw,
              size(graft_hp_scores(array(1.0d, 0.0d), array(1.0d, 0.0d, 0.0d, 1.0d))) AS hps,
              size(graft_hp_bands(array(1.0d, 0.0d), array(1.0d, 0.0d, 0.0d, 1.0d), 1)) AS hpb,
-             graft_pq_encode(array(1.0d, 0.0d),
-                             array(1.0d, 0.0d, 0.0d, 1.0d), 1, 2)[0] AS pq,
              size(graft_shingles(array('a','b','c'), 2)) AS sh,
              size(graft_minhash_sig(array('a','b'), array(3L, 7L, 11L, 13L))) AS mh,
              graft_simhash_sig(array('a','b')) IS NOT NULL AS sim,
@@ -101,9 +99,8 @@ class ExtensionsSpec extends SparkSpec {
       """).collect()(0)
     assert(r.getDouble(0) > 0.9)
     assert(r.getInt(1) === 2 && r.getInt(2) === 1)
-    assert(r.getInt(3) === 0) // (1,0) is codeword 0 of the 2-code book
-    assert(r.getInt(4) === 2 && r.getInt(5) === 2) // 2 (a,b) param pairs -> 2 hashes
-    assert(r.getBoolean(6) && r.getBoolean(7))
+    assert(r.getInt(3) === 2 && r.getInt(4) === 2) // 2 (a,b) param pairs -> 2 hashes
+    assert(r.getBoolean(5) && r.getBoolean(6))
     val agg = spark.sql(
       "SELECT size(graft_freq_items(c, 4)) AS n FROM VALUES ('a'),('a'),('b') AS t(c)")
       .collect()(0)

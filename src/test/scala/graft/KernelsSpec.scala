@@ -61,7 +61,6 @@ class KernelsSpec extends SparkSpec {
              graft_jaro_winkler('same', 'same') AS jw,
              size(graft_hp_scores(array(1.0d, 0.0d), array(1.0d, 0.0d, 0.0d, 1.0d))) AS hps,
              size(graft_hp_bands(array(1.0d, 0.0d), array(1.0d, 0.0d, 0.0d, 1.0d), 1)) AS hpb,
-             graft_pq_encode(array(1.0d, 0.0d), array(1.0d, 0.0d, 0.0d, 1.0d), 1, 2)[0] AS pq,
              size(graft_minhash_sig(array('a', 'b'), array(3L, 7L, 11L, 13L))) AS mh,
              graft_simhash_sig(array('a', 'b')) IS NOT NULL AS sim,
              graft_compression_ratio('aaaaaaaaaaaaaaaaaaaaaaaa') < 1.5 AS zr
@@ -70,8 +69,8 @@ class KernelsSpec extends SparkSpec {
     assert(math.abs(r.getDouble(2) - 1.0 / 3.0) < 1e-12)
     assert(r.getSeq[String](3) === Seq("a b c", "b c d"))
     assert(r.getString(4) === "café" && r.getDouble(5) === 1.0)
-    assert(r.getInt(6) === 2 && r.getInt(7) === 1 && r.getInt(8) === 0 && r.getInt(9) === 2)
-    assert(r.getBoolean(10) && r.getBoolean(11))
+    assert(r.getInt(6) === 2 && r.getInt(7) === 1 && r.getInt(8) === 2)
+    assert(r.getBoolean(9) && r.getBoolean(10))
     assert(shadowed.sql(
       "SELECT size(graft_freq_items(c, 4)) FROM VALUES ('a'), ('a'), ('b') AS t(c)")
       .head().getInt(0) === 2)

@@ -1,75 +1,11 @@
 package graft
 
-import org.apache.spark.sql.functions._
-import graft.ops.{Multimodal, VectorSearch}
+import graft.ops.Multimodal
 
-/** The multimodal plumbing beyond decode (r6): resize geometry, video
-  * frame-sample fan-out, and the feature-extract boundary whose output
-  * feeds the ANN operators directly.
+/** The BMP codec q55 runs: a golden hand-built file, the top-down row
+  * order, and encode -> decode round-trips across every row-padding class.
   */
 class MultimodalSpec extends SparkSpec {
-
-  private def docs = Tables.documents(spark, sf0001)
-
-  test("resize stub: aspect-preserving letterbox into the target canvas") {
-    val rows = Multimodal.resizeStub(docs, "doc_id", "text", 224, 224).collect()
-    assert(rows.length === docs.count())
-    rows.foreach { r =>
-      val (ow, oh) = (r.getInt(3), r.getInt(4))
-      val (px, py) = (r.getInt(6), r.getInt(7))
-      assert(ow <= 224 && oh <= 224, r.toString)
-      // letterbox: at least one output dimension fills the canvas
-      assert(ow == 224 || oh == 224 || math.max(ow, oh) >= 223, r.toString)
-      assert(px >= 0 && py >= 0 && px + ow <= 224 && py + oh <= 224, r.toString)
-      // exact letterbox geometry: out dims are the rounded scaled src dims
-      val scale = math.min(224.0 / r.getInt(1), 224.0 / r.getInt(2))
-      assert(ow === math.max(1, math.rint(r.getInt(1) * scale).toInt), r.toString)
-      assert(oh === math.max(1, math.rint(r.getInt(2) * scale).toInt), r.toString)
-    }
-  }
-
-  test("frame sampling fans out one row per kept frame with the declared stride") {
-    val frameBytes = 64
-    val every = 4
-    val out = Multimodal.frameSampleStub(docs, "doc_id", "text", frameBytes, every)
-    val counts = out.groupBy("doc_id").agg(count(lit(1)).as("n"),
-        collect_list("frame_idx").as("idxs"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getSeq[Int](2))).toMap
-    val lens = docs.select(col("doc_id"),
-        length(to_binary(col("text"), lit("utf-8"))).as("len"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(counts.nonEmpty)
-    lens.foreach { case (id, len) =>
-      val nFrames = (len + frameBytes - 1) / frameBytes
-      val expected = (0 until nFrames).count(_ % every == 0)
-      val (n, idxs) = counts.getOrElse(id, (0L, Seq.empty[Int]))
-      assert(n === expected.toLong, s"doc $id: $n frames, expected $expected")
-      assert(idxs.forall(_ % every == 0), s"doc $id idxs $idxs")
-    }
-  }
-
-  test("feature-extract stub: unit vectors, content-determined, ANN-ready") {
-    val emb = Multimodal.embedStub(docs, "doc_id", "text")
-    val rows = emb.collect()
-    assert(rows.length === docs.count())
-    rows.foreach { r =>
-      val v = r.getSeq[Float](1)
-      assert(v.length === 64)
-      val nrm = math.sqrt(v.map(f => f.toDouble * f).sum)
-      assert(math.abs(nrm - 1.0) < 1e-3, s"norm $nrm")
-    }
-    // identical payloads embed identically (content-seeded, not id-seeded)
-    val twin = docs.limit(1).select(lit(900001L).as("doc_id"), col("text"))
-      .unionByName(docs.limit(1).select(lit(900002L).as("doc_id"), col("text")))
-    val twinSigs = Multimodal.embedStub(twin, "doc_id", "text")
-      .collect().map(_.getSeq[Float](1))
-    assert(twinSigs.length === 2)
-    assert(twinSigs(0) === twinSigs(1), "identical payloads must embed identically")
-
-    // end-to-end: the stub's output is shape-compatible with the ANN path
-    val knn = VectorSearch.cosineKnn(emb, "vec_id", "embedding", col("id") < 5, 3)
-    assert(knn.count() === 15)
-  }
 
   test("BMP decode: golden hand-built 3x2 bottom-up file with row padding") {
     // built byte-by-byte, independent of the encoder: 3px rows = 9 bytes
@@ -115,150 +51,29 @@ class MultimodalSpec extends SparkSpec {
       assert(m.xor_pixels === expXor, s"xor at ${w}x$h")
       assert(m.n_bytes === 54 + (w * 3 + (4 - w * 3 % 4) % 4) * h)
     }
-    // non-BMP payloads are rejected loudly (the stub keeps handling them)
-    intercept[IllegalArgumentException] {
-      Multimodal.decodeBmp24(0L, "not an image".getBytes)
+    // non-BMP payloads and malformed headers are rejected loudly, naming
+    // the doc id: (header offset, field value) patches of a valid 4x2 file
+    def patched(edits: (Int, Int)*): Array[Byte] = {
+      val bb = java.nio.ByteBuffer.wrap(Multimodal.encodeBmp24(4, 2, 1, 2, 3))
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      edits.foreach { case (at, v) => bb.putInt(at, v) }
+      bb.array()
     }
-  }
-
-  test("PNG decode via ImageIO: lossless, every field predicted independently") {
-    // a 9x5 deterministic gradient (45 pixels — odd, so the XOR canary is
-    // nonzero); the oracle below computes means/xor from the FORMULA, never
-    // touching the codec, and PNG's losslessness makes the match exact
-    val (w, h) = (9, 5)
-    def px(x: Int, y: Int): (Int, Int, Int) =
-      ((x * 7 + y * 13) % 256, (x * 5 + y * 3 + 40) % 256, (x * 11 + y + 200) % 256)
-    val png = Multimodal.encodeImageIO("png", w, h,
-      (x, y) => { val (r, g, b) = px(x, y); (r << 16) | (g << 8) | b })
-    assert(Multimodal.isImageIODecodable(png))
-    val m = Multimodal.decodeImageIO(42L, png)
-    assert(m.doc_id === 42L && m.n_bytes === png.length)
-    assert(m.width === w && m.height === h && m.bpp === 24)
-    val pts = for (y <- 0 until h; x <- 0 until w) yield px(x, y)
-    assert(m.mean_r === math.rint(pts.map(_._1).sum.toDouble / pts.size * 1e6) / 1e6)
-    assert(m.mean_g === math.rint(pts.map(_._2).sum.toDouble / pts.size * 1e6) / 1e6)
-    assert(m.mean_b === math.rint(pts.map(_._3).sum.toDouble / pts.size * 1e6) / 1e6)
-    val expXor = pts.map { case (r, g, b) => (r.toLong << 16) | (g << 8) | b }
-      .reduce(_ ^ _)
-    assert(m.xor_pixels === expXor)
-  }
-
-  test("JPEG decode via ImageIO: exact geometry, content faithful within lossy tolerance") {
-    val jpg = Multimodal.encodeImageIO("jpg", 16, 12, (_, _) => (120 << 16) | (60 << 8) | 200)
-    assert(Multimodal.isImageIODecodable(jpg))
-    val m = Multimodal.decodeImageIO(7L, jpg)
-    // geometry and byte counts are exact even for a lossy codec
-    assert(m.width === 16 && m.height === 12 && m.bpp === 24 && m.n_bytes === jpg.length)
-    // a solid color survives DCT quantization nearly exactly; ±3 per
-    // channel still catches a channel swap (|200-120| = 80) or row drift
-    assert(math.abs(m.mean_r - 120.0) <= 3.0, s"mean_r ${m.mean_r}")
-    assert(math.abs(m.mean_g - 60.0) <= 3.0, s"mean_g ${m.mean_g}")
-    assert(math.abs(m.mean_b - 200.0) <= 3.0, s"mean_b ${m.mean_b}")
-  }
-
-  test("decodeImage routes BMP/PNG/JPEG payloads by magic through one typed boundary") {
-    import spark.implicits._
-    val payloads = Seq(
-      (1L, Multimodal.encodeBmp24(4, 3, 10, 20, 30)),
-      (2L, Multimodal.encodeImageIO("png", 6, 2, (_, _) => (5 << 16) | (6 << 8) | 7)),
-      (3L, Multimodal.encodeImageIO("jpg", 8, 8, (_, _) => 0x808080)))
-    val out = Multimodal.decodeImage(payloads.toDF("doc_id", "payload"),
-      "doc_id", "payload")
-      .select("doc_id", "width", "height", "mean_r")
-      .as[(Long, Int, Int, Double)].collect().sortBy(_._1)
-    assert(out.map(r => (r._1, r._2, r._3)) ===
-      Array((1L, 4, 3), (2L, 6, 2), (3L, 8, 8)))
-    assert(out(0)._4 === 10.0 && out(1)._4 === 5.0)
-    assert(math.abs(out(2)._4 - 128.0) <= 3.0)
-    // junk bytes fail loudly on the image boundary (the stub path is a
-    // separate, opt-in entry point)
-    intercept[Exception] {
-      Multimodal.decodeImage(Seq((9L, "junk".getBytes)).toDF("doc_id", "payload"),
-        "doc_id", "payload").collect()
+    val bad = Seq(
+      "not an image" -> "not an image".getBytes,
+      "zero width" -> patched(18 -> 0),
+      "zero height" -> patched(22 -> 0),
+      "negative width" -> patched(18 -> -4),
+      "height Int.MinValue" -> patched(22 -> Int.MinValue), // abs stays negative
+      "width Int.MaxValue" -> patched(18 -> Int.MaxValue), // w * 3 overflows an Int
+      "stride * h past Int" -> patched(18 -> 0x20000000, 22 -> 8),
+      "data inside the headers" -> patched(10 -> 0),
+      "data past the end" -> patched(10 -> 60))
+    bad.zipWithIndex.foreach { case ((what, payload), i) =>
+      val e = withClue(s"$what: ") {
+        intercept[IllegalArgumentException](Multimodal.decodeBmp24(4242L + i, payload))
+      }
+      assert(e.getMessage.contains(s"doc ${4242L + i}"), s"$what: ${e.getMessage}")
     }
-  }
-
-  test("decodeOne: real dimensions for decodable payloads, stub fallback for the rest") {
-    val png = Multimodal.encodeImageIO("png", 31, 17, (_, _) => 0x123456)
-    val real = Multimodal.decodeOne(1L, png)
-    assert(real.width === 31 && real.height === 17)
-    assert(real.header.startsWith("89504e47")) // PNG magic in the hex slot
-    // non-image bytes keep the deterministic stub dims (length-derived)
-    val txt = "no codec for plain text".getBytes
-    val stub = Multimodal.decodeOne(2L, txt)
-    assert(stub.width === 1 + txt.length % 64 && stub.height === 1 + txt.length % 48)
-  }
-
-  test("WAV decode: round-trip, chunk walking past injected LIST chunk, odd-size padding") {
-    val samples = Array[Short](100, -200, 300, -400, 500, -32768)
-    val plain = Multimodal.encodeWavPcm16(8000, 2, samples)
-    val m = Multimodal.decodeWavPcm16(1L, plain)
-    assert(m.sample_rate === 8000 && m.channels === 2 && m.bits === 16)
-    assert(m.n_frames === 3L) // 6 samples / 2 channels
-    assert(m.duration_ms === 0.375) // 3 frames / 8000 Hz
-    assert(m.sum_abs === 100L + 200 + 300 + 400 + 500 + 32768)
-    assert(m.peak === 32768)
-    // a real-world file carries chunks between fmt and data; ODD size
-    // forces the 1-byte RIFF pad — a parser assuming data-at-36 breaks here
-    val withList = Multimodal.encodeWavPcm16(44100, 1, samples,
-      extraChunk = Some(("LIST", Array[Byte](1, 2, 3, 4, 5))))
-    val m2 = Multimodal.decodeWavPcm16(2L, withList)
-    assert(m2.sample_rate === 44100 && m2.channels === 1 && m2.n_frames === 6L)
-    assert(m2.sum_abs === m.sum_abs && m2.peak === m.peak)
-    assert(m2.n_bytes === plain.length + 8 + 5 + 1) // chunk header + body + pad
-    // non-WAV rejected loudly
-    intercept[IllegalArgumentException] {
-      Multimodal.decodeWavPcm16(0L, "RIFFxxxxJUNK".getBytes)
-    }
-  }
-
-  test("AVI frame sampling: real container walk, every-th frame decoded exactly") {
-    // 10 solid-color frames, color = f(idx); sample every 3rd → 0,3,6,9
-    val frames = (0 until 10).map(i => (i * 20 % 256, i * 7 % 256, i * 13 % 256))
-    val avi = Multimodal.encodeAviRawFrames(5, 3, 25, frames) // w=5 → pad=1
-    val sampled = Multimodal.decodeAviFrames(3L, avi, every = 3)
-    assert(sampled.map(_.frame_idx) === Seq(0, 3, 6, 9))
-    sampled.foreach { f =>
-      val (r, g, b) = frames(f.frame_idx)
-      assert((f.width, f.height) === (5, 3), f.toString)
-      assert((f.mean_r, f.mean_g, f.mean_b) === (r.toDouble, g.toDouble, b.toDouble), f.toString)
-      // 15 px (odd count): xor of identical packed pixels = the pixel
-      assert(f.xor_pixels === ((r.toLong << 16) | (g << 8) | b), f.toString)
-    }
-    // every=1 keeps all frames; non-AVI rejected loudly
-    assert(Multimodal.decodeAviFrames(3L, avi, every = 1).size === 10)
-    intercept[IllegalArgumentException] {
-      Multimodal.decodeAviFrames(0L, Multimodal.encodeWavPcm16(8000, 1, Array[Short](1, 2)), 1)
-    }
-  }
-
-  test("AVI frame sampling flows through the fan-out mapPartitions boundary") {
-    import spark.implicits._
-    val vids = (0L until 6L).map { id =>
-      val nFrames = (id % 3).toInt * 2 + 2 // 2, 4, or 6 frames
-      (id, Multimodal.encodeAviRawFrames(4, 2, 25,
-        (0 until nFrames).map(i => ((id * 11 + i) % 256).toInt).map(c => (c, c, c))))
-    }.toDF("doc_id", "payload")
-    val out = Multimodal.frameSampleAvi(vids, "doc_id", "payload", every = 2)
-    // per video: ceil(nFrames/2) sampled rows
-    val counts = out.groupBy("doc_id").count().collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(counts === Map(0L -> 1L, 1L -> 2L, 2L -> 3L, 3L -> 1L, 4L -> 2L, 5L -> 3L))
-  }
-
-  test("WAV decode flows through the binary-column mapPartitions boundary") {
-    import spark.implicits._
-    val audio = (0L until 20L).map { id =>
-      val hz = 8000 + (id % 3).toInt * 100
-      val samples = Array.tabulate[Short](((id % 5) + 1).toInt * 2)(i =>
-        ((id * 31 + i * 7) % 1000).toShort)
-      (id, Multimodal.encodeWavPcm16(hz, 2, samples))
-    }.toDF("doc_id", "payload")
-    val out = Multimodal.decodeWav(audio, "doc_id", "payload")
-    assert(out.count() === 20)
-    val r = out.filter(col("doc_id") === 7).head()
-    // id=7: 8100 Hz, (7%5+1)*2=6 samples / 2ch = 3 frames
-    assert(r.getAs[Int]("sample_rate") === 8100)
-    assert(r.getAs[Long]("n_frames") === 3L)
   }
 }

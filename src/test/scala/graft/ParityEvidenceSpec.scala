@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `parity_report.json` with a SHA-256 over every `src/main` .scala file;
   * this spec recomputes that fingerprint and fails on ANY drift — so an
   * edit to query code (or any main-source code that could change an
-  * output) makes the suite red until the parity surface is re-run:
+  * output) makes the suite red until the parity surface is re-run on the
+  * graded sf0.01 data (a report stamped on another scale fails too):
   *
   *   SPARK_GRAFT_CPUS=8 sbt --batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/vout"
   *   python3 tools/parity.py /root/testdata/sf0.01 /tmp/vout
@@ -67,6 +68,12 @@ class ParityEvidenceSpec extends AnyFunSuite {
     assert(recorded === current,
       "src/main/scala changed since parity_report.json was stamped — " +
         "re-run Verify + tools/parity.py before shipping (buzzer-commit guard)")
+  }
+
+  test("parity evidence was taken on the graded sf0.01 data") {
+    val sf = reportField("sf")
+    assert(Paths.get(sf).getFileName.toString === "sf0.01",
+      s"parity_report.json was stamped on $sf — re-run the parity surface at sf0.01")
   }
 
   test("every Inventory query has parity evidence, and none of it is red") {

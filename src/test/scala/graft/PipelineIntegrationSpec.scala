@@ -9,7 +9,7 @@ import graft.ops._
   *
   *   ingest → quality gate → exact dedup → near-dup dedup (MinHash
   *   candidates, exact Jaccard verify) → language/token stats →
-  *   embed → embedding-level near-dup guard
+  *   token-budget curation
   *
   * Assertions pin stage-to-stage row accounting (every stage can only
   * shrink the corpus, and by measured amounts on this fixed corpus), so a
@@ -67,16 +67,7 @@ class PipelineIntegrationSpec extends SparkSpec {
     assert(stats.map(_.getLong(1)).sum === n3)
     stats.foreach(r => assert(r.getLong(2) > r.getLong(1), "tokens >= docs per lang"))
 
-    // 5. embed the survivors (content-seeded stub standing in for model
-    //    inference) and run the embedding-level near-dup guard — after
-    //    text-level dedup, no two survivors should embed identically
-    val emb = Multimodal.embedStub(survivors, "doc_id", "text")
-    assert(emb.count() === n3)
-    val embPairs = VectorSearch.cosinePairs(emb, "vec_id", "embedding", 0.999999)
-    assert(embPairs.count() === 0,
-      "text-deduped corpus must contain no identical embeddings")
-
-    // 6. token-budget curation (late r8, ops.Curation): best-quality-first
+    // 5. token-budget curation (late r8, ops.Curation): best-quality-first
     //    per language until half that language's tokens are spent — the
     //    selection stage between scoring and mixture execution
     val forSelect = survivors.select(col("lang").as("k"),
@@ -96,16 +87,5 @@ class PipelineIntegrationSpec extends SparkSpec {
     assert(selected.join(survivors,
       selected("id") === survivors("doc_id"), "left_anti").count() === 0,
       "curation must select only surviving documents")
-
-    // 7. PQ index over the survivor embeddings (late r8): encode every
-    //    vector to m codes and ADC-rank one probe — the compressed-index
-    //    endpoint of the pipeline
-    val pq = ProductQuant.train(emb, "vec_id", "embedding", m = 8, k = 16, iters = 1)
-    val enc = ProductQuant.encode(emb, "vec_id", "embedding", pq)
-    assert(enc.count() === n3, "every survivor must encode")
-    val probe = emb.orderBy("vec_id").limit(1)
-      .select(col("embedding").cast("array<double>")).head.getSeq[Double](0)
-    val hits = ProductQuant.adcTopK(enc, probe, pq, 5).collect()
-    assert(hits.length === 5 && hits.forall(_.getDouble(1) >= 0.0))
   }
 }

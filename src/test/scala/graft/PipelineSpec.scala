@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Multimodal, SimHash}
+import graft.ops.SimHash
 
 class PipelineSpec extends SparkSpec {
 
@@ -77,21 +77,6 @@ class PipelineSpec extends SparkSpec {
     assert(r4 >= 0.12, f"4-band recall cratered: $r4%.3f")   // measured 0.160
     assert(r8 >= 0.70, f"8-band recall cratered: $r8%.3f")   // measured 0.849
     assert(r8 >= r4, f"narrower bands must not lose recall: $r8%.3f < $r4%.3f")
-  }
-
-  test("multimodal decode stub: mapPartitions path equals the pure-expression path") {
-    val viaPartitions = Multimodal.decodeStub(Tables.documents(spark, sf0001), "doc_id", "text")
-      .orderBy("doc_id").collect().map(_.toString)
-    val viaExprs = Tables.documents(spark, sf0001).select(
-      col("doc_id"),
-      length(col("text")).as("n_bytes"),
-      lower(hex(substring(col("text"), 1, 8))).as("header"),
-      (lit(1) + length(col("text")) % 64).as("width"),
-      (lit(1) + length(col("text")) % 48).as("height"),
-      round((lit(1) + length(col("text")) % 64).cast("double")
-        / (lit(1) + length(col("text")) % 48), 6).as("aspect"))
-      .orderBy("doc_id").collect().map(_.toString)
-    assert(viaPartitions.toSeq === viaExprs.toSeq)
   }
 
   test("approx_count_distinct stays within 5% of exact per group") {

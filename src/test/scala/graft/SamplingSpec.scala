@@ -1,38 +1,8 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.ops.Sampling
 
 class SamplingSpec extends SparkSpec {
-
-  test("uniform hash sample: deterministic, near target fraction, partitioning-invariant") {
-    val li = Tables.lineitem(spark, sf001)
-    val n = li.count().toDouble
-    val sampled = Sampling.uniformByHash(li, Seq("l_orderkey", "l_linenumber"), 0.2)
-    val ids = sampled.select("l_orderkey", "l_linenumber").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toSet
-    // binomial 3σ bound at n=60k, p=0.2: ±~0.5pp. NOTE counted on ROWS:
-    // (l_orderkey, l_linenumber) is not unique in lineitem, so the id SET
-    // undercounts (duplicate rows hash identically and are kept together —
-    // itself a property of content-hash sampling)
-    val frac = sampled.count() / n
-    assert(math.abs(frac - 0.2) < 0.01, s"realized fraction $frac")
-    // same salt → same set; different salt → a genuinely different draw
-    val again = Sampling.uniformByHash(li, Seq("l_orderkey", "l_linenumber"), 0.2)
-      .select("l_orderkey", "l_linenumber").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(again === ids)
-    val other = Sampling.uniformByHash(li, Seq("l_orderkey", "l_linenumber"), 0.2, salt = 7L)
-      .select("l_orderkey", "l_linenumber").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(other !== ids)
-    // partitioning-invariant: repartitioned input selects the SAME rows —
-    // the property rand(seed)-based sample() does NOT have
-    val reparted = Sampling.uniformByHash(li.repartition(13), Seq("l_orderkey", "l_linenumber"), 0.2)
-      .select("l_orderkey", "l_linenumber").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(reparted === ids)
-  }
 
   test("stratified hash sample: per-stratum fractions realized, default drops") {
     val docs = Tables.documents(spark, sf001)
@@ -52,71 +22,6 @@ class SamplingSpec extends SparkSpec {
     assert(math.abs(f - 0.5) < 0.2, s"stratum fraction $f")
     // pure filter: no exchange in the plan
     assert(!sampled.queryExecution.executedPlan.toString.contains("Exchange"))
-  }
-
-  test("rate-table form selects the EXACT same rows as the literal-map form") {
-    import graft.ops.Sampling
-    import spark.implicits._
-    val docs = Tables.documents(spark, sf001)
-    val fracs = Map("en" -> 0.5, "de" -> 1.0, "zh" -> 0.25)
-    val viaMap = Sampling.stratifiedByHash(docs, "lang", fracs,
-      defaultFraction = 0.1, idCols = Seq("doc_id"), salt = 7L)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val rates = fracs.toSeq.toDF("lang", "rate")
-    val viaTable = Sampling.stratifiedByRateTable(docs, "lang",
-      rates, "lang", "rate", idCols = Seq("doc_id"),
-      defaultFraction = 0.1, salt = 7L)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(viaTable === viaMap)
-    // the rate table rides a broadcast join — never a shuffle of the corpus
-    val plan = Sampling.stratifiedByRateTable(docs, "lang", rates, "lang",
-      "rate", Seq("doc_id")).queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), plan.take(1500))
-    assert(!"Exchange hashpartitioning".r.findFirstIn(plan).isDefined, plan.take(1500))
-    // and q127's OUTPUT feeds it directly: downsample rates applied to the
-    // corpus produce per-lang counts within 3 sigma of n_keep
-    val q127 = SparkEntry.queries("q127_mixture_rebalance")(spark, sf001)
-    val sampled = Sampling.stratifiedByRateTable(docs, "lang",
-      q127, "lang", "rate", idCols = Seq("doc_id"))
-      .groupBy("lang").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    q127.collect().foreach { r =>
-      val (lang, nDocs, rate, nKeep) =
-        (r.getString(0), r.getLong(1), r.getDouble(4), r.getLong(5))
-      val tol = 3.0 * math.sqrt(rate * (1 - rate) * nDocs) + 1e-9
-      val got = sampled.getOrElse(lang, 0L).toDouble
-      assert(math.abs(got - nKeep) <= tol + 1,
-        s"$lang: sampled $got vs planned $nKeep (tol $tol)")
-    }
-  }
-
-  test("rate-table form rejects duplicate strata and out-of-range rates loudly") {
-    import graft.ops.Sampling
-    import spark.implicits._
-    val docs = Tables.documents(spark, sf0001)
-    // duplicate stratum: the join would FAN OUT — every kept row twice
-    val dup = Seq(("en", 0.5), ("en", 0.7), ("de", 1.0)).toDF("lang", "rate")
-    val e1 = intercept[IllegalArgumentException] {
-      Sampling.stratifiedByRateTable(docs, "lang", dup, "lang", "rate", Seq("doc_id"))
-    }
-    assert(e1.getMessage.contains("duplicate strata"))
-    // out-of-range rate: would silently flood the stratum
-    val bad = Seq(("en", 1.5)).toDF("lang", "rate")
-    val e2 = intercept[IllegalArgumentException] {
-      Sampling.stratifiedByRateTable(docs, "lang", bad, "lang", "rate", Seq("doc_id"))
-    }
-    assert(e2.getMessage.contains("[0,1]"))
-    // a null stratum is its own precise error, not a bogus duplicate report
-    val withNull = Seq((Option.empty[String], 0.3), (Some("en"), 0.5))
-      .toDF("lang", "rate")
-    val e3 = intercept[IllegalArgumentException] {
-      Sampling.stratifiedByRateTable(docs, "lang", withNull, "lang", "rate", Seq("doc_id"))
-    }
-    assert(e3.getMessage.contains("null-stratum"), e3.getMessage)
-    // an EMPTY rate table is legal: everything falls to defaultFraction
-    val none = Seq.empty[(String, Double)].toDF("lang", "rate")
-    assert(Sampling.stratifiedByRateTable(docs, "lang", none, "lang", "rate",
-      Seq("doc_id"), defaultFraction = 1.0).count() === docs.count())
   }
 
   test("q72: stratified sample counts are deterministic and track declared fractions") {

@@ -153,131 +153,6 @@ class StatefulStreamingSpec extends SparkSpec {
       s"missing=${(expected -- streamed).take(3)} extra=${(streamed -- expected).take(3)}")
   }
 
-  test("sessionCountsEvicting drops idle-user state; re-appearance starts a fresh session") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
-
-    def us(t: String) = java.sql.Timestamp.valueOf(t).getTime * 1000L
-    // session gap 120 min, idle-evict horizon 10 min: user 1's re-appearance
-    // at 11:06 is WITHIN the session gap of their 10:00 event, so retained
-    // state would fold it into the same session (n_events=2) while evicted
-    // state starts fresh (n_events=1) — the output discriminates eviction.
-    val stream = MemoryStream[UserEvent]
-    val q = Sessionize.sessionCountsEvicting(stream.toDS(), 120, 10).writeStream
-      .format("memory").queryName("sess_evict").outputMode("update").start()
-    try {
-      // b1: user 1 active at 10:00 → watermark 09:50, timeout armed 10:10
-      stream.addData(UserEvent(1L, us("2024-01-01 10:00:00"), 1L))
-      q.processAllAvailable()
-      // b2: unrelated user advances the watermark to 10:50 (> 10:10)
-      stream.addData(UserEvent(2L, us("2024-01-01 11:00:00"), 99L))
-      q.processAllAvailable()
-      // b3: another unrelated event — user 1 has no data this batch, so the
-      // timeout fires and their state is removed
-      stream.addData(UserEvent(3L, us("2024-01-01 11:05:00"), 99L))
-      q.processAllAvailable()
-      // b4: user 1 re-appears 66 min after their last event (< 120-min gap)
-      stream.addData(UserEvent(4L, us("2024-01-01 11:06:00"), 1L))
-      q.processAllAvailable()
-    } finally q.stop()
-
-    val user1 = s.table("sess_evict").filter(col("user_id") === 1L)
-      .collect().map(r => (r.getLong(1), r.getLong(2)))
-    // update-mode emissions for user 1: (1,1) from b1, then (1,1) again
-    // from b4 — never (1,2), which is what surviving state would emit
-    assert(user1.nonEmpty && user1.forall(_ == (1L, 1L)),
-      s"expected fresh (1 session, 1 event) after eviction, got ${user1.toSeq}")
-
-    // contrast: the non-evicting operator on the same four events keeps
-    // user 1's state, so the final fold yields n_events = 2
-    val stream2 = MemoryStream[UserEvent]
-    val q2 = Sessionize.sessionCounts(stream2.toDS(), 120).writeStream
-      .format("memory").queryName("sess_noevict").outputMode("update").start()
-    try {
-      stream2.addData(UserEvent(1L, us("2024-01-01 10:00:00"), 1L))
-      q2.processAllAvailable()
-      stream2.addData(UserEvent(2L, us("2024-01-01 11:00:00"), 99L))
-      q2.processAllAvailable()
-      stream2.addData(UserEvent(3L, us("2024-01-01 11:05:00"), 99L))
-      q2.processAllAvailable()
-      stream2.addData(UserEvent(4L, us("2024-01-01 11:06:00"), 1L))
-      q2.processAllAvailable()
-    } finally q2.stop()
-    val kept = s.table("sess_noevict").filter(col("user_id") === 1L)
-      .collect().map(r => (r.getLong(1), r.getLong(2)))
-    assert(kept.contains((1L, 2L)),
-      s"non-evicting control should fold both events into one session, got ${kept.toSeq}")
-  }
-
-  test("window top-k stays silent while open, emits exactly once at watermark close") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import graft.streaming.WindowTopK
-    import graft.streaming.WindowTopK.TypedEvent
-
-    def us(t: String) = java.sql.Timestamp.valueOf(t).getTime * 1000L
-    val hourUs = 3600L * 1000000L
-    def winOf(tsUs: Long) = tsUs - tsUs % hourUs
-
-    // W1 (10:00): a=3, b=2, c=1, d=1 -> top3 = a(3), b(2), c(1) (tie c/d
-    // broken type-ASC); W2 (12:00): z=1
-    val w1 = Seq(
-      TypedEvent(1L, us("2024-01-01 10:05:00"), "a"),
-      TypedEvent(2L, us("2024-01-01 10:10:00"), "a"),
-      TypedEvent(3L, us("2024-01-01 10:15:00"), "b"),
-      TypedEvent(4L, us("2024-01-01 10:20:00"), "a"),
-      TypedEvent(5L, us("2024-01-01 10:25:00"), "b"),
-      TypedEvent(6L, us("2024-01-01 10:30:00"), "c"),
-      TypedEvent(7L, us("2024-01-01 10:31:00"), "d"))
-    val stream = MemoryStream[TypedEvent]
-    val q = WindowTopK.topKPerWindow(stream.toDS(), 60, 3, 10).writeStream
-      .format("memory").queryName("win_topk").outputMode("append").start()
-    try {
-      stream.addData(w1)
-      q.processAllAvailable()
-      // W1 is still open (watermark 10:21 < 11:00): NOTHING may emit yet
-      assert(s.table("win_topk").count() === 0L,
-        "open window must stay silent until the watermark closes it")
-      // advance the watermark past 11:00 via a W2 event, then past 13:00 —
-      // each data batch lets pending timeouts fire
-      stream.addData(TypedEvent(8L, us("2024-01-01 12:00:00"), "z"))
-      q.processAllAvailable()
-      stream.addData(TypedEvent(9L, us("2024-01-01 14:00:00"), "y"))
-      q.processAllAvailable()
-      stream.addData(TypedEvent(10L, us("2024-01-01 16:00:00"), "x"))
-      q.processAllAvailable()
-    } finally q.stop()
-
-    val out = s.table("win_topk")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getLong(3)))
-    val w1Start = winOf(us("2024-01-01 10:05:00"))
-    val w2Start = winOf(us("2024-01-01 12:00:00"))
-    val w3Start = winOf(us("2024-01-01 14:00:00"))
-    // after the 16:00 batch the watermark (15:50) has closed W1, W2 AND
-    // the 14:00 window — Spark runs a follow-up batch whenever the
-    // watermark advances, so pending timeouts fire promptly; only the
-    // 16:00 window is still open
-    val expected = Seq(
-      (w1Start, 1, "a", 3L), (w1Start, 2, "b", 2L), (w1Start, 3, "c", 1L),
-      (w2Start, 1, "z", 1L), (w3Start, 1, "y", 1L))
-    // emit-once: exact multiset equality over the closed windows
-    assert(out.sorted.toSeq === expected.sorted,
-      s"got ${out.sorted.toSeq}")
-
-    // and the ranking agrees with the batch form on the same closed data
-    val batch = WindowTopK.batchTopK(
-      (w1 ++ Seq(TypedEvent(8L, us("2024-01-01 12:00:00"), "z"),
-        TypedEvent(9L, us("2024-01-01 14:00:00"), "y")))
-        .toDF("event_id", "ts_us", "event_type")
-        .withColumn("ts", timestamp_micros(col("ts_us"))),
-      "ts", "event_type", 60, 3)
-      .collect().map(r => (r.getInt(1), r.getString(2), r.getLong(3)))
-    assert(batch.toSeq === expected.map { case (_, r, t, n) => (r, t, n) },
-      s"batch fold disagrees: ${batch.toSeq}")
-  }
-
   test("dropDuplicatesWithinWatermark drops a replayed event inside the horizon") {
     val s = spark
     import s.implicits._

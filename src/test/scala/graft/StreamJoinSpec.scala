@@ -76,53 +76,6 @@ class StreamJoinSpec extends SparkSpec {
       (1L, Some("BUILDING")), (2L, None), (3L, Some("MACHINERY"))))
   }
 
-  test("left-outer: unmatched views emit null ONLY after the watermark closes their window") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
-
-    val views = MemoryStream[(Long, Long, java.sql.Timestamp)]
-    val purchases = MemoryStream[(Long, Long, java.sql.Timestamp)]
-    def shape(df: org.apache.spark.sql.DataFrame) =
-      df.toDF("event_id", "user_id", "ts")
-    val q = StreamJoin.attributionJoinLeftOuter(
-        shape(views.toDF()), shape(purchases.toDF()), 1)
-      .writeStream.format("memory").queryName("sj_louter")
-      .outputMode("append").start()
-    def rows() = s.table("sj_louter").collect()
-      .map(r => (r.getLong(0),
-        if (r.isNullAt(1)) None else Some(r.getLong(1)))).toSet
-    try {
-      // b1: view 1 (user 5, will never match) and view 2 (user 6) +
-      // view 2's in-horizon purchase. The matched pair may emit; view 1
-      // must NOT — a purchase could still arrive inside its 1 h window
-      views.addData((1L, 5L, ts("2024-01-01 10:00:00")),
-        (2L, 6L, ts("2024-01-01 10:00:00")))
-      purchases.addData((101L, 6L, ts("2024-01-01 10:30:00")))
-      q.processAllAvailable()
-      val afterB1 = rows()
-      assert(!afterB1.exists(_._1 == 1L),
-        s"null row emitted while the window was still open: $afterB1")
-      // b2: far-future events on BOTH sides push both watermarks past
-      // view 1's window close (10:00 + 1 h horizon + 1 h delay) — now the
-      // runtime can prove no match exists and must emit (1, null)
-      views.addData((3L, 7L, ts("2024-01-02 10:00:00")))
-      purchases.addData((102L, 7L, ts("2024-01-02 10:00:00")))
-      q.processAllAvailable()
-      // a second empty-ish trigger lets the outer-null scan run if the
-      // store only evicts on the following batch
-      views.addData((4L, 7L, ts("2024-01-02 12:00:00")))
-      purchases.addData((103L, 7L, ts("2024-01-02 12:00:00")))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = rows()
-    assert(got.contains((1L, None)),
-      s"unmatched view must emit with null purchase after close: $got")
-    assert(got.contains((2L, Some(101L))), s"matched pair missing: $got")
-    assert(!got.contains((1L, Some(101L))) && !got.exists(t => t._1 == 2L && t._2.isEmpty),
-      s"no cross-contamination: $got")
-  }
-
   test("a view arriving behind the watermark is dropped, not joined") {
     val s = spark
     import s.implicits._
